@@ -29,13 +29,4 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Apply the standard configs to an externally created session
-    * (Verify/Bench own their builder per the driver contract). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark
-  }
 }

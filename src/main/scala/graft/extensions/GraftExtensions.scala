@@ -1,16 +1,35 @@
 package graft.extensions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import scala.language.implicitConversions
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.{CosineSimilarity, JaccardSimilarity, JaccardSimilaritySorted, NfcClean}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{col, lit, split}
+import org.apache.spark.sql.types.IntegerType
+import graft.expressions.{BloomMightContain, CosineSimilarity, JaccardSimilarity, JaccardSimilaritySorted, NfcClean, NoInline}
+import graft.functions.TextFunctions
+import graft.operators.{Association, ChatOps, DatasetOps, Dedup, Graph, Multimodal, Robots, ScaleOps, Search, Similarity, Sketches, Stats}
+import graft.sources.Warc
+import Arg._
+import Door.{chain, fn, refuse, tvf}
 
-/** Engine extension point (the `SparkSessionExtensions` surface):
-  * registers graft's native expressions into the session's function
-  * registry, making them first-class in BOTH the SQL dialect
-  * (`SELECT cosine_sim(a, b)`) and the DataFrame API
-  * (`call_function("cosine_sim", a, b)`), with full Catalyst
-  * optimization and whole-stage codegen.
+/** Engine extension point (the `SparkSessionExtensions` surface).
+  *
+  * Registers graft's SQL doors into the session's function registries,
+  * making them first-class in BOTH the SQL dialect
+  * (`SELECT cosine_sim(a, b)`, `SELECT * FROM page_rank(...)`) and the
+  * DataFrame API (`call_function("cosine_sim", a, b)`), with full
+  * Catalyst optimization and whole-stage codegen.
+  *
+  * Every door is one entry in [[GraftExtensions.scalarDoors]] or
+  * [[GraftExtensions.tableDoors]]: its name, its typed arguments and a
+  * builder ([[Door]]). The arity check and the usage line — shown both
+  * in the arity refusal and in the function's `ExpressionInfo` — come
+  * from that entry, as do literal parsing and the "table lacks column"
+  * check. Table doors return the operator composition's analyzed plan:
+  * a whole DataFrame-level operator exposed as a table function.
   *
   * Activate with `.config("spark.sql.extensions",
   * "graft.extensions.GraftExtensions")` on the session builder —
@@ -23,304 +42,54 @@ object GraftExtensions {
     * 10k rows ≈ 5·10⁷ candidate pairs, the upper edge of what an
     * oracle-tier run should ever touch. */
   val QuadraticTvfRowCeiling: Int = 10000
-}
 
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  private implicit def analyzed(df: DataFrame): LogicalPlan =
+    df.queryExecution.analyzed
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "cosine_sim expects exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("no_inline"),
-      new ExpressionInfo(classOf[graft.expressions.NoInline].getName, "no_inline"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "no_inline expects exactly 1 argument")
-        graft.expressions.NoInline(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[graft.expressions.BloomMightContain].getName,
-        "bloom_might_contain"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "bloom_might_contain expects exactly 2 arguments")
-        graft.expressions.BloomMightContain(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaccard_sim"),
-      new ExpressionInfo(classOf[JaccardSimilarity].getName, "jaccard_sim"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "jaccard_sim expects exactly 2 arguments")
-        JaccardSimilarity(children.head, children(1))
-      }))
-    // text-cleaner doors: the SQL persona's route to the repair tier.
-    // Both expand AT RESOLUTION into the same expression chains the
-    // Column API builds (no new eval code, no UDF — the trees are
-    // built from stock codegen'd StringReplace/RegExpReplace nodes),
-    // so `SELECT fix_mojibake(text)` and
-    // `TextFunctions.fixMojibake(col)` are one implementation.
-    ext.injectFunction((
-      new FunctionIdentifier("fix_mojibake"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.StringReplace].getName,
-        "fix_mojibake"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "fix_mojibake expects exactly 1 argument")
-        graft.functions.TextFunctions.mojibakePairs.foldLeft(children.head) {
-          case (e, (m, t)) =>
-            org.apache.spark.sql.catalyst.expressions.StringReplace(e,
-              org.apache.spark.sql.catalyst.expressions.Literal(m),
-              org.apache.spark.sql.catalyst.expressions.Literal(t))
-        }
-      }))
-    // URL canonicalization from SQL — TextFunctions.urlNormalize's
-    // chain expanded at resolution into the same stock RegExp/Lower/
-    // Concat nodes the Column API builds (the fix_mojibake pattern:
-    // one implementation, two doors).
-    ext.injectFunction((
-      new FunctionIdentifier("url_normalize"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace].getName,
-        "url_normalize"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "url_normalize expects exactly 1 argument")
-        import org.apache.spark.sql.catalyst.expressions.{Concat, Literal,
-          Lower, RegExpExtract, RegExpReplace}
-        def rr(e: Expression, p: String, r: String): Expression =
-          RegExpReplace(e, Literal(p), Literal(r))
-        val noFrag = rr(children.head, "#.*$", "")
-        val auth = Lower(RegExpExtract(noFrag,
-          Literal("^([A-Za-z]+://[^/]*)"), Literal(1)))
-        val rest = rr(noFrag, "^[A-Za-z]+://[^/]*", "")
-        val noWww = rr(rr(rr(auth,
-          "^(http://[^/:]*):80$", "$1"),
-          "^(https://[^/:]*):443$", "$1"),
-          "^(https?://)www\\.", "$1")
-        // trailing-slash trim only when no query string is present
-        // ([^?] spans the whole rest or nothing) — '?next=/' is data
-        Concat(Seq(noWww, rr(rest, "^([^?]*?)/+$", "$1")))
-      }))
-    // Anchor (href, text) extraction from SQL — the WAT-signal door:
-    //   extract_anchors(html, page_url) → array<struct<url, text>>
-    //   extract_links(html, page_url)   → array<string>
-    // Both expand at resolution into the IDENTICAL Column chains the
-    // Scala surface builds (GraftPlanBridge.columnOf/exprOf — the
-    // chains carry zip_with/filter lambdas, which have no practical
-    // hand-built raw-tree form), so resolution drift between the two
-    // doors is impossible by construction.
-    ext.injectFunction((
-      new FunctionIdentifier("extract_anchors"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "extract_anchors"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "extract_anchors expects (html, page_url)")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.extractAnchors(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(0)),
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(1))))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("extract_links"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "extract_links"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "extract_links expects (html, page_url)")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.extractLinks(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(0)),
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(1))))
-      }))
-    // rel=canonical from SQL (the content-identity key beside the
-    // SURT spelling key):
-    //   extract_canonical(html, page_url) → string (NULL when absent)
-    //   canonical_key(html, page_url)     → the dedup key
-    ext.injectFunction((
-      new FunctionIdentifier("extract_canonical"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "extract_canonical"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "extract_canonical expects (html, page_url)")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.extractCanonical(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(0)),
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(1))))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("canonical_key"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "canonical_key"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "canonical_key expects (html, page_url)")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.canonicalKey(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(0)),
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children(1))))
-      }))
-    // Sitemap record types from SQL — q301's extractors through the
-    // bridge (same one-implementation contract as extract_anchors):
-    //   sitemap_index_locs(xml) → array<string>  (child SITEMAPS)
-    //   sitemap_url_locs(xml)   → array<string>  (page URLs)
-    ext.injectFunction((
-      new FunctionIdentifier("sitemap_index_locs"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "sitemap_index_locs"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "sitemap_index_locs expects exactly 1 argument")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.sitemapIndexLocs(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children.head)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sitemap_url_locs"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "sitemap_url_locs"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "sitemap_url_locs expects exactly 1 argument")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.sitemapUrlLocs(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children.head)))
-      }))
-    //   sitemap_url_entries(xml) → array<struct<loc, lastmod,
-    //     changefreq>> — the metadata-carrying twin (recrawl hints)
-    ext.injectFunction((
-      new FunctionIdentifier("sitemap_url_entries"),
-      new ExpressionInfo("graft.functions.TextFunctions",
-        "sitemap_url_entries"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "sitemap_url_entries expects exactly 1 argument")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.sitemapUrlEntries(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children.head)))
-      }))
-    // Main-content extraction from SQL — the boilerplate-removal tier
-    // through the bridge (one implementation, two doors):
-    //   html_blocks(html)  → array<struct<text, n_chars, n_words,
-    //                          link_ppm, stop_ppm, good>>
-    //   main_content(html) → string (good blocks joined with \n)
-    ext.injectFunction((
-      new FunctionIdentifier("html_blocks"),
-      new ExpressionInfo("graft.functions.TextFunctions", "html_blocks"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "html_blocks expects exactly 1 argument")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.htmlBlocks(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children.head)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("main_content"),
-      new ExpressionInfo("graft.functions.TextFunctions", "main_content"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "main_content expects exactly 1 argument")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.mainContent(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children.head)))
-      }))
-    // SURT urlkey from SQL — TextFunctions.surtKey expanded at
-    // resolution through the bridge (ADVICE r11: the first cut
-    // hand-rebuilt the chain node by node, duplicating the exact
-    // implementation the bridge exists to share — surtKey is
-    // lambda-free, so the bridge works and the two doors cannot
-    // drift). Feed it an url_normalize'd URL, per the Column twin's
-    // input contract.
-    ext.injectFunction((
-      new FunctionIdentifier("surt_key"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.ArrayJoin].getName,
-        "surt_key"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "surt_key expects exactly 1 argument")
-        org.apache.spark.sql.GraftPlanBridge.exprOf(
-          graft.functions.TextFunctions.surtKey(
-            org.apache.spark.sql.GraftPlanBridge.columnOf(children.head)))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("redact_pii"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.RegExpReplace].getName,
-        "redact_pii"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "redact_pii expects exactly 1 argument")
-        graft.functions.TextFunctions.piiPatterns.foldLeft(children.head) {
-          case (e, (_, pat, repl)) =>
-            org.apache.spark.sql.catalyst.expressions.RegExpReplace(e,
-              org.apache.spark.sql.catalyst.expressions.Literal(pat),
-              org.apache.spark.sql.catalyst.expressions.Literal(repl))
-        }
-      }))
-    // HTML meta-charset sniff from SQL (q276's in-document fallback
-    // leg — effective charset is coalesce(header, html_charset(body),
-    // 'utf-8')): html_charset(html) — NULL when no meta declaration.
-    ext.injectFunction((
-      new FunctionIdentifier("html_charset"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.RegExpExtract].getName,
-        "html_charset"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "html_charset expects exactly 1 argument")
-        import org.apache.spark.sql.catalyst.expressions.{GreaterThan,
-          If, Length, Literal, Lower, RegExpExtract}
-        val cs = Lower(RegExpExtract(children.head,
-          Literal("(?is)<meta[^>]*charset\\s*=\\s*[\"']?" +
-            "([A-Za-z0-9_.:-]+)"),
-          Literal(1)))
-        If(GreaterThan(Length(cs), Literal(0)), cs,
-          Literal(null, org.apache.spark.sql.types.StringType))
-      }))
-    // whole-operator tier: the top-k-per-group plan node (ladder (c) —
-    // logical node + strategy + physical heaps; see graft.plans) …
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    // … and the optimizer rule that gives the SQL/window idiom
-    // (`filter(row_number() over (...) <= k)`) the same bounded-heap
-    // plan automatically (VERDICT r4 item 2)
-    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
-    // … and a table-valued SQL surface for the operator (VERDICT r4
-    // item 8 — the Athena-layer user reaches the heap plan without
-    // Scala):  SELECT * FROM topk_per_group('orders', 'o_custkey',
-    //                       'o_totalprice DESC, o_orderkey', 3)
-    // Args must be literals (table name, comma-separated group cols,
-    // comma-separated order items with optional ASC/DESC, k, and an
-    // optional 5th arg naming a rank output column — the row_number
-    // equivalent, emitted by the heap's final phase). The builder
-    // emits the UNRESOLVED logical node — the analyzer resolves the
-    // relation and the attribute references exactly as it does for
-    // any FROM-clause table.
-    ext.injectTableFunction((
-      new FunctionIdentifier("topk_per_group"),
-      new ExpressionInfo(classOf[graft.plans.TopKPerGroup].getName,
-        "topk_per_group"),
-      (children: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-        import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, Literal, SortOrder}
-        import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-        require(children.size == 4 || children.size == 5,
-          "usage: topk_per_group(table, group_cols, order_spec, k[, rank_col])")
-        def str(e: Expression, what: String): String = e match {
-          case Literal(s, StringType) if s != null => s.toString
-          case other => throw new IllegalArgumentException(
-            s"topk_per_group: $what must be a string literal, got $other")
-        }
-        val table = str(children(0), "table").split('.').toSeq
-        val groups = str(children(1), "group_cols")
-          .split(',').map(_.trim).filter(_.nonEmpty)
-          .map(n => UnresolvedAttribute.quotedString(n): Expression)
-        val order = str(children(2), "order_spec")
-          .split(',').map(_.trim).filter(_.nonEmpty)
-          .map { item =>
+  val scalarDoors: Seq[Door[Expression]] = Seq(
+    fn("cosine_sim", "a", "b")(CosineSimilarity(_, _)),
+    fn("jaccard_sim", "a", "b")(JaccardSimilarity(_, _)),
+    fn("jaccard_sim_sorted", "a", "b")(JaccardSimilaritySorted(_, _)),
+    fn("bloom_might_contain", "bloom", "value")(BloomMightContain(_, _)),
+    fn("no_inline", "x")(NoInline(_)),
+    fn("nfc_clean", "text")(NfcClean(_)),
+    // the text-cleaner, URL, link, sitemap and boilerplate tiers: the
+    // Scala surface's Column chains, expanded at resolution
+    chain("fix_mojibake", "text")(TextFunctions.fixMojibake),
+    chain("redact_pii", "text")(TextFunctions.redactPii),
+    chain("url_normalize", "url")(TextFunctions.urlNormalize),
+    // feed it an url_normalize'd URL, per the Column twin's contract
+    chain("surt_key", "url")(TextFunctions.surtKey),
+    // NULL when the document declares no meta charset
+    chain("html_charset", "html")(TextFunctions.htmlCharset),
+    chain("extract_anchors", "html", "page_url")(TextFunctions.extractAnchors),
+    chain("extract_links", "html", "page_url")(TextFunctions.extractLinks),
+    chain("extract_canonical", "html", "page_url")(TextFunctions.extractCanonical),
+    chain("canonical_key", "html", "page_url")(TextFunctions.canonicalKey),
+    chain("sitemap_index_locs", "xml")(TextFunctions.sitemapIndexLocs),
+    chain("sitemap_url_locs", "xml")(TextFunctions.sitemapUrlLocs),
+    chain("sitemap_url_entries", "xml")(TextFunctions.sitemapUrlEntries),
+    chain("html_blocks", "html")(TextFunctions.htmlBlocks),
+    chain("main_content", "html")(TextFunctions.mainContent))
+
+  private def queries(name: String) =
+    table(name, "qid", "qvec").expecting("(qid, qvec: array<double>)")
+  private def ranked(name: String) = table(name, "qid", "rank", "doc_id")
+  /** The one-row (qid, qtext) batch an ad-hoc keyword probe scores. */
+  private def queryFrame(query: String): DataFrame =
+    SparkSession.active.range(1).select(lit(0L).as("qid"), lit(query).as("qtext"))
+
+  val tableDoors: Seq[Door[LogicalPlan]] = Seq(
+    // the heap plan node for SQL users: order items take an optional
+    // ASC/DESC; the optional rank column is the row_number equivalent.
+    // Emits the UNRESOLVED node over the table's unresolved relation —
+    // the analyzer resolves both as for any FROM-clause table.
+    tvf("topk_per_group", table("table"), columns("group_cols"),
+        list("order_spec"), int("k", lo = 1), str("rank_col").optional) {
+      (t, groups, order, k, rank) =>
+        graft.plans.TopKPerGroup(
+          groups.map(UnresolvedAttribute.quotedString).toIndexedSeq,
+          order.map { item =>
             val lower = item.toLowerCase(java.util.Locale.ROOT)
             val (name, asc) =
               if (lower.endsWith(" desc")) (item.dropRight(5).trim, false)
@@ -328,1374 +97,256 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
               else (item, true)
             SortOrder(UnresolvedAttribute.quotedString(name),
               if (asc) Ascending else Descending)
-          }
-        val k = children(3) match {
-          case Literal(v: Int, IntegerType) => v
-          case Literal(v: Long, LongType) =>
-            // an unchecked toInt wraps 5000000000L to a negative value
-            // and surfaces as a misleading "k must be positive" from the
-            // plan node (ADVICE r5) — report the real problem instead
-            if (v < 1L || v > Int.MaxValue.toLong)
-              throw new IllegalArgumentException(
-                s"topk_per_group: k must be in [1, ${Int.MaxValue}], got $v")
-            v.toInt
-          case other => throw new IllegalArgumentException(
-            s"topk_per_group: k must be an integer literal, got $other")
-        }
-        val rankFor = children.drop(4).headOption.map(e =>
-          AttributeReference(str(e, "rank_col"), IntegerType,
-            nullable = false)())
-        graft.plans.TopKPerGroup(groups.toIndexedSeq, order.toIndexedSeq, k,
-          UnresolvedRelation(table), rankFor)
-      }))
-    // Near-dup pair mining from SQL. These builders resolve the table
-    // through the ACTIVE session (set for the analysis thread by
-    // spark.sql) and return the operator composition's analyzed plan —
-    // a whole DataFrame-level operator exposed as a table function.
-    //   cosine_near_dup(table, id_col, vec_col, threshold)
-    //     — the exact all-pairs oracle tier (quadratic; ground truth)
-    //   cosine_near_dup_banded(table, id_col, vec_col, threshold, dim)
-    //     — the banded-LSH production tier for thresholds ≥ ~0.85
-    def strLit(e: Expression, what: String): String = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(s,
-          org.apache.spark.sql.types.StringType) if s != null => s.toString
-      case other => throw new IllegalArgumentException(
-        s"$what must be a string literal, got $other")
-    }
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-          org.apache.spark.sql.types.IntegerType) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long,
-          org.apache.spark.sql.types.LongType) =>
-        if (v < Int.MinValue.toLong || v > Int.MaxValue.toLong)
-          throw new IllegalArgumentException(
-            s"$what out of int range: $v")
-        v.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    def longLit(e: Expression, what: String): Long = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-          org.apache.spark.sql.types.IntegerType) => v.toLong
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long,
-          org.apache.spark.sql.types.LongType) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    def numLit(e: Expression, what: String): Double = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-          if v != null && v.toString.nonEmpty &&
-            scala.util.Try(v.toString.toDouble).isSuccess =>
-        v.toString.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$what must be a numeric literal, got $other")
-    }
-    ext.injectTableFunction((
-      new FunctionIdentifier("cosine_near_dup"),
-      new ExpressionInfo("graft.operators.Similarity", "cosine_near_dup"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: cosine_near_dup(table, id_col, vec_col, threshold[, allow_quadratic])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tableName = strLit(children(0), "table")
-        val df = spark.table(tableName)
-        // Guard rail (VERDICT r5): in Scala the all-pairs tier is a
-        // comment-fenced oracle construct; from SQL nothing but this
-        // check stands between a user and an O(n²) job on a production
-        // table. A bounded limit-count (reads at most ceiling+1 rows)
-        // refuses big inputs loudly; an explicit boolean literal
-        // opts back in for deliberate oracle runs.
-        val allowQuadratic = children.drop(4).headOption.exists {
-          case org.apache.spark.sql.catalyst.expressions.Literal(b: Boolean,
-              org.apache.spark.sql.types.BooleanType) => b
-          case other => throw new IllegalArgumentException(
-            s"cosine_near_dup: allow_quadratic must be a boolean literal, got $other")
-        }
-        if (!allowQuadratic) {
-          val ceiling = GraftExtensions.QuadraticTvfRowCeiling
-          if (df.limit(ceiling + 1).count() > ceiling)
-            throw new IllegalArgumentException(
-              s"cosine_near_dup is the exact ALL-PAIRS tier (O(n^2) pairs): " +
-                s"'$tableName' exceeds $ceiling rows. Use " +
-                "cosine_near_dup_banded(table, id_col, vec_col, threshold, dim) " +
-                "for production scale, or opt in explicitly with " +
-                "cosine_near_dup(table, id_col, vec_col, threshold, true)")
-        }
-        graft.operators.Similarity.cosineNearDupPairsExact(
-            df,
-            strLit(children(1), "id_col"), strLit(children(2), "vec_col"),
-            numLit(children(3), "threshold"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("cosine_near_dup_banded"),
-      new ExpressionInfo("graft.operators.Similarity", "cosine_near_dup_banded"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: cosine_near_dup_banded(table, id_col, vec_col, threshold, dim)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Similarity.cosineNearDupPairsBanded(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "vec_col"),
-            numLit(children(3), "threshold"),
-            dim = intLit(children(4), "dim"))
-          .queryExecution.analyzed
-      }))
-    // Line-level boilerplate dedup from SQL (q97's operator):
-    //   line_dedup(table, id_col, text_col, min_docs[, chunk_width])
-    // Default decomposition is newline split (the real-corpus shape);
-    // a positive chunk_width switches to fixed token chunks (the
-    // newline-free fixture's decomposition). Emits
-    // (id, n_lines, n_removed, cleaned).
-    ext.injectTableFunction((
-      new FunctionIdentifier("line_dedup"),
-      new ExpressionInfo("graft.operators.Dedup", "line_dedup"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: line_dedup(table, id_col, text_col, min_docs[, chunk_width])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val idCol = strLit(children(1), "id_col")
-        val textCol = strLit(children(2), "text_col")
-        val minDocs = intLit(children(3), "min_docs")
-        val width = children.drop(4).headOption.map(intLit(_, "chunk_width"))
-        width.foreach(w => require(w > 0,
-          s"line_dedup: chunk_width must be positive, got $w"))
-        import org.apache.spark.sql.functions.{col, split}
-        val base = spark.table(strLit(children(0), "table"))
+          }.toIndexedSeq, k, t.queryExecution.logical,
+          rank.map(AttributeReference(_, IntegerType, nullable = false)()))
+    },
+    // near-dup pair mining: the exact all-pairs oracle tier (quadratic,
+    // guarded by a bounded limit-count unless explicitly opted in) and
+    // the banded-LSH production tier for thresholds >= ~0.85
+    tvf("cosine_near_dup", table("table"), column("id_col"),
+        column("vec_col"), num("threshold"), bool("allow_quadratic").or(false)) {
+      (t, id, vec, threshold, allowQuadratic) =>
+        val ceiling = QuadraticTvfRowCeiling
+        if (!allowQuadratic && t.limit(ceiling + 1).count() > ceiling)
+          refuse(s"cosine_near_dup is the exact ALL-PAIRS tier (O(n^2) pairs): " +
+            s"its table exceeds $ceiling rows. Use " +
+            "cosine_near_dup_banded(table, id_col, vec_col, threshold, dim) " +
+            "for production scale, or opt in explicitly with " +
+            "cosine_near_dup(table, id_col, vec_col, threshold, true)")
+        Similarity.cosineNearDupPairsExact(t, id, vec, threshold)
+    },
+    tvf("cosine_near_dup_banded", table("table"), column("id_col"),
+        column("vec_col"), num("threshold"), int("dim"))(
+      Similarity.cosineNearDupPairsBanded(_, _, _, _, _)),
+    // newline lines by default; a chunk_width switches to fixed token
+    // chunks (the newline-free corpus's decomposition)
+    tvf("line_dedup", table("table"), column("id_col"), column("text_col"),
+        int("min_docs"), int("chunk_width").optional) {
+      (t, id, text, minDocs, width) =>
         val (docs, lines, sep) = width match {
-          case Some(w) =>
-            // token-chunk mode: tokens projected per the lambda-CSE rule
-            (base.select(col(idCol),
-              graft.functions.TextFunctions.whitespaceTokens(col(textCol))
-                .as("_tk")),
-              graft.functions.TextFunctions.tokenChunks(col("_tk"), w, w), " ")
-          case None =>
-            (base.select(col(idCol), col(textCol)),
-              split(col(textCol), "\n", -1), "\n")
+          case Some(w) => (t.select(col(id),
+              TextFunctions.whitespaceTokens(col(text)).as("_tk")),
+            TextFunctions.tokenChunks(col("_tk"), w, w), " ")
+          case None => (t.select(col(id), col(text)),
+            split(col(text), "\n", -1), "\n")
         }
-        graft.operators.Dedup
-          .removeBoilerplateLines(docs, idCol, lines, minDocs, sep)
-          .queryExecution.analyzed
-      }))
-    // Greedy sequence packing from SQL (q99's operator):
-    //   pack_sequences(table, id_col, text_col, seq_len, n_shards)
-    // Emits the input rows plus (shard, n_tokens, offset, bin).
-    ext.injectTableFunction((
-      new FunctionIdentifier("pack_sequences"),
-      new ExpressionInfo("graft.operators.DatasetOps", "pack_sequences"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: pack_sequences(table, id_col, text_col, seq_len, n_shards)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        graft.operators.DatasetOps.packSequences(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"),
-            graft.functions.TextFunctions.tokenCount(
-              col(strLit(children(2), "text_col"))),
-            seqLen = intLit(children(3), "seq_len"),
-            nShards = intLit(children(4), "n_shards"))
-          .queryExecution.analyzed
-      }))
-    // Cross-doc repeated-span masking from SQL (q113's operator):
-    //   mask_spans(table, id_col, text_col, k[, min_docs])
-    // Emits (id, n_tokens, n_masked, cleaned).
-    ext.injectTableFunction((
-      new FunctionIdentifier("mask_spans"),
-      new ExpressionInfo("graft.operators.DatasetOps", "mask_spans"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: mask_spans(table, id_col, text_col, k[, min_docs])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.DatasetOps.maskRepeatedSpans(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"),
-            strLit(children(2), "text_col"),
-            k = intLit(children(3), "k"),
-            minDocs = children.drop(4).headOption
-              .map(intLit(_, "min_docs")).getOrElse(2))
-          .queryExecution.analyzed
-      }))
-    // Adaptive quality gate from SQL (q110's operator):
-    //   quality_gate(table, group_col, score_col, id_col, keep_frac)
-    // The EXACT tier (per-group rank cut); emits the gated input rows.
-    // The sketch tier stays a Scala call — its approx_percentile cut
-    // is resolution-dependent, which a SQL surface should not hide.
-    ext.injectTableFunction((
-      new FunctionIdentifier("quality_gate"),
-      new ExpressionInfo("graft.operators.DatasetOps", "quality_gate"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: quality_gate(table, group_col, score_col, id_col, keep_frac)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val frac = numLit(children(4), "keep_frac")
+        Dedup.removeBoilerplateLines(docs, id, lines, minDocs, sep)
+    },
+    tvf("pack_sequences", table("table"), column("id_col"), column("text_col"),
+        int("seq_len"), int("n_shards")) {
+      (t, id, text, seqLen, nShards) => DatasetOps.packSequences(t, id,
+        TextFunctions.tokenCount(col(text)), seqLen, nShards)
+    },
+    tvf("mask_spans", table("table"), column("id_col"), column("text_col"),
+        int("k"), int("min_docs").or(2))(DatasetOps.maskRepeatedSpans(_, _, _, _, _)),
+    // the EXACT tier; the sketch tier's cut is resolution-dependent,
+    // which a SQL surface should not hide
+    tvf("quality_gate", table("table"), column("group_col"),
+        column("score_col"), column("id_col"), num("keep_frac")) {
+      (t, group, score, id, frac) =>
         require(frac > 0.0 && frac <= 1.0,
           s"quality_gate: keep_frac must be in (0, 1], got $frac")
-        graft.operators.DatasetOps.qualityGateExact(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "group_col"),
-            strLit(children(2), "score_col"),
-            strLit(children(3), "id_col"),
-            keepFrac = frac)
-          .queryExecution.analyzed
-      }))
-    // Graph centrality from SQL — the link-analysis tier through the
-    // parser door (its iterated loops run at resolution; the returned
-    // plan reads the checkpointed score tables):
-    //   page_rank(edge_table, src_col, dst_col, iters) → (node, score)
-    //   hits(edge_table, src_col, dst_col, iters)
-    //     → (node, hub_score, auth_score)
-    ext.injectTableFunction((
-      new FunctionIdentifier("page_rank"),
-      new ExpressionInfo("graft.operators.Graph", "page_rank"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: page_rank(edge_table, src_col, dst_col, iters)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tbl = spark.table(strLit(children(0), "edge_table"))
-        val srcCol = strLit(children(1), "src_col")
-        val dstCol = strLit(children(2), "dst_col")
-        val iters = longLit(children(3), "iters")
-        Seq(srcCol, dstCol).foreach(c => require(tbl.columns.contains(c),
-          s"page_rank: table lacks column '$c'"))
-        require(iters >= 1 && iters <= 20,
-          s"page_rank: iters must be in [1, 20], got $iters")
-        graft.operators.Graph.pageRank(tbl, srcCol, dstCol, iters.toInt)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("hits"),
-      new ExpressionInfo("graft.operators.Graph", "hits"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: hits(edge_table, src_col, dst_col, iters)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tbl = spark.table(strLit(children(0), "edge_table"))
-        val srcCol = strLit(children(1), "src_col")
-        val dstCol = strLit(children(2), "dst_col")
-        val iters = longLit(children(3), "iters")
-        Seq(srcCol, dstCol).foreach(c => require(tbl.columns.contains(c),
-          s"hits: table lacks column '$c'"))
-        require(iters >= 1 && iters <= 20,
-          s"hits: iters must be in [1, 20], got $iters")
-        graft.operators.Graph.hits(tbl, srcCol, dstCol, iters.toInt)
-          .queryExecution.analyzed
-      }))
-    // Multi-hop redirect resolution from SQL:
-    //   resolve_redirects(table, src_col, dst_col, hop_cap)
-    //     → (start_url, final_url, n_hops, loop_flag)
-    ext.injectTableFunction((
-      new FunctionIdentifier("resolve_redirects"),
-      new ExpressionInfo("graft.operators.Graph", "resolve_redirects"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: resolve_redirects(table, src_col, dst_col, hop_cap)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tbl = spark.table(strLit(children(0), "table"))
-        val srcCol = strLit(children(1), "src_col")
-        val dstCol = strLit(children(2), "dst_col")
-        val cap = longLit(children(3), "hop_cap")
-        Seq(srcCol, dstCol).foreach(c => require(tbl.columns.contains(c),
-          s"resolve_redirects: table lacks column '$c'"))
-        require(cap >= 1 && cap <= 16,
-          s"resolve_redirects: hop_cap must be in [1, 16], got $cap")
-        graft.operators.Graph.resolveRedirects(tbl, srcCol, dstCol,
-          cap.toInt).queryExecution.analyzed
-      }))
-    // Reference-LM scoring from SQL (q292's operator — the CCNet
-    // quality signal through the parser door):
-    //   reference_lm_score(docs_table, ref_table, id_col, text_col)
-    // Emits the docs table's columns plus (n_bigrams, surprisal_bits,
-    // milli_bits_per_bigram).
-    ext.injectTableFunction((
-      new FunctionIdentifier("reference_lm_score"),
-      new ExpressionInfo("graft.operators.DatasetOps",
-        "reference_lm_score"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: reference_lm_score(docs_table, ref_table, id_col, text_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val docsT = spark.table(strLit(children(0), "docs_table"))
-        val refT = spark.table(strLit(children(1), "ref_table"))
-        val idCol = strLit(children(2), "id_col")
-        val textCol = strLit(children(3), "text_col")
-        require(docsT.columns.contains(idCol) &&
-          docsT.columns.contains(textCol),
-          s"reference_lm_score: docs table lacks '$idCol' or '$textCol'")
-        require(refT.columns.contains(textCol),
-          s"reference_lm_score: ref table lacks '$textCol'")
-        graft.operators.DatasetOps
-          .referenceLmScores(docsT, refT, idCol, textCol)
-          .queryExecution.analyzed
-      }))
-    // Duplicate-span excision from SQL (q290's operator — the
-    // exact-substring dedup tier through the parser door):
-    //   dup_span_excise(table, id_col, text_col, k)
-    // Emits the input columns plus (clean_text, chars_removed) — the
-    // same append-columns shape the Scala surface returns.
-    ext.injectTableFunction((
-      new FunctionIdentifier("dup_span_excise"),
-      new ExpressionInfo("graft.operators.Dedup", "dup_span_excise"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: dup_span_excise(table, id_col, text_col, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tbl = spark.table(strLit(children(0), "table"))
-        val idCol = strLit(children(1), "id_col")
-        val textCol = strLit(children(2), "text_col")
-        val k = longLit(children(3), "k")
-        Seq(idCol, textCol).foreach(c => require(tbl.columns.contains(c),
-          s"dup_span_excise: table lacks column '$c'"))
-        require(k >= 8 && k <= 256,
-          s"dup_span_excise: k must be in [8, 256], got $k")
-        val spans = graft.operators.Dedup.dupSpans(tbl, idCol, textCol,
-          k.toInt)
-        graft.operators.Dedup.exciseSpans(tbl, spans, idCol, textCol)
-          .queryExecution.analyzed
-      }))
-    // WARC record extraction from SQL (q258's operator — crawl stage
-    // zero through the parser door):
-    //   warc_records(table, blob_col)
-    // Emits the input columns plus (uri, content_length, payload,
-    // len_ok) — one row per recovered record.
-    ext.injectTableFunction((
-      new FunctionIdentifier("warc_records"),
-      new ExpressionInfo("graft.sources.Warc", "warc_records"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "usage: warc_records(table, blob_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tbl = spark.table(strLit(children(0), "table"))
-        val blobCol = strLit(children(1), "blob_col")
-        require(tbl.columns.contains(blobCol),
-          s"warc_records: table lacks column '$blobCol'")
-        graft.sources.Warc.parseRecords(tbl, blobCol)
-          .queryExecution.analyzed
-      }))
-    // HTTP message split from SQL (q269's operator — the layer
-    // between the WARC record frame and the document):
-    //   http_split(table, payload_col)
-    // Emits the input columns plus (http_status, content_type,
-    // charset, body); non-HTTP payloads surface as NULLs.
-    ext.injectTableFunction((
-      new FunctionIdentifier("http_split"),
-      new ExpressionInfo("graft.sources.Warc", "http_split"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "usage: http_split(table, payload_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val tbl = spark.table(strLit(children(0), "table"))
-        val pc = strLit(children(1), "payload_col")
-        require(tbl.columns.contains(pc),
-          s"http_split: table lacks column '$pc'")
-        graft.sources.Warc.httpSplit(tbl, pc)
-          .queryExecution.analyzed
-      }))
-    // Sitemap discovery from robots.txt bodies (q273's operator):
-    //   robots_sitemaps(robots_table)
-    // `robots_table` is (host, txt). Emits (host, sitemap_url),
-    // distinct — the directive is host-wide, never group-scoped.
-    ext.injectTableFunction((
-      new FunctionIdentifier("robots_sitemaps"),
-      new ExpressionInfo("graft.operators.Robots", "robots_sitemaps"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1,
-          "usage: robots_sitemaps(robots_table)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val robots = spark.table(strLit(children(0), "robots_table"))
-        val missing = Seq("host", "txt").filterNot(robots.columns.contains)
-        require(missing.isEmpty,
-          s"robots_sitemaps: robots_table lacks ${missing.mkString(", ")}" +
-            " — expected (host, txt)")
-        graft.operators.Robots.sitemaps(robots, "host", "txt")
-          .queryExecution.analyzed
-      }))
-    // robots.txt verdicts from SQL (q262's operator — crawl
-    // politeness through the parser door):
-    //   robots_verdicts(robots_table, requests_table)
-    // `robots_table` is (host, txt); `requests_table` is
-    // (host, agent, upath). Emits (host, agent, upath, allowed).
-    ext.injectTableFunction((
-      new FunctionIdentifier("robots_verdicts"),
-      new ExpressionInfo("graft.operators.Robots", "robots_verdicts"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "usage: robots_verdicts(robots_table, requests_table)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val robots = spark.table(strLit(children(0), "robots_table"))
-        val missingR = Seq("host", "txt").filterNot(robots.columns.contains)
-        require(missingR.isEmpty,
-          s"robots_verdicts: robots_table lacks ${missingR.mkString(", ")}" +
-            " — expected (host, txt)")
-        val reqs = spark.table(strLit(children(1), "requests_table"))
-        val missingQ = Seq("host", "agent", "upath")
-          .filterNot(reqs.columns.contains)
-        require(missingQ.isEmpty,
-          s"robots_verdicts: requests_table lacks " +
-            s"${missingQ.mkString(", ")} — expected (host, agent, upath)")
-        graft.operators.Robots.verdicts(
-            graft.operators.Robots.rules(robots, "host", "txt"), reqs)
-          .queryExecution.analyzed
-      }))
-    // Within-doc repetition signals from SQL (q252's operator — the
-    // Gopher self-repetition rules):
-    //   repetition_signals(table, id_col, text_col)
-    // Emits (id, n_words, word_chars, top2_cnt, top2_ppm, dup3_ppm).
-    ext.injectTableFunction((
-      new FunctionIdentifier("repetition_signals"),
-      new ExpressionInfo("graft.operators.DatasetOps", "repetition_signals"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: repetition_signals(table, id_col, text_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.DatasetOps.repetitionSignals(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"))
-          .queryExecution.analyzed
-      }))
-    // Chat/SFT prep from SQL (q312/q313's operator):
-    //   chat_flatten(table, id_col, json_col)
-    // Emits (id, conv_id, reason, n_turns, rendered_len, rendered_md5,
-    // mask_spans, masked_chars) — parse + validate + ChatML render +
-    // loss-mask spans in one narrow projection.
-    ext.injectTableFunction((
-      new FunctionIdentifier("chat_flatten"),
-      new ExpressionInfo("graft.operators.ChatOps", "chat_flatten"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: chat_flatten(table, id_col, json_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.ChatOps.flatten(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "json_col"))
-          .queryExecution.analyzed
-      }))
-    // Context-window fitting from SQL (q323's operator):
-    //   chat_context_fit(table, id_col, json_col, budget)
-    // Emits (id, n_kept, n_dropped, fits, kept_len, kept_md5) per
-    // parseable-and-valid conversation.
-    ext.injectTableFunction((
-      new FunctionIdentifier("chat_context_fit"),
-      new ExpressionInfo("graft.operators.ChatOps", "chat_context_fit"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: chat_context_fit(table, id_col, json_col, budget)")
-        val budget = intLit(children(3), "budget").toLong
-        require(budget > 0, s"chat_context_fit: budget must be > 0, got $budget")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.ChatOps.fitContextFlat(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "json_col"),
-            budget)
-          .queryExecution.analyzed
-      }))
-    // DPO preference pairs from SQL (q314's operator):
-    //   preference_pairs(table, grp_col, id_col, score_col, min_gap)
-    // Emits (grp, chosen_id, chosen_score, rejected_id,
-    // rejected_score, gap).
-    ext.injectTableFunction((
-      new FunctionIdentifier("preference_pairs"),
-      new ExpressionInfo("graft.operators.ChatOps", "preference_pairs"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: preference_pairs(table, grp_col, id_col, score_col, min_gap)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.ChatOps.preferencePairs(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "grp_col"), strLit(children(2), "id_col"),
-            strLit(children(3), "score_col"),
-            minGap = intLit(children(4), "min_gap").toLong)
-          .queryExecution.analyzed
-      }))
-    // Best-of-n / rejection-sampling selection from SQL (q335's
-    // operator):
-    //   best_of_n(table, grp_col, id_col, score_col, k, floor)
-    // Emits (grp, rank, id, score) — per group the top-k responses by
-    // score above the floor, heap-rewritten ranking.
-    ext.injectTableFunction((
-      new FunctionIdentifier("best_of_n"),
-      new ExpressionInfo("graft.operators.ChatOps", "best_of_n"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6,
-          "usage: best_of_n(table, grp_col, id_col, score_col, k, floor)")
-        val k = intLit(children(4), "k")
-        require(k >= 1, s"best_of_n: k must be >= 1, got $k")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.ChatOps.bestOfN(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "grp_col"), strLit(children(2), "id_col"),
-            strLit(children(3), "score_col"), k,
-            floor = intLit(children(5), "floor").toLong)
-          .queryExecution.analyzed
-      }))
-    // DSIR-shaped importance scoring from SQL (q116's operator):
-    //   importance_score(corpus_table, target_table, id_col, text_col[, k])
-    // Emits (id, n_grams, score, avg_ratio).
-    ext.injectTableFunction((
-      new FunctionIdentifier("importance_score"),
-      new ExpressionInfo("graft.operators.DatasetOps", "importance_score"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: importance_score(corpus_table, target_table, id_col, text_col[, k])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val k = children.drop(4).headOption.map(intLit(_, "k")).getOrElse(2)
-        require(k >= 1, s"importance_score: k must be >= 1, got $k")
-        graft.operators.DatasetOps.importanceScores(
-            spark.table(strLit(children(0), "corpus_table")),
-            spark.table(strLit(children(1), "target_table")),
-            strLit(children(2), "id_col"),
-            strLit(children(3), "text_col"), k = k)
-          .queryExecution.analyzed
-      }))
-    // Length-bucketed batch assembly from SQL (q117's operator):
-    //   length_batches(table, id_col, text_col, batch_size
-    //                  [, min_bucket, max_bucket, n_shards])
-    // Emits the input rows plus (n_tokens, bucket, shard, batch_idx,
-    // pos); the power-of-two/ordering requires surface as analysis
-    // errors rather than mid-job failures.
-    ext.injectTableFunction((
-      new FunctionIdentifier("length_batches"),
-      new ExpressionInfo("graft.operators.DatasetOps", "length_batches"),
-      (children: Seq[Expression]) => {
-        require(children.size >= 4 && children.size <= 7,
-          "usage: length_batches(table, id_col, text_col, batch_size" +
-            "[, min_bucket[, max_bucket[, n_shards]]])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.col
-        graft.operators.DatasetOps.lengthBucketBatches(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"),
-            graft.functions.TextFunctions.tokenCount(
-              col(strLit(children(2), "text_col"))),
-            batchSize = intLit(children(3), "batch_size"),
-            minBucket = children.drop(4).headOption
-              .map(intLit(_, "min_bucket")).getOrElse(16),
-            maxBucket = children.drop(5).headOption
-              .map(intLit(_, "max_bucket")).getOrElse(2048),
-            nShards = children.drop(6).headOption
-              .map(intLit(_, "n_shards")).getOrElse(8))
-          .queryExecution.analyzed
-      }))
-    // Mean-pooled group embeddings from SQL (q120's operator):
-    //   mean_pool(table, group_col, vec_col)
-    // Emits (<group_col's name>, n_vecs, centroid array<double>) —
-    // the group column keeps its input name.
-    ext.injectTableFunction((
-      new FunctionIdentifier("mean_pool"),
-      new ExpressionInfo("graft.operators.Similarity", "mean_pool"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: mean_pool(table, group_col, vec_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Similarity.meanPoolEmbeddings(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "group_col"),
-            strLit(children(2), "vec_col"))
-          .queryExecution.analyzed
-      }))
-    // Contrastive triplet mining from SQL (q121's operator):
-    //   mine_triplets(pairs_table, ids_table, id_col[, n_shards])
-    // `pairs_table` carries (idA, idB, sim) near-dup verdicts (e.g. a
-    // cosine_near_dup materialization); emits
-    // (anchor, positive, sim, negative).
-    ext.injectTableFunction((
-      new FunctionIdentifier("mine_triplets"),
-      new ExpressionInfo("graft.operators.Similarity", "mine_triplets"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3 || children.size == 4,
-          "usage: mine_triplets(pairs_table, ids_table, id_col[, n_shards])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Similarity.mineTriplets(
-            spark.table(strLit(children(0), "pairs_table")),
-            spark.table(strLit(children(1), "ids_table")),
-            strLit(children(2), "id_col"),
-            nShards = children.drop(3).headOption
-              .map(intLit(_, "n_shards")).getOrElse(8))
-          .queryExecution.analyzed
-      }))
-    // BM25 keyword search from SQL (q124's operator):
-    //   bm25_search(table, id_col, text_col, query, k)
-    // Builds postings + corpus stats for the table and ranks the one
-    // query string's top-k through the heap node; emits
-    // (qid, rank, doc_id, score). An ad-hoc probe pays the index
-    // build — repeated probes should persist the postings
-    // (Search.writePostingsBucketed) and call Search.bm25TopK.
-    ext.injectTableFunction((
-      new FunctionIdentifier("bm25_search"),
-      new ExpressionInfo("graft.operators.Search", "bm25_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: bm25_search(table, id_col, text_col, query, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.lit
-        val corpus = spark.table(strLit(children(0), "table"))
-        val idCol = strLit(children(1), "id_col")
-        val textCol = strLit(children(2), "text_col")
-        val query = strLit(children(3), "query")
-        val k = intLit(children(4), "k")
-        require(k >= 1, s"bm25_search: k must be >= 1, got $k")
-        val qdf = spark.range(1)
-          .select(lit(0L).as("qid"), lit(query).as("qtext"))
-        graft.operators.Search.bm25TopK(qdf,
-            graft.operators.Search.termPostings(corpus, idCol, textCol),
-            graft.operators.Search.corpusStats(corpus, idCol, textCol),
-            k = k)
-          .queryExecution.analyzed
-      }))
-    // BM25 probe of a PERSISTED index from SQL (VERDICT r7 Missing
-    // #4: the ad-hoc bm25_search rebuilds postings per call by
-    // design, but the SQL-only persona had NO route to the
-    // build-once-probe-many tier every repeated probe should use):
-    //   bm25_search_idx(postings_table, lens_table, query, k)
-    // `postings_table` is a registered termPostings landing — ideally
-    // Search.writePostingsBucketed's bucketed table, making the probe
-    // join exchange-free on the index side — and `lens_table` the
-    // docLens sidecar the corpus stats derive from (never a corpus
-    // rescan). Index schemas are validated loudly up front: a wrong
-    // table name otherwise surfaces as an unresolved-column error
-    // deep inside the scoring plan.
-    ext.injectTableFunction((
-      new FunctionIdentifier("bm25_search_idx"),
-      new ExpressionInfo("graft.operators.Search", "bm25_search_idx"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: bm25_search_idx(postings_table, lens_table, query, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        import org.apache.spark.sql.functions.lit
-        val post = spark.table(strLit(children(0), "postings_table"))
-        val missingP = Seq("term", "id", "tf", "dl")
-          .filterNot(post.columns.contains)
-        require(missingP.isEmpty,
-          s"bm25_search_idx: postings_table lacks ${missingP.mkString(", ")}" +
-            " — expected a Search.termPostings/writePostingsBucketed landing")
-        val lens = spark.table(strLit(children(1), "lens_table"))
-        val missingL = Seq("id", "dl").filterNot(lens.columns.contains)
-        require(missingL.isEmpty,
-          s"bm25_search_idx: lens_table lacks ${missingL.mkString(", ")}" +
-            " — expected a Search.docLens landing")
-        val query = strLit(children(2), "query")
-        val k = intLit(children(3), "k")
-        require(k >= 1, s"bm25_search_idx: k must be >= 1, got $k")
-        val qdf = spark.range(1)
-          .select(lit(0L).as("qid"), lit(query).as("qtext"))
-        graft.operators.Search.bm25TopK(qdf, post,
-            graft.operators.Search.statsFromLens(lens), k = k)
-          .queryExecution.analyzed
-      }))
-    // Boolean retrieval from SQL (q158's operator):
-    //   boolean_search(table, id_col, text_col, must, should, must_not, k)
-    // The three clauses are whitespace-separated term-list literals
-    // ('' = empty clause); emits (id, n_should) ordered by
-    // (n_should desc, id). Same ad-hoc-probe caveat as bm25_search:
-    // repeated probes should persist the postings and call
-    // Search.booleanSearch directly.
-    ext.injectTableFunction((
-      new FunctionIdentifier("boolean_search"),
-      new ExpressionInfo("graft.operators.Search", "boolean_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 7,
-          "usage: boolean_search(table, id_col, text_col, must, should, " +
-            "must_not, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        def terms(e: Expression, what: String): Seq[String] =
-          strLit(e, what).split("\\s+").toSeq.filter(_.nonEmpty)
-        val k = intLit(children(6), "k")
-        require(k >= 1, s"boolean_search: k must be >= 1, got $k")
-        graft.operators.Search.booleanSearch(
-            graft.operators.Search.termPostings(
-              spark.table(strLit(children(0), "table")),
-              strLit(children(1), "id_col"), strLit(children(2), "text_col")),
-            must = terms(children(3), "must"),
-            should = terms(children(4), "should"),
-            mustNot = terms(children(5), "must_not"), k = k)
-          .queryExecution.analyzed
-      }))
-    // Faceted search from SQL (q171's operator):
-    //   facet_search(table, id_col, text_col, facet_col, must, top_n)
-    // Docs containing ALL must terms censused by the facet column;
-    // emits (facet, n_docs) ordered by (n_docs desc, facet). Same
-    // ad-hoc-probe caveat as bm25_search: repeated probes should
-    // persist the postings and call Search.facetedSearch directly.
-    ext.injectTableFunction((
-      new FunctionIdentifier("facet_search"),
-      new ExpressionInfo("graft.operators.Search", "facet_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 6,
-          "usage: facet_search(table, id_col, text_col, facet_col, " +
-            "must, top_n)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val must = strLit(children(4), "must")
-          .split("\\s+").toSeq.filter(_.nonEmpty)
-        val topN = intLit(children(5), "top_n")
-        val t = spark.table(strLit(children(0), "table"))
-        val idCol = strLit(children(1), "id_col")
-        graft.operators.Search.facetedSearch(
-            graft.operators.Search.termPostings(t, idCol,
-              strLit(children(2), "text_col")),
-            t, idCol, strLit(children(3), "facet_col"), must, topN)
-          .queryExecution.analyzed
-      }))
-    // Key-skew diagnostic from SQL (q172's operator):
-    //   skew_report(table, key_col, target_rows_per_task, top_n)
-    // Emits (key, n_rows, share_ppm, n_salts) ordered by
-    // (n_rows desc, key).
-    ext.injectTableFunction((
-      new FunctionIdentifier("skew_report"),
-      new ExpressionInfo("graft.operators.ScaleOps", "skew_report"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: skew_report(table, key_col, target_rows_per_task, top_n)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.ScaleOps.skewReport(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "key_col"),
-            longLit(children(2), "target_rows_per_task"),
-            intLit(children(3), "top_n"))
-          .queryExecution.analyzed
-      }))
-    // Equi-width integer histogram from SQL (q181's operator):
-    //   histogram(table, value_col, n_bins, lo, hi)
-    // Emits (bin, n_rows) ordered by bin; bins -1/n_bins carry the
-    // out-of-range tails.
-    ext.injectTableFunction((
-      new FunctionIdentifier("histogram"),
-      new ExpressionInfo("graft.operators.DatasetOps", "histogram"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: histogram(table, value_col, n_bins, lo, hi)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.DatasetOps.histogram(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "value_col"),
-            intLit(children(2), "n_bins"),
-            longLit(children(3), "lo"), longLit(children(4), "hi"))
-          .queryExecution.analyzed
-      }))
-    // Market-basket rules from SQL (q182's operator, the ad-hoc
-    // tier — repeated mining should persist directedPairCounts and
-    // probe associationRulesFromCounts):
-    //   association_rules(table, basket_col, item_col, min_support, top_n)
-    ext.injectTableFunction((
-      new FunctionIdentifier("association_rules"),
-      new ExpressionInfo("graft.operators.Association", "association_rules"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: association_rules(table, basket_col, item_col, " +
-            "min_support, top_n)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Association.associationRules(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "basket_col"),
-            strLit(children(2), "item_col"),
-            longLit(children(3), "min_support"),
-            intLit(children(4), "top_n"))
-          .queryExecution.analyzed
-      }))
-    // Trigram-indexed substring search from SQL (q178's operator):
-    //   substring_search(table, id_col, text_col, pattern)
-    // The LIKE-scan replacement; emits (id, n_occurrences) ordered by
-    // (n_occurrences desc, id). Same ad-hoc-probe caveat as
-    // bm25_search: repeated probes should persist charGramPostings
-    // and call Search.substringSearchFromIndex directly.
-    ext.injectTableFunction((
-      new FunctionIdentifier("substring_search"),
-      new ExpressionInfo("graft.operators.Search", "substring_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: substring_search(table, id_col, text_col, pattern)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Search.substringSearch(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"),
-            strLit(children(3), "pattern"))
-          .queryExecution.analyzed
-      }))
-    // Substring search over a PERSISTED trigram index from SQL
-    // (VERDICT r7 Missing #4's other half — q183's ad-hoc tier costs
-    // ~15× the indexed path because it regrams the corpus per call):
-    //   substring_search_idx(grams_table, docs_table, id_col,
-    //                        text_col, pattern)
-    // `grams_table` is a registered charGramPostings landing (one
-    // (gram, id) row per distinct trigram per doc); the docs table is
-    // touched only to verify the gram-gated candidates. Gram size is
-    // the default 3 — the persisted index fixes it at build time.
-    ext.injectTableFunction((
-      new FunctionIdentifier("substring_search_idx"),
-      new ExpressionInfo("graft.operators.Search", "substring_search_idx"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: substring_search_idx(grams_table, docs_table, " +
-            "id_col, text_col, pattern)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val grams = spark.table(strLit(children(0), "grams_table"))
-        val missingG = Seq("id", "gram").filterNot(grams.columns.contains)
-        require(missingG.isEmpty,
-          s"substring_search_idx: grams_table lacks ${missingG.mkString(", ")}" +
-            " — expected a Search.charGramPostings landing")
-        graft.operators.Search.substringSearchFromIndex(grams,
-            spark.table(strLit(children(1), "docs_table")),
-            strLit(children(2), "id_col"), strLit(children(3), "text_col"),
-            strLit(children(4), "pattern"))
-          .queryExecution.analyzed
-      }))
-    // ADC probe of a PERSISTED PQ index from SQL (VERDICT r9 Missing
-    // #2: retrieval SQL users reach bm25_search_idx /
-    // substring_search_idx, but the embedding serving tier had no
-    // parser door at all):
-    //   pq_search(index_dir, queries_table, k)
-    // `index_dir` is a Similarity.Pq.writePqIndex layout — the wide
-    // code table at dir/codes plus the codebook SIDECAR at dir/books,
-    // which is what makes a stored index fully self-describing: the
-    // probe recovers the build geometry from disk, never guesses
-    // (probePqIndex's contract — a missing sidecar refuses loudly
-    // there rather than silently reverting to default books).
-    // `queries_table` is a registered (qid, qvec: array<double>)
-    // frame. Emits (qid, rank, cid, est_micro).
-    ext.injectTableFunction((
-      new FunctionIdentifier("pq_search"),
-      new ExpressionInfo("graft.operators.Similarity", "pq_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: pq_search(index_dir, queries_table, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strLit(children(0), "index_dir")
-        val queries = spark.table(strLit(children(1), "queries_table"))
-        val missingQ = Seq("qid", "qvec").filterNot(queries.columns.contains)
-        require(missingQ.isEmpty,
-          s"pq_search: queries_table lacks ${missingQ.mkString(", ")}" +
-            " — expected (qid, qvec: array<double>)")
-        val k = intLit(children(2), "k")
-        require(k >= 1, s"pq_search: k must be >= 1, got $k")
-        // index-layout validation up front: a wrong dir otherwise
-        // surfaces as a path-not-found deep inside the probe plan
-        val codes = try spark.read.parquet(s"$dir/codes")
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new IllegalArgumentException(
-            s"pq_search: cannot read $dir/codes — expected a " +
-              s"Similarity.Pq.writePqIndex layout (codes + books)", e) }
-        val missingC = ("cid" +: (0 until graft.operators.Similarity.Pq.m)
-          .map(i => s"c$i")).filterNot(codes.columns.contains)
-        require(missingC.isEmpty,
-          s"pq_search: $dir/codes lacks ${missingC.mkString(", ")}" +
-            " — expected Similarity.Pq.encodeWide's wide code layout")
-        graft.operators.Similarity.Pq
-          .probePqIndex(spark, dir, queries, k)
-          .queryExecution.analyzed
-      }))
-    // Cell-pruned exact-cosine probe of a PERSISTED IVF index from
-    // SQL — pq_search's sibling (same r9 gap):
-    //   ivf_search(index_dir, queries_table, k, n_probe)
-    // `index_dir` is a Similarity.writeIvfIndex layout (cell-
-    // partitioned vectors at dir/cells + the centroid table at
-    // dir/centroids); the probe ranks the stored centroids per query
-    // and reads only the n_probe winning cell partitions (dynamic
-    // partition pruning — the 100 TB serving shape). Emits
-    // (qid, rank, cid, sim).
-    ext.injectTableFunction((
-      new FunctionIdentifier("ivf_search"),
-      new ExpressionInfo("graft.operators.Similarity", "ivf_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: ivf_search(index_dir, queries_table, k, n_probe)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strLit(children(0), "index_dir")
-        val queries = spark.table(strLit(children(1), "queries_table"))
-        val missingQ = Seq("qid", "qvec").filterNot(queries.columns.contains)
-        require(missingQ.isEmpty,
-          s"ivf_search: queries_table lacks ${missingQ.mkString(", ")}" +
-            " — expected (qid, qvec: array<double>)")
-        val k = intLit(children(2), "k")
-        require(k >= 1, s"ivf_search: k must be >= 1, got $k")
-        val nProbe = intLit(children(3), "n_probe")
-        require(nProbe >= 1, s"ivf_search: n_probe must be >= 1, got $nProbe")
-        def readOrRefuse(sub: String) =
-          try spark.read.parquet(s"$dir/$sub")
-          catch { case scala.util.control.NonFatal(e) =>
-            throw new IllegalArgumentException(
-              s"ivf_search: cannot read $dir/$sub — expected a " +
-                s"Similarity.writeIvfIndex layout (cells + centroids)", e) }
-        val missingK = Seq("_cell", "_cent")
-          .filterNot(readOrRefuse("centroids").columns.contains)
-        require(missingK.isEmpty,
-          s"ivf_search: $dir/centroids lacks ${missingK.mkString(", ")}")
-        val missingCells = Seq("cid", "cvec", "_cell")
-          .filterNot(readOrRefuse("cells").columns.contains)
-        require(missingCells.isEmpty,
-          s"ivf_search: $dir/cells lacks ${missingCells.mkString(", ")}")
-        graft.operators.Similarity
-          .probeIvfIndex(spark, dir, queries, k, nProbe)
-          .queryExecution.analyzed
-      }))
-    // Asymmetric probe of a PERSISTED SQ (int8 scalar-quantization)
-    // index from SQL — completing the stored-vector-index door set
-    // (pq_search ranks by ADC over sub-quantizer codes; sq_search
-    // ranks by exact l2 to the int8 reconstruction):
-    //   sq_search(index_dir, queries_table, k)
-    // `index_dir` is a Similarity.Sq.writeSqIndex layout — codes at
-    // dir/codes plus the per-dim (min, max) SIDECAR at dir/minmax,
-    // which the probe recovers from disk (never guesses: decoding
-    // with wrong ranges silently mis-ranks, so a missing sidecar
-    // refuses loudly). Emits (qid, rank, cid, est_micro).
-    ext.injectTableFunction((
-      new FunctionIdentifier("sq_search"),
-      new ExpressionInfo("graft.operators.Similarity", "sq_search"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: sq_search(index_dir, queries_table, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val dir = strLit(children(0), "index_dir")
-        val queries = spark.table(strLit(children(1), "queries_table"))
-        val missingQ = Seq("qid", "qvec").filterNot(queries.columns.contains)
-        require(missingQ.isEmpty,
-          s"sq_search: queries_table lacks ${missingQ.mkString(", ")}" +
-            " — expected (qid, qvec: array<double>)")
-        val k = intLit(children(2), "k")
-        require(k >= 1, s"sq_search: k must be >= 1, got $k")
-        val codes = try spark.read.parquet(s"$dir/codes")
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new IllegalArgumentException(
-            s"sq_search: cannot read $dir/codes — expected a " +
-              s"Similarity.Sq.writeSqIndex layout (codes + minmax)", e) }
-        val missingC = Seq("cid", "codes").filterNot(codes.columns.contains)
-        require(missingC.isEmpty,
-          s"sq_search: $dir/codes lacks ${missingC.mkString(", ")}" +
-            " — expected Similarity.Sq.writeSqIndex's code layout")
-        graft.operators.Similarity.Sq
-          .probeSqIndex(spark, dir, queries, k)
-          .queryExecution.analyzed
-      }))
-    // Perceptual image near-dup mining from SQL — the multimodal twin
-    // of cosine_near_dup (r10: the SQL persona reached every text and
-    // vector dedup tier but none of the perceptual ones):
-    //   image_near_dup(table, id_col, raster_hx_col, max_hamming, bands)
-    // `raster_hx_col` is the 8×9 gray hex raster contract dHashBits
-    // consumes (imageDecodeBatch / videoDecodeBatch emit it); the TVF
-    // runs the exact banded-hamming Scala path — pigeonhole-exact at
-    // bands > max_hamming, enforced loudly by the operator. Emits
-    // (idA, idB, hamming) with idA < idB.
-    ext.injectTableFunction((
-      new FunctionIdentifier("image_near_dup"),
-      new ExpressionInfo("graft.operators.Multimodal", "image_near_dup"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: image_near_dup(table, id_col, raster_hx_col, " +
-            "max_hamming, bands)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val t = spark.table(strLit(children(0), "table"))
-        val idCol = strLit(children(1), "id_col")
-        val hxCol = strLit(children(2), "raster_hx_col")
-        val missing = Seq(idCol, hxCol).filterNot(t.columns.contains)
-        require(missing.isEmpty,
-          s"image_near_dup: table lacks ${missing.mkString(", ")}")
-        import org.apache.spark.sql.functions.col
-        val hashed = t.select(col(idCol).as("id"),
-          graft.operators.Multimodal.dHashBits(col(hxCol), 8, 8).as("bits"))
-        graft.operators.Multimodal
-          .imageNearDupPairs(hashed, "id", "bits",
-            intLit(children(3), "max_hamming"), intLit(children(4), "bands"))
-          .queryExecution.analyzed
-      }))
-    // Audio twin over loudness envelopes (audioDecodeBatch's 65-bin
-    // output): gradient-sign fingerprint + the same banded machinery;
-    // short envelopes degrade to null fingerprints and are filtered
-    // (audioFingerprintBits' guard contract).
-    //   audio_near_dup(table, id_col, envelope_col, max_hamming, bands)
-    ext.injectTableFunction((
-      new FunctionIdentifier("audio_near_dup"),
-      new ExpressionInfo("graft.operators.Multimodal", "audio_near_dup"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: audio_near_dup(table, id_col, envelope_col, " +
-            "max_hamming, bands)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val t = spark.table(strLit(children(0), "table"))
-        val idCol = strLit(children(1), "id_col")
-        val envCol = strLit(children(2), "envelope_col")
-        val missing = Seq(idCol, envCol).filterNot(t.columns.contains)
-        require(missing.isEmpty,
-          s"audio_near_dup: table lacks ${missing.mkString(", ")}")
-        import org.apache.spark.sql.functions.col
-        val hashed = t.select(col(idCol).as("id"),
-          graft.operators.Multimodal.audioFingerprintBits(col(envCol))
-            .as("bits"))
-          .filter(col("bits").isNotNull)
-        graft.operators.Multimodal
-          .audioNearDupPairs(hashed, "id", "bits",
-            intLit(children(3), "max_hamming"), intLit(children(4), "bands"))
-          .queryExecution.analyzed
-      }))
-    // Unigram LM surprisal scoring from SQL (q157's operator):
-    //   surprisal_score(table, id_col, text_col)
-    // Emits (id_col, n_tokens, surprisal_bits, milli_bits_per_token).
-    ext.injectTableFunction((
-      new FunctionIdentifier("surprisal_score"),
-      new ExpressionInfo("graft.operators.DatasetOps", "surprisal_score"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: surprisal_score(table, id_col, text_col)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.DatasetOps.surprisalScores(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"))
-          .queryExecution.analyzed
-      }))
-    // Mixture budget water-filling from SQL (q155's operator):
-    //   mixture_waterfill(table, source_col, text_col, budget, cap_milli)
-    // Emits one row per source: (source, n_tokens, capacity_tokens,
-    // alloc_tokens, saturated, milli_epochs).
-    ext.injectTableFunction((
-      new FunctionIdentifier("mixture_waterfill"),
-      new ExpressionInfo("graft.operators.DatasetOps", "mixture_waterfill"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: mixture_waterfill(table, source_col, text_col, budget, " +
-            "cap_milli)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.DatasetOps.mixtureAllocation(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "source_col"), strLit(children(2), "text_col"),
-            budgetTokens = longLit(children(3), "budget"),
-            maxMilliEpochs = longLit(children(4), "cap_milli"))
-          .queryExecution.analyzed
-      }))
-    // Exact phrase match from SQL (q125's operator):
-    //   phrase_match(table, id_col, text_col, phrase)
-    // The phrase is ONE string literal, whitespace-split with the
-    // index's own tokenizer geometry; emits (id, n_matches).
-    ext.injectTableFunction((
-      new FunctionIdentifier("phrase_match"),
-      new ExpressionInfo("graft.operators.Search", "phrase_match"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: phrase_match(table, id_col, text_col, phrase)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val phrase = strLit(children(3), "phrase")
-          .split("\\s+").toSeq.filter(_.nonEmpty)
-        graft.operators.Search.phraseMatches(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"),
-            phrase)
-          .queryExecution.analyzed
-      }))
-    // Fuzzy term suggestions from SQL (q129's operator):
-    //   fuzzy_terms(table, id_col, text_col, query_terms[, k])
-    // query_terms is a whitespace-separated literal; emits
-    // (query_term, rank, term, doc_freq).
-    ext.injectTableFunction((
-      new FunctionIdentifier("fuzzy_terms"),
-      new ExpressionInfo("graft.operators.Search", "fuzzy_terms"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: fuzzy_terms(table, id_col, text_col, query_terms[, k])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val terms = strLit(children(3), "query_terms")
-          .split("\\s+").toSeq.filter(_.nonEmpty)
-        val k = children.drop(4).headOption.map(intLit(_, "k")).getOrElse(3)
-        require(k >= 1, s"fuzzy_terms: k must be >= 1, got $k")
-        graft.operators.Search.fuzzyTermSuggestions(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"),
-            terms, k = k)
-          .queryExecution.analyzed
-      }))
-    // Weighted source interleave from SQL (q127's operator):
-    //   interleave_sources(table, id_col, source_col, weights[, n_shards])
-    // weights is a 'src0:3,src1:2' literal; unlisted sources weigh 1.
-    ext.injectTableFunction((
-      new FunctionIdentifier("interleave_sources"),
-      new ExpressionInfo("graft.operators.DatasetOps", "interleave_sources"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: interleave_sources(table, id_col, source_col, weights[, n_shards])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val weightSpec = strLit(children(3), "weights")
-        val weights = weightSpec.split(',').map(_.trim).filter(_.nonEmpty)
-          .map { w =>
-            w.split(':') match {
-              case Array(src, n) if n.trim.matches("\\d+") =>
-                src.trim -> n.trim.toLong
-              case _ => throw new IllegalArgumentException(
-                s"interleave_sources: weights must look like 'src0:3,src1:2', got '$w'")
-            }
-          }.toMap
-        graft.operators.DatasetOps.interleaveSources(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "source_col"),
-            weights,
-            nShards = children.drop(4).headOption
-              .map(intLit(_, "n_shards")).getOrElse(8))
-          .queryExecution.analyzed
-      }))
-    // MMR diversified re-ranking from SQL (q132's operator):
-    //   mmr_rerank(ranked_table, vectors_table, m, k)
-    // ranked_table carries (qid, rank, cid); vectors_table (id, vec).
-    ext.injectTableFunction((
-      new FunctionIdentifier("mmr_rerank"),
-      new ExpressionInfo("graft.operators.Search", "mmr_rerank"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: mmr_rerank(ranked_table, vectors_table, m, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Search.mmrRerank(
-            spark.table(strLit(children(0), "ranked_table")),
-            spark.table(strLit(children(1), "vectors_table")),
-            m = intLit(children(2), "m"), k = intLit(children(3), "k"))
-          .queryExecution.analyzed
-      }))
-    // Best-snippet extraction from SQL (q135's operator — the
-    // highlighting step a SQL retrieval user composes directly after
-    // bm25_search):
-    //   best_snippets(table, id_col, text_col, query_terms[, window])
-    // query_terms is a whitespace-separated literal; emits
-    // (id, start, n_hits, snippet).
-    ext.injectTableFunction((
-      new FunctionIdentifier("best_snippets"),
-      new ExpressionInfo("graft.operators.Search", "best_snippets"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4 || children.size == 5,
-          "usage: best_snippets(table, id_col, text_col, query_terms[, window])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val terms = strLit(children(3), "query_terms")
-          .split("\\s+").toSeq.filter(_.nonEmpty)
-        require(terms.nonEmpty,
-          "best_snippets: query_terms must contain at least one term")
-        val window = children.drop(4).headOption
-          .map(intLit(_, "window")).getOrElse(16)
-        require(window >= 1,
-          s"best_snippets: window must be >= 1, got $window")
-        graft.operators.Search.bestSnippets(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"),
-            terms, window = window)
-          .queryExecution.analyzed
-      }))
-    // PMI query expansion from SQL (q136's operator):
-    //   pmi_expand(table, id_col, text_col, query_terms, k[, min_joint])
-    // query_terms is a whitespace-separated literal; emits
-    // (query_term, rank, term, pmi6, joint).
-    ext.injectTableFunction((
-      new FunctionIdentifier("pmi_expand"),
-      new ExpressionInfo("graft.operators.Search", "pmi_expand"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5 || children.size == 6,
-          "usage: pmi_expand(table, id_col, text_col, query_terms, k[, min_joint])")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val terms = strLit(children(3), "query_terms")
-          .split("\\s+").toSeq.filter(_.nonEmpty)
-        require(terms.nonEmpty,
-          "pmi_expand: query_terms must contain at least one term")
-        val k = intLit(children(4), "k")
-        require(k >= 1, s"pmi_expand: k must be >= 1, got $k")
-        val minJoint = children.drop(5).headOption
-          .map(intLit(_, "min_joint")).getOrElse(3)
-        require(minJoint >= 1,
-          s"pmi_expand: min_joint must be >= 1, got $minJoint")
-        graft.operators.Search.pmiExpansion(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "text_col"),
-            terms, k = k, minJoint = minJoint.toLong)
-          .queryExecution.analyzed
-      }))
-    // Reciprocal-rank fusion from SQL (q142's operator — hybrid
-    // retrieval's merge step between a bm25_search arm and an
-    // embedding arm):
-    //   rrf_fuse(ranked_a, ranked_b, k0, k)
-    // Both tables carry (qid, rank, doc_id); emits
-    // (qid, rank, doc_id, rrf).
-    ext.injectTableFunction((
-      new FunctionIdentifier("rrf_fuse"),
-      new ExpressionInfo("graft.operators.Search", "rrf_fuse"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: rrf_fuse(ranked_a, ranked_b, k0, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val k0 = intLit(children(2), "k0")
-        val k = intLit(children(3), "k")
-        require(k0 >= 1, s"rrf_fuse: k0 must be >= 1, got $k0")
-        require(k >= 1, s"rrf_fuse: k must be >= 1, got $k")
-        graft.operators.Search.rrfFuse(
-            Seq(spark.table(strLit(children(0), "ranked_a")),
-              spark.table(strLit(children(1), "ranked_b"))),
-            k0 = k0, k = k)
-          .queryExecution.analyzed
-      }))
-    // Token-budget corpus selection from SQL (q143's operator):
-    //   select_token_budget(table, id_col, score_col, token_col, budget)
-    // Emits the selected input rows (the maximal
-    // (score DESC, md5 draw, id) prefix whose cumulative token_col
-    // fits the budget).
-    ext.injectTableFunction((
-      new FunctionIdentifier("select_token_budget"),
-      new ExpressionInfo("graft.operators.DatasetOps", "select_token_budget"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: select_token_budget(table, id_col, score_col, token_col, budget)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        // budgets are token COUNTS — routinely > Int.MaxValue at
-        // corpus scale, so this literal is read at long width
-        val budget = children(4) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-              org.apache.spark.sql.types.IntegerType) => v.toLong
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long,
-              org.apache.spark.sql.types.LongType) => v
-          case other => throw new IllegalArgumentException(
-            s"select_token_budget: budget must be an integer literal, got $other")
-        }
-        require(budget >= 0L,
-          s"select_token_budget: budget must be non-negative, got $budget")
-        graft.operators.DatasetOps.selectTokenBudget(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "id_col"), strLit(children(2), "score_col"),
-            strLit(children(3), "token_col"), budget)
-          .queryExecution.analyzed
-      }))
-    // Distributed exact order statistics from SQL (q193/q194's
-    // operators). Quantile probes ride as a comma-separated ppm
-    // literal ('250000,500000') — SQL-side callers have no array
-    // literal path into a TVF argument list here.
-    ext.injectTableFunction((
-      new FunctionIdentifier("exact_quantiles"),
-      new ExpressionInfo("graft.operators.Stats", "exact_quantiles"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: exact_quantiles(table, value_col, 'ppm1,ppm2,...')")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val ppms = strLit(children(2), "q_ppms").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty).map { t =>
-            scala.util.Try(t.toLong).getOrElse(
-              throw new IllegalArgumentException(
-                s"exact_quantiles: q_ppms must be comma-separated " +
-                  s"integers, got '$t'"))
+        DatasetOps.qualityGateExact(t, group, score, id, frac)
+    },
+    // the iterated loops run at resolution; the plan reads the
+    // checkpointed score tables
+    tvf("page_rank", table("edge_table"), column("src_col"),
+        column("dst_col"), int("iters"))(Graph.pageRank(_, _, _, _)),
+    tvf("hits", table("edge_table"), column("src_col"), column("dst_col"),
+        int("iters"))(Graph.hits(_, _, _, _)),
+    tvf("resolve_redirects", table("table"), column("src_col"),
+        column("dst_col"), int("hop_cap"))(Graph.resolveRedirects(_, _, _, _)),
+    tvf("reference_lm_score", table("docs_table"), table("ref_table"),
+        column("id_col"), column("text_col", "docs_table", "ref_table"))(
+      DatasetOps.referenceLmScores(_, _, _, _)),
+    tvf("dup_span_excise", table("table"), column("id_col"),
+        column("text_col"), int("k")) {
+      (t, id, text, k) => Dedup.exciseSpans(t, Dedup.dupSpans(t, id, text, k), id, text)
+    },
+    tvf("warc_records", table("table"), column("blob_col"))(Warc.parseRecords(_, _)),
+    tvf("http_split", table("table"), column("payload_col"))(Warc.httpSplit(_, _)),
+    tvf("robots_sitemaps", table("robots_table", "host", "txt"))(
+      Robots.sitemaps(_, "host", "txt")),
+    tvf("robots_verdicts", table("robots_table", "host", "txt"),
+        table("requests_table", "host", "agent", "upath")) {
+      (robots, reqs) => Robots.verdicts(Robots.rules(robots, "host", "txt"), reqs)
+    },
+    tvf("repetition_signals", table("table"), column("id_col"),
+        column("text_col"))(DatasetOps.repetitionSignals(_, _, _)),
+    tvf("chat_flatten", table("table"), column("id_col"), column("json_col"))(
+      ChatOps.flatten(_, _, _)),
+    tvf("chat_context_fit", table("table"), column("id_col"),
+        column("json_col"), long("budget", lo = 1))(ChatOps.fitContextFlat(_, _, _, _)),
+    tvf("preference_pairs", table("table"), column("grp_col"),
+        column("id_col"), column("score_col"), long("min_gap"))(
+      ChatOps.preferencePairs(_, _, _, _, _)),
+    tvf("best_of_n", table("table"), column("grp_col"), column("id_col"),
+        column("score_col"), int("k"), long("floor"))(ChatOps.bestOfN(_, _, _, _, _, _)),
+    tvf("importance_score", table("corpus_table"), table("target_table"),
+        column("id_col", "corpus_table", "target_table"),
+        column("text_col", "corpus_table", "target_table"), int("k").or(2))(
+      DatasetOps.importanceScores(_, _, _, _, _)),
+    // the power-of-two and ordering requires surface as analysis
+    // errors rather than mid-job failures
+    tvf("length_batches", table("table"), column("id_col"), column("text_col"),
+        int("batch_size"), int("min_bucket").or(16), int("max_bucket").or(2048),
+        int("n_shards").or(8)) {
+      (t, id, text, batch, minB, maxB, nShards) => DatasetOps.lengthBucketBatches(
+        t, id, TextFunctions.tokenCount(col(text)), batch, minB, maxB, nShards)
+    },
+    tvf("mean_pool", table("table"), column("group_col"), column("vec_col"))(
+      Similarity.meanPoolEmbeddings(_, _, _)),
+    tvf("mine_triplets", table("pairs_table", "idA", "idB", "sim"),
+        table("ids_table"), column("id_col", "ids_table"), int("n_shards").or(8))(
+      Similarity.mineTriplets(_, _, _, _)),
+    // ad-hoc keyword probes pay the index build; repeated probes
+    // should persist the postings (bm25_search_idx, or Scala)
+    tvf("bm25_search", table("table"), column("id_col"), column("text_col"),
+        str("query"), int("k")) {
+      (t, id, text, query, k) => Search.bm25TopK(queryFrame(query),
+        Search.termPostings(t, id, text), Search.corpusStats(t, id, text), k = k)
+    },
+    tvf("bm25_search_idx", table("postings_table", "term", "id", "tf", "dl")
+        .expecting("a Search.termPostings/writePostingsBucketed landing"),
+        table("lens_table", "id", "dl").expecting("a Search.docLens landing"),
+        str("query"), int("k", lo = 1)) {
+      (post, lens, query, k) =>
+        Search.bm25TopK(queryFrame(query), post, Search.statsFromLens(lens), k = k)
+    },
+    tvf("boolean_search", table("table"), column("id_col"), column("text_col"),
+        terms("must"), terms("should"), terms("must_not"), int("k")) {
+      (t, id, text, must, should, mustNot, k) => Search.booleanSearch(
+        Search.termPostings(t, id, text), must, should, mustNot, k)
+    },
+    tvf("facet_search", table("table"), column("id_col"), column("text_col"),
+        column("facet_col"), terms("must"), int("top_n")) {
+      (t, id, text, facet, must, topN) => Search.facetedSearch(
+        Search.termPostings(t, id, text), t, id, facet, must, topN)
+    },
+    tvf("skew_report", table("table"), column("key_col"),
+        long("target_rows_per_task"), int("top_n"))(ScaleOps.skewReport(_, _, _, _)),
+    tvf("histogram", table("table"), column("value_col"), int("n_bins"),
+        long("lo"), long("hi"))(DatasetOps.histogram(_, _, _, _, _)),
+    tvf("association_rules", table("table"), column("basket_col"),
+        column("item_col"), long("min_support"), int("top_n"))(
+      Association.associationRules(_, _, _, _, _)),
+    tvf("substring_search", table("table"), column("id_col"),
+        column("text_col"), str("pattern"))(Search.substringSearch(_, _, _, _)),
+    tvf("substring_search_idx", table("grams_table", "id", "gram")
+        .expecting("a Search.charGramPostings landing"), table("docs_table"),
+        column("id_col", "docs_table"), column("text_col", "docs_table"),
+        str("pattern"))(Search.substringSearchFromIndex(_, _, _, _, _)),
+    // the persisted vector indexes: each probe recovers its build
+    // geometry from the index's sidecar, never guesses
+    tvf("pq_search", index("index_dir", "Similarity.Pq.writePqIndex",
+          "codes" -> ("cid" +: (0 until Similarity.Pq.m).map(i => s"c$i"))),
+        queries("queries_table"), int("k")) {
+      (dir, q, k) => Similarity.Pq.probePqIndex(SparkSession.active, dir, q, k)
+    },
+    tvf("ivf_search", index("index_dir", "Similarity.writeIvfIndex",
+          "centroids" -> Seq("_cell", "_cent"), "cells" -> Seq("cid", "cvec", "_cell")),
+        queries("queries_table"), int("k"), int("n_probe", lo = 1)) {
+      (dir, q, k, nProbe) =>
+        Similarity.probeIvfIndex(SparkSession.active, dir, q, k, nProbe)
+    },
+    tvf("sq_search", index("index_dir", "Similarity.Sq.writeSqIndex",
+          "codes" -> Seq("cid", "codes")),
+        queries("queries_table"), int("k")) {
+      (dir, q, k) => Similarity.Sq.probeSqIndex(SparkSession.active, dir, q, k)
+    },
+    // perceptual near-dups over the 8×9 gray hex raster (image) and
+    // the loudness envelope (audio); pigeonhole-exact at
+    // bands > max_hamming, enforced by the operator
+    tvf("image_near_dup", table("table"), column("id_col"),
+        column("raster_hx_col"), int("max_hamming"), int("bands")) {
+      (t, id, hx, maxHamming, bands) => Multimodal.imageNearDupPairs(
+        t.select(col(id).as("id"), Multimodal.dHashBits(col(hx), 8, 8).as("bits")),
+        "id", "bits", maxHamming, bands)
+    },
+    tvf("audio_near_dup", table("table"), column("id_col"),
+        column("envelope_col"), int("max_hamming"), int("bands")) {
+      (t, id, env, maxHamming, bands) => Multimodal.audioNearDupPairs(
+        t.select(col(id).as("id"),
+          Multimodal.audioFingerprintBits(col(env)).as("bits"))
+          .filter(col("bits").isNotNull),
+        "id", "bits", maxHamming, bands)
+    },
+    tvf("surprisal_score", table("table"), column("id_col"),
+        column("text_col"))(DatasetOps.surprisalScores(_, _, _)),
+    tvf("mixture_waterfill", table("table"), column("source_col"),
+        column("text_col"), long("budget"), long("cap_milli"))(
+      DatasetOps.mixtureAllocation(_, _, _, _, _)),
+    tvf("phrase_match", table("table"), column("id_col"), column("text_col"),
+        terms("phrase"))(Search.phraseMatches(_, _, _, _)),
+    tvf("fuzzy_terms", table("table"), column("id_col"), column("text_col"),
+        terms("query_terms"), int("k").or(3))(Search.fuzzyTermSuggestions(_, _, _, _, _)),
+    // weights is a 'src0:3,src1:2' literal; unlisted sources weigh 1
+    tvf("interleave_sources", table("table"), column("id_col"),
+        column("source_col"), list("weights"), int("n_shards").or(8)) {
+      (t, id, source, weights, nShards) =>
+        DatasetOps.interleaveSources(t, id, source, weights.map { w =>
+          w.split(':') match {
+            case Array(src, n) if n.trim.matches("\\d+") => src.trim -> n.trim.toLong
+            case _ => refuse(s"interleave_sources: weights must look like " +
+              s"'src0:3,src1:2', got '$w'")
           }
-        graft.operators.Stats.exactQuantiles(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "value_col"), ppms)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("equidepth_hist"),
-      new ExpressionInfo("graft.operators.Stats", "equidepth_hist"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "usage: equidepth_hist(table, value_col, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Stats.equiDepthHistogram(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "value_col"), intLit(children(2), "k"))
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("grouped_quantiles"),
-      new ExpressionInfo("graft.operators.Stats", "grouped_quantiles"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: grouped_quantiles(table, group_col, value_col, 'ppm1,ppm2,...')")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val ppms = strLit(children(3), "q_ppms").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty).map { t =>
-            scala.util.Try(t.toLong).getOrElse(
-              throw new IllegalArgumentException(
-                s"grouped_quantiles: q_ppms must be comma-separated " +
-                  s"integers, got '$t'"))
-          }
-        graft.operators.Stats.groupedExactQuantiles(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "group_col"),
-            strLit(children(2), "value_col"), ppms)
-          .queryExecution.analyzed
-      }))
-    ext.injectTableFunction((
-      new FunctionIdentifier("table_profile"),
-      new ExpressionInfo("graft.operators.Stats", "table_profile"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "usage: table_profile(table, 'col1,col2,...')")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val cols_ = strLit(children(1), "cols").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        require(cols_.nonEmpty,
-          "table_profile: at least one column required")
-        graft.operators.Stats.profile(
-            spark.table(strLit(children(0), "table")), cols_)
-          .queryExecution.analyzed
-      }))
-    // Count-min point estimates from SQL (q192's operator): builds
-    // the d×w grid over the named column and probes the
-    // comma-separated terms in one call (the ad-hoc tier — the Scala
-    // surface persists the grid for build-once/probe-many).
-    ext.injectTableFunction((
-      new FunctionIdentifier("count_min_probe"),
-      new ExpressionInfo("graft.operators.Sketches", "count_min_probe"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: count_min_probe(table, term_col, depth, width, 'p1,p2,...')")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val probes = strLit(children(4), "probes").split(",").toSeq
-          .map(_.trim).filter(_.nonEmpty)
-        require(probes.nonEmpty,
-          "count_min_probe: at least one probe term required")
-        val depth = intLit(children(2), "depth")
-        val width = intLit(children(3), "width")
-        val sketch = graft.operators.Sketches.countMinBuild(
-          spark.table(strLit(children(0), "table")),
-          strLit(children(1), "term_col"), depth, width)
+        }.toMap, nShards = nShards)
+    },
+    tvf("mmr_rerank", table("ranked_table", "qid", "rank", "cid"),
+        table("vectors_table", "id", "vec"), int("m"), int("k"))(
+      Search.mmrRerank(_, _, _, _)),
+    tvf("best_snippets", table("table"), column("id_col"), column("text_col"),
+        terms("query_terms"), int("window").or(16))(Search.bestSnippets(_, _, _, _, _)),
+    tvf("pmi_expand", table("table"), column("id_col"), column("text_col"),
+        terms("query_terms"), int("k"), long("min_joint").or(3L))(
+      Search.pmiExpansion(_, _, _, _, _, _)),
+    tvf("rrf_fuse", ranked("ranked_a"), ranked("ranked_b"), int("k0"), int("k")) {
+      (a, b, k0, k) => Search.rrfFuse(Seq(a, b), k0, k)
+    },
+    // budgets are token COUNTS, routinely > Int.MaxValue at corpus scale
+    tvf("select_token_budget", table("table"), column("id_col"),
+        column("score_col"), column("token_col"), long("budget"))(
+      DatasetOps.selectTokenBudget(_, _, _, _, _)),
+    tvf("exact_quantiles", table("table"), column("value_col"), ppms("q_ppms"))(
+      Stats.exactQuantiles(_, _, _)),
+    tvf("equidepth_hist", table("table"), column("value_col"), int("k"))(
+      Stats.equiDepthHistogram(_, _, _)),
+    tvf("grouped_quantiles", table("table"), column("group_col"),
+        column("value_col"), ppms("q_ppms"))(Stats.groupedExactQuantiles(_, _, _, _)),
+    tvf("table_profile", table("table"), columns("cols"))(Stats.profile(_, _)),
+    // the ad-hoc sketch tiers: the Scala surface persists and merges
+    // the count-min grid and the KMV min-sets for build-once/probe-many
+    tvf("count_min_probe", table("table"), column("term_col"), int("depth"),
+        int("width"), list("probes")) {
+      (t, term, depth, width, probes) =>
+        require(probes.nonEmpty, "count_min_probe: at least one probe term required")
+        val spark = SparkSession.active
         import spark.implicits._
-        graft.operators.Sketches.countMinEstimate(sketch,
-            probes.toDF("term"), "term", depth, width)
-          .queryExecution.analyzed
-      }))
-    // KMV distinct-count estimates from SQL (q248's operator — the
-    // cardinality sibling of count_min_probe's frequency estimates):
-    // per-group k-minimum-values sketch over the named item column,
-    // emitting (group, n_distinct_est). The ad-hoc tier — the Scala
-    // surface (kmvMins/kmvMergeMins + DocIngest.runKmvIngest)
-    // persists and merges min-sets for build-once/probe-many.
-    ext.injectTableFunction((
-      new FunctionIdentifier("kmv_distinct"),
-      new ExpressionInfo("graft.operators.Sketches", "kmv_distinct"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "usage: kmv_distinct(table, group_col, item_col, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val k = intLit(children(3), "k")
-        require(k >= 2, s"kmv_distinct: k must be >= 2, got $k")
-        val grp = strLit(children(1), "group_col")
-        graft.operators.Sketches.kmvEstimate(
-            graft.operators.Sketches.kmvMins(
-              spark.table(strLit(children(0), "table")),
-              Seq(grp), strLit(children(2), "item_col"), k),
-            Seq(grp), k)
-          .queryExecution.analyzed
-      }))
-    // Weighted deterministic sampling from SQL (q199's operator).
-    ext.injectTableFunction((
-      new FunctionIdentifier("weighted_sample"),
-      new ExpressionInfo("graft.operators.DatasetOps", "weighted_sample"),
-      (children: Seq[Expression]) => {
-        require(children.size == 5,
-          "usage: weighted_sample(table, group_col, id_col, weight_col, k)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.DatasetOps.weightedPrioritySample(
-            spark.table(strLit(children(0), "table")),
-            strLit(children(1), "group_col"), strLit(children(2), "id_col"),
-            strLit(children(3), "weight_col"), intLit(children(4), "k"))
-          .queryExecution.analyzed
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_clean"),
-      new ExpressionInfo(classOf[NfcClean].getName, "nfc_clean"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "nfc_clean expects exactly 1 argument")
-        NfcClean(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaccard_sim_sorted"),
-      new ExpressionInfo(classOf[JaccardSimilaritySorted].getName,
-        "jaccard_sim_sorted"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "jaccard_sim_sorted expects exactly 2 arguments")
-        JaccardSimilaritySorted(children.head, children(1))
-      }))
+        Sketches.countMinEstimate(Sketches.countMinBuild(t, term, depth, width),
+          probes.toDF("term"), "term", depth, width)
+    },
+    tvf("kmv_distinct", table("table"), column("group_col"), column("item_col"),
+        int("k")) {
+      (t, group, item, k) =>
+        Sketches.kmvEstimate(Sketches.kmvMins(t, Seq(group), item, k), Seq(group), k)
+    },
+    tvf("weighted_sample", table("table"), column("group_col"), column("id_col"),
+        column("weight_col"), int("k"))(DatasetOps.weightedPrioritySample(_, _, _, _, _)))
+}
+
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    for (d <- GraftExtensions.scalarDoors)
+      ext.injectFunction((FunctionIdentifier(d.name), d.info,
+        (c: Seq[Expression]) => d(c)))
+    for (d <- GraftExtensions.tableDoors)
+      ext.injectTableFunction((FunctionIdentifier(d.name), d.info,
+        (c: Seq[Expression]) => d(c)))
+    // the top-k-per-group plan node's strategy (logical node +
+    // strategy + physical heaps; see graft.plans) …
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
+    // … and the optimizer rule that gives the SQL/window idiom
+    // (`filter(row_number() over (...) <= k)`) the same bounded-heap plan
+    ext.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
   }
 }
