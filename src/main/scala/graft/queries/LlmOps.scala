@@ -120,11 +120,6 @@ object LlmOps extends LlmOpsDedupAnn with LlmOpsCorpus with LlmOpsIndexes
             .write.mode("overwrite").parquet(out)
       })
 
-
-  /** Dev-tool seam (Scratch stage-attribution probes). */
-  private[graft] def mlDocsPublic(s: SparkSession, d: String): DataFrame =
-    mlDocs(s, d)
-
   def all: Seq[GraftQuery] =
     Seq(q38, q39, q40, q41, q42, q43, q44, q45, q46, q47, q48, q49, q50,
       q51, q52, q53, q54, q55, q60, q63, q64, q65, q66, q67, q68, q69,

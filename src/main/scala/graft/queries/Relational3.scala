@@ -258,8 +258,8 @@ object Relational3 {
   // SEPARATE aggregates joined on the 6-row group key (broadcast):
   // one combined aggregate plans the multi-distinct Expand (rows × 3)
   // and drags the 2^14-register HLL++ buffers through the expanded
-  // stream — measured 5.8 s combined vs 0.95 + 1.7 s split at sf0.1
-  // (Scratch q70x), and at 100 TB the Expand triples shuffle input.
+  // stream — measured 5.8 s combined vs 0.95 + 1.7 s split at sf0.1,
+  // and at 100 TB the Expand triples shuffle input.
 
   private val q70 = GraftQuery(
     "q70_distinct_approx",

@@ -4,22 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession shared by every suite (sbt forks a single test
   * JVM; session startup is ~5s, so per-suite sessions would dominate
-  * the runtime). */
+  * the runtime). Built by the production factory; the warehouse dir
+  * goes in as a system property, which the session's `SparkConf`
+  * reads at build time. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft_test_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    sys.props("spark.sql.warehouse.dir") =
+      sys.props("java.io.tmpdir") + "/graft_test_warehouse"
+    GraftSession.local(4, "graft-test", 4)
   }
 }
