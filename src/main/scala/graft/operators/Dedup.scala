@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -195,6 +195,35 @@ object Dedup {
       .select(col("idA"), col("idB"), col("jaccard"))
   }
 
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+
+  /** One fixpoint session per (caller session, width), its conf set
+    * once here and never again, so concurrent [[clusterReps]] calls
+    * can share it. The codegen cache is keyed by (class loader, code)
+    * and each session compiles under its own class loader, so a
+    * session built per call recompiled the rounds' classes on every
+    * call, byte-identical code included (q197: 21 classes a run at
+    * sf0.001). Weakly keyed by the caller's session, so a stopped,
+    * unreferenced session and its fixpoint sessions are collected (a
+    * child does not reference its parent). The width is at most the
+    * caller's shuffle width, so a session holds at most that many
+    * children. */
+  private val fixpointSessions = new graft.sources.SessionMemo[SparkSession]
+
+  private def fixpointSession(sess: SparkSession, pFix: Long): SparkSession =
+    fixpointSessions.getOrElseCompute(sess, pFix.toString) {
+      val fix = sess.newSession()
+      fix.conf.set(ShufflePartitionsKey, pFix.toString)
+      // AQE off for the rounds: its per-exchange query-stage scheduling
+      // adds a job round trip to each of the ~6 exchanges per round —
+      // measured ~0.65s/round of pure stage latency on a 2k-edge graph.
+      // The fixpoint's shuffles are explicitly sized by the width,
+      // which is the only thing AQE would do for fixed-width
+      // (id, label) tuples.
+      fix.conf.set("spark.sql.adaptive.enabled", "false")
+      fix
+    }
+
   /** Duplicate-cluster resolution: turn pairwise near-dup verdicts
     * (idA, idB) into per-node cluster representatives — the step
     * between "these pairs are duplicates" and "keep one doc per
@@ -244,28 +273,19 @@ object Dedup {
     // scheduler tax (32 partitions × a handful of rows each), while a
     // 100 TB corpus's billions of edges still get the full session
     // width (50k edges/partition). The narrowed width and AQE-off are
-    // SCOPED to a child session (`newSession()` shares the
-    // SparkContext but owns its conf — VERDICT r4 item 6): queries
-    // planned concurrently on the caller's session keep its width, no
-    // restore step, no one-loop-at-a-time contract. The materialized
-    // `sym` RDD crosses sessions directly (localCheckpoint pins it in
-    // the shared context — `internalRdd` keeps it in InternalRow form,
-    // no Row round trip), and the converged labels are re-bound to the
-    // caller's session on the way out.
+    // SCOPED to a child session ([[fixpointSession]]: `newSession()`
+    // shares the SparkContext but owns its conf — VERDICT r4 item 6):
+    // queries planned concurrently on the caller's session keep its
+    // width, no restore step, no one-loop-at-a-time contract. The
+    // materialized `sym` RDD crosses sessions directly (localCheckpoint
+    // pins it in the shared context — `internalRdd` keeps it in
+    // InternalRow form, no Row round trip), and the converged labels
+    // are re-bound to the caller's session on the way out.
     val nEdges = symObs.get("n").asInstanceOf[Long]
     val sess = pairs.sparkSession
-    val fixSess = sess.newSession()
-    val pKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
     val pFix = math.max(1L,
-      math.min(sess.conf.get(pKey).toLong, nEdges / 50000L + 1L))
-    fixSess.conf.set(pKey, pFix.toString)
-    // AQE off for the rounds: its per-exchange query-stage scheduling
-    // adds a job round trip to each of the ~6 exchanges per round —
-    // measured ~0.65s/round of pure stage latency on a 2k-edge graph.
-    // The fixpoint's shuffles are explicitly sized above, which is the
-    // only thing AQE would do for fixed-width (id, label) tuples.
-    fixSess.conf.set(aqeKey, "false")
+      math.min(sess.conf.get(ShufflePartitionsKey).toLong, nEdges / 50000L + 1L))
+    val fixSess = fixpointSession(sess, pFix)
     locally {
       // the materialized symmetric edge list, re-bound to the fixpoint
       // session so every loop plan sees the narrowed conf; the bridge

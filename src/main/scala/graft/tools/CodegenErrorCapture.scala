@@ -16,7 +16,7 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
   * this on the PQ ADC LUT build, firing on every execution of a
   * serving path). Only a counter makes it loud: this installs a
   * log4j2 appender on the root logger that counts ERROR events from
-  * the codegen classes, so specs (CodegenHealthSpec, SimilaritySpec)
+  * the codegen classes, so specs (RegistryAuditSpec, SimilaritySpec)
   * can assert a plan actually compiled and [[graft.Bench]] can stamp
   * per-query fallback counts into the artifact the judge reads.
   *

@@ -236,6 +236,24 @@ class DedupSpec extends AnyFunSuite {
     assert(spark.conf.get(pKey) == before)
   }
 
+  test("clusterReps at two fixpoint widths labels both graphs and leaves the caller's conf") {
+    // the fixpoint width is one partition per 50k symmetric edges
+    // (capped at the session's), so a 25,001-leaf star runs at width 2
+    // and a 3-node path at width 1: two memoized fixpoint sessions, each
+    // used again on a second call
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val before = keys.map(spark.conf.get)
+    val star = (1L to 25001L).map(i => (0L, i)).toDF("idA", "idB")
+    val path = Seq((7L, 8L), (8L, 9L)).toDF("idA", "idB")
+    for (_ <- 1 to 2) {
+      val starReps = Dedup.clusterReps(star).as[(Long, Long)].collect()
+      assert(starReps.length == 25002 && starReps.forall(_._2 == 0L))
+      assert(Dedup.clusterReps(path).as[(Long, Long)].collect().toMap ==
+        Map(7L -> 7L, 8L -> 7L, 9L -> 7L))
+      assert(keys.map(spark.conf.get) == before)
+    }
+  }
+
   test("clusterReps output is bound to the caller's session, not the fixpoint child") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("idA", "idB")
     val reps = Dedup.clusterReps(pairs)
