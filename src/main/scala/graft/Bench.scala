@@ -85,6 +85,15 @@ import org.apache.spark.sql.SparkSession
   *     `isolation.capped_out`. A healthy run has `tainted: []` with
   *     nothing to isolate. */
 object Bench {
+  /** Where a run writes its full artifact. Only a full-battery run
+    * writes `target/bench_full.json`, the file the next run reads as
+    * its trailing reference; a run restricted by `SPARK_GRAFT_ONLY`
+    * writes `target/bench_full_focused.json`, so a focused run cannot
+    * replace that reference with a handful of rows. */
+  private[graft] def artifactPath(focused: Boolean): java.nio.file.Path =
+    java.nio.file.Paths.get("target",
+      if (focused) "bench_full_focused.json" else "bench_full.json")
+
   /** Fixed-work single-threaded spin: xorshift64* over a constant
     * iteration count. Returns (seconds, checksum) — the checksum is
     * printed into the JSON so the JIT cannot dead-code the loop. */
@@ -225,8 +234,8 @@ object Bench {
     }
 
     // Trailing-run reference (VERDICT r7 item 7): the previous run's
-    // own full artifact (target/bench_full.json — read BEFORE this
-    // run overwrites it; the driver-side BENCH_r*.json wrappers hold
+    // own full artifact (`artifactPath(focused = false)` — read BEFORE
+    // this run overwrites it; the driver-side BENCH_r*.json wrappers hold
     // a front-truncated stdout capture and cannot be parsed), or
     // SPARK_GRAFT_BENCH_REF. A row whose min blows past 2× its
     // trailing min at the SAME sf is usually battery variance, not a
@@ -238,7 +247,7 @@ object Bench {
     val (refName, refMins): (String, Map[String, Double]) = {
       val refPath = sys.env.get("SPARK_GRAFT_BENCH_REF")
         .map(java.nio.file.Paths.get(_))
-        .getOrElse(java.nio.file.Paths.get("target", "bench_full.json"))
+        .getOrElse(artifactPath(focused = false))
       (try {
         val txt = java.nio.file.Files.readString(refPath)
         // a ref timed at a different scale factor adjudicates nothing
@@ -474,12 +483,12 @@ object Bench {
     // self-reported artifact (VERDICT r3 item 7): the driver captures
     // stdout's tail, which can truncate the per-query map — persist the
     // full line so every query's time survives the capture window
+    val outPath = artifactPath(focused = onlyFilter.isDefined)
     try {
-      val outPath = java.nio.file.Paths.get("target", "bench_full.json")
       java.nio.file.Files.createDirectories(outPath.getParent)
       java.nio.file.Files.writeString(outPath, line + "\n")
     } catch { case e: Exception =>
-      System.err.println(s"[bench] could not write target/bench_full.json: $e")
+      System.err.println(s"[bench] could not write $outPath: $e")
     }
     if (results.exists(r => r._3.isEmpty || r._4.isEmpty)) sys.exit(1)
   }

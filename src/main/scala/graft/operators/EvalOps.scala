@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.types._
 
 /** Eval-harness aggregation over model-sample tables — the scoring
   * mile downstream of the data pipeline (q326's exact-match/F1 family,
@@ -365,25 +367,33 @@ object EvalOps {
     * inflation (2n·s div x ≠ 2·(n·s div x)), which is exactly why
     * the dedup seam exists.
     *
-    * Scale shape (the q153 loop discipline): duels and wins are
-    * STATIC map-side-combined aggregates, localCheckpointed once; each
-    * round joins the ratings twice on the duel endpoints (inherent —
-    * the update needs p_i + p_j) and is therefore checkpointed every
-    * round, so lineage stays linear and per-round state is one
-    * items-sized table. iters ≤ 20 (each round is a duels shuffle).
+    * Scale shape: Spark builds the directed duel census once, as one
+    * map-side-combined aggregate over the outcome log: a row per
+    * directed (winner, loser) pair and a self row per item carrying
+    * its games and wins. That census is at most items² rows whatever
+    * the log's size; the driver collects it under
+    * [[BtCensusRowBound]] (above it the call refuses) and runs the
+    * `iters` integer rounds in a plain Long loop with the same
+    * div/greatest arithmetic and both overflow guards, so the call
+    * costs the census's jobs whatever `iters` is. Item keys must
+    * compare on the driver as Spark compares them: integral, decimal,
+    * string, boolean, date and timestamp items are accepted;
+    * floating-point, binary and complex ones are refused, naming the
+    * column and its type. A row with a NULL winner or loser plays no
+    * game.
     *
-    * @return (item, games, wins, rating) — rating integer at `scale`;
-    *         compose with orderBy/limit for the board
-    *         (TakeOrderedAndProject keeps that bounded). */
+    * @return (item, games, wins, rating) as a local relation — rating
+    *         integer at `scale`; compose with orderBy/limit for the
+    *         board. */
   def bradleyTerry(outcomes: DataFrame, winnerCol: String,
                    loserCol: String, iters: Int = 4,
                    scale: Long = 1000000L,
                    dedupIdCol: Option[String] = None): DataFrame = {
+    checkBtArgs(iters, scale)
+    checkKeyTypes("bradleyTerry", outcomes, winnerCol, loserCol)
     val rows0 = dedupIdCol.map(outcomes.dropDuplicates(_)).getOrElse(outcomes)
-    bradleyTerryFromGames(rows0
-      .select(col(winnerCol).as("_w"), col(loserCol).as("_l"),
-        lit(1L).as("_n")),
-      iters, scale)
+    btBoard(rows0.select(sides(winnerCol, loserCol) :+ lit(1L).as("_n"): _*),
+      Nil, iters, scale, "bradleyTerry", None)
   }
 
   /** [[bradleyTerry]] over a pre-aggregated DUEL CENSUS (r16 —
@@ -396,86 +406,168 @@ object EvalOps {
     * census representation surrenders is the outcome-id audit seam,
     * which is exactly the tradeoff [[graft.streaming.DocIngest
     * .runOutcomeCensusIngest]] documents. Counts must be >= 1 —
-    * a zero or negative count is a corrupted census, refused loudly
-    * (one eval-sized scan). */
+    * a zero, negative or NULL count is a corrupted census, refused
+    * loudly (counted inside the duel-census aggregate, no extra
+    * scan). */
   def bradleyTerryCensus(census: DataFrame, winnerCol: String,
                          loserCol: String, nCol: String, iters: Int = 4,
                          scale: Long = 1000000L): DataFrame = {
-    val bad = census.filter(col(nCol).isNull || col(nCol) < 1L).count()
-    require(bad == 0L,
-      s"bradleyTerryCensus: $bad census rows carry a NULL or " +
-        s"non-positive $nCol — a duel census counts games, so every " +
-        s"row must hold >= 1")
-    bradleyTerryFromGames(census
-      .select(col(winnerCol).as("_w"), col(loserCol).as("_l"),
-        col(nCol).cast(LongType).as("_n")),
-      iters, scale)
+    checkBtArgs(iters, scale)
+    checkKeyTypes("bradleyTerryCensus", census, winnerCol, loserCol)
+    btBoard(census.select(sides(winnerCol, loserCol) :+
+        col(nCol).cast(LongType).as("_n"): _*),
+      Nil, iters, scale, "bradleyTerryCensus", Some(nCol))
   }
 
-  /** The shared MM core over weighted game rows (_w, _l, _n): the
-    * [[bradleyTerry]] contract verbatim — counted rows and summed
-    * counts are the same censuses by construction. */
-  private def bradleyTerryFromGames(rows: DataFrame, iters: Int,
-                                    scale: Long): DataFrame = {
+  /** Most duel-census rows one Bradley–Terry call collects to the
+    * driver. The census holds at most items² rows per (group,
+    * replicate) slice — every directed pair plus a self row per item:
+    * 49 for q346's 7 models, 13 · 49 for q356. A million rows is one
+    * board of ~1,000 items, or ~1,000/√slices items per slice. */
+  val BtCensusRowBound: Int = 1000000
+
+  /** Collects `df` when it holds at most `bound` rows, else refuses,
+    * naming the operator `op`: the limit keeps an oversized census off
+    * the driver. */
+  private[graft] def collectBounded(df: DataFrame, op: String,
+                                    bound: Int = BtCensusRowBound): Array[Row] = {
+    val rows = df.limit(bound + 1).collect()
+    require(rows.length <= bound,
+      s"$op: the duel census holds more than $bound rows (items² per " +
+        s"slice), and the rating rounds run on the driver over the " +
+        s"whole census; rate fewer items per call")
+    rows
+  }
+
+  private def checkBtArgs(iters: Int, scale: Long): Unit = {
     require(iters >= 1 && iters <= 20,
-      s"iters must be in [1, 20] (each is a duels shuffle), got $iters")
+      s"iters must be in [1, 20] (the round count is part of the " +
+        s"replayed integer contract, which the oracle unrolls round by " +
+        s"round), got $iters")
     require(scale >= 1000L && scale <= 1000000L,
       s"scale must be in [1e3, 1e6] (keeps n·scale·10⁶ int64-safe for " +
         s"n up to ~9e6 games per pair), got $scale")
-    val sk = scale * 1000000L // the micro-unit factor (see scaladoc)
-    val games = rows.filter(col("_w") =!= col("_l"))
-    // static spine: per-item totals + the DIRECTED duel census (each
-    // unordered pair appears under both endpoints, so one groupBy(a)
-    // per round covers every denominator term)
-    val wins = games.groupBy(col("_w").as("item"))
-      .agg(sum(col("_n")).as("wins"))
-    val losses = games.groupBy(col("_l").as("item"))
-      .agg(sum(col("_n")).as("losses"))
-    val items = wins.select(col("item"), col("wins"))
-      .join(losses, Seq("item"), "full")
-      .select(col("item"),
-        coalesce(col("wins"), lit(0L)).as("wins"),
-        (coalesce(col("wins"), lit(0L)) + coalesce(col("losses"), lit(0L)))
-          .as("games"))
-      .localCheckpoint()
-    val duels = games
-      .select(col("_w").as("a"), col("_l").as("b"), col("_n"))
-      .union(games.select(col("_l").as("a"), col("_w").as("b"),
-        col("_n")))
-      .groupBy(col("a"), col("b")).agg(sum(col("_n")).as("n"))
-      .localCheckpoint()
-    // numerator overflow guard: (wins+1)·scale·10⁶ must stay int64 —
-    // a one-scan check on the materialized spine, loud not silent
-    val maxW = Long.MaxValue / sk - 2L
-    require(items.filter(col("wins") > maxW).isEmpty,
-      s"bradleyTerry: an item exceeds $maxW wins — (wins+1)·scale·10⁶ " +
-        s"would overflow int64; lower `scale`")
-    // the matching DENOMINATOR guard (ADVICE r14): each round computes
-    // n·scale·10⁶ div (p_i + p_j) per duel pair, so a pair with more
-    // than Long.MaxValue/(scale·10⁶) games (~9.2e6 at scale = 1e6)
-    // would overflow silently — refuse loudly on the same static spine
-    val maxN = Long.MaxValue / sk
-    require(duels.filter(col("n") > maxN).isEmpty,
-      s"bradleyTerry: a duel pair exceeds $maxN games — n·scale·10⁶ " +
-        s"would overflow int64 in the denominator sum; lower `scale`")
-    var r = items.select(col("item"), lit(scale).as("p"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val dsum = duels
-        .join(r.select(col("item").as("a"), col("p").as("_pa")), Seq("a"))
-        .join(r.select(col("item").as("b"), col("p").as("_pb")), Seq("b"))
-        .groupBy(col("a").as("item"))
-        .agg(sum(expr(s"n * ${sk}L div (_pa + _pb)")).as("_dd"))
-      r = items.join(r, Seq("item"))
-        .join(dsum, Seq("item"), "left")
-        .select(col("item"),
-          expr(s"(wins + 1L) * ${sk}L div greatest(coalesce(_dd, 0L) " +
-            s"+ 2L * ${sk}L div (p + ${scale}L), 1L)").as("p"))
-        .localCheckpoint()
+  }
+
+  /** Refuses key columns whose collected values do not compare as
+    * Spark's grouping compares them: the driver-side rounds find items
+    * and groups by JVM equality, under which -0.0 ≠ 0.0, byte arrays
+    * compare by reference, and a collated string is not its
+    * case-folded twin. */
+  private def checkKeyTypes(op: String, df: DataFrame, cols: String*): Unit =
+    cols.foreach { c =>
+      val t = df.select(col(c)).schema.head.dataType
+      val jvmEqual = t match {
+        case ByteType | ShortType | IntegerType | LongType | StringType |
+             BooleanType | DateType | TimestampType | TimestampNTZType |
+             _: DecimalType => true
+        case _ => false
+      }
+      require(jvmEqual, s"$op: column `$c` has type ${t.simpleString}; " +
+        s"Bradley–Terry item and group keys must be integral, decimal, " +
+        s"string, boolean, date or timestamp")
     }
-    items.join(r, Seq("item"))
-      .select(col("item"), col("games"), col("wins"),
-        col("p").as("rating"))
+
+  /** The winner and loser columns as `_w` and `_l`, at their common
+    * type: both are the one item key. */
+  private def sides(winnerCol: String, loserCol: String): Seq[Column] = {
+    val wl = array(col(winnerCol), col(loserCol))
+    Seq(wl(0).as("_w"), wl(1).as("_l"))
+  }
+
+  /** The directed duel census of game rows (keys…, _w, _l, _n), as one
+    * map-side-combined aggregate: per key, a row per directed pair
+    * (a, b) with its games `n`, and a self row (a = b) per item whose
+    * `n` is its games and `wins` its wins — all the MM rounds read. A
+    * row that plays no game (a NULL item, or a self-duel) lands on the
+    * (NULL, NULL) pair, so `bad`, the rows whose count is NULL or
+    * below 1, counts every input row. */
+  private def duelCensus(games: DataFrame, keys: Seq[String]): DataFrame = {
+    val (w, l, n, zero) = (col("_w"), col("_l"), col("_n"), lit(0L))
+    val bad = when(n.isNull || n < 1L, 1L).otherwise(0L)
+    val none = lit(null).cast(games.schema("_w").dataType)
+    def entry(a: Column, b: Column, n: Column, wins: Column, bad: Column) =
+      struct(a.as("a"), b.as("b"), n.as("n"), wins.as("wins"), bad.as("bad"))
+    games.select(keys.map(col) :+ inline(
+        when(w =!= l, array(entry(w, l, n, zero, bad),
+            entry(l, w, n, zero, zero), entry(w, w, n, n, zero),
+            entry(l, l, n, zero, zero)))
+          .otherwise(array(entry(none, none, zero, zero, bad)))): _*)
+      .groupBy((keys :+ "a" :+ "b").map(col): _*)
+      .agg(sum("n").as("n"), sum("wins").as("wins"), sum("bad").as("bad"))
+  }
+
+  /** The shared Bradley–Terry core over game rows (keys…, _w, _l, _n):
+    * Spark builds the [[duelCensus]], the driver collects it and runs
+    * each key's rounds, and the board (keys…, item, games, wins,
+    * rating) comes back as a local relation. `nCol` names a census's
+    * count column, whose NULL or non-positive rows are refused; game
+    * rows that count 1 each pass None. */
+  private def btBoard(games: DataFrame, keys: Seq[String], iters: Int,
+                      scale: Long, op: String,
+                      nCol: Option[String]): DataFrame = {
+    val census = collectBounded(duelCensus(games, keys), op)
+    val k = keys.length // a census row: keys…, a, b, n, wins, bad
+    nCol.foreach { c =>
+      val bad = census.iterator.map(_.getLong(k + 4)).sum
+      require(bad == 0L,
+        s"$op: $bad census rows carry a NULL or non-positive $c — a " +
+          s"duel census counts games, so every row must hold >= 1")
+    }
+    val live = census.filterNot(_.isNullAt(k))
+    def isSelf(r: Row) = r.get(k) == r.get(k + 1)
+    val sk = scale * 1000000L // the micro-unit factor (see scaladoc)
+    // numerator overflow guard: (wins+1)·scale·10⁶ must stay int64
+    val maxW = Long.MaxValue / sk - 2L
+    require(!live.exists(r => isSelf(r) && r.getLong(k + 3) > maxW),
+      s"$op: an item exceeds $maxW wins — (wins+1)·scale·10⁶ would " +
+        s"overflow int64; lower `scale`")
+    // the matching DENOMINATOR guard (ADVICE r14): each round computes
+    // n·scale·10⁶ div (p_i + p_j) per duel pair
+    val maxN = Long.MaxValue / sk
+    require(!live.exists(r => !isSelf(r) && r.getLong(k + 2) > maxN),
+      s"$op: a duel pair exceeds $maxN games — n·scale·10⁶ would " +
+        s"overflow int64 in the denominator sum; lower `scale`")
+    val board = live.groupBy(r => (0 until k).map(r.get)).toSeq.flatMap {
+      case (key, slice) =>
+        val (items, duels) = slice.partition(isSelf)
+        val at = items.iterator.map(_.get(k)).zipWithIndex.toMap
+        val p = mmRounds(items.map(_.getLong(k + 3)),
+          duels.map(r => at(r.get(k))), duels.map(r => at(r.get(k + 1))),
+          duels.map(_.getLong(k + 2)), iters, scale)
+        items.indices.map(i => Row.fromSeq(key ++ Seq(items(i).get(k),
+          items(i).getLong(k + 2), items(i).getLong(k + 3), p(i))))
+    }
+    val schema = StructType(keys.map(games.schema(_)) ++ Seq(
+      StructField("item", games.schema("_w").dataType),
+      StructField("games", LongType, nullable = false),
+      StructField("wins", LongType, nullable = false),
+      StructField("rating", LongType)))
+    games.sparkSession.createDataFrame(board.asJava, schema)
+  }
+
+  /** The integer MM rounds of one comparison graph: item i has
+    * `wins(i)`; duel j is `n(j)` games between items `a(j)` and
+    * `b(j)`, listed under both endpoints, so summing duels by `a`
+    * covers every denominator term. Long `/` truncates like Spark's
+    * `div`, and the exact adds and multiplies throw on overflow as
+    * Spark's ANSI arithmetic does. */
+  private def mmRounds(wins: Array[Long], a: Array[Int], b: Array[Int],
+                       n: Array[Long], iters: Int,
+                       scale: Long): Array[Long] = {
+    import java.lang.Math.{addExact, multiplyExact}
+    val sk = scale * 1000000L
+    var p = Array.fill(wins.length)(scale)
+    for (_ <- 1 to iters) {
+      val dd = new Array[Long](wins.length)
+      for (j <- a.indices)
+        dd(a(j)) = addExact(dd(a(j)),
+          multiplyExact(n(j), sk) / addExact(p(a(j)), p(b(j))))
+      p = Array.tabulate(wins.length)(i =>
+        multiplyExact(wins(i) + 1L, sk) / math.max(
+          addExact(dd(i), 2L * sk / addExact(p(i), scale)), 1L))
+    }
+    p
   }
 
   /** Bradley-Terry ratings WITH uncertainty (r15 — VERDICT r14
@@ -494,11 +586,12 @@ object EvalOps {
     * All `b` replicates run as ONE STACKED FRAME keyed by a replicate
     * column — plus the FULL set as replicate −1, which yields the
     * point ratings from the same machinery (and lets the spec pin
-    * stacked ≡ plain [[bradleyTerry]] bit for bit). Each MM round is
-    * therefore `iters` joins/shuffles TOTAL, not per replicate; the
-    * stacked frame is ~(1 + b·frac) × outcomes — eval-sized, not
-    * corpus-sized. Census, anchor, micro-unit and overflow guards are
-    * the [[bradleyTerry]] contract verbatim, applied per replicate.
+    * stacked ≡ plain [[bradleyTerry]] bit for bit). One duel census
+    * covers every replicate, and each replicate is one slice of the
+    * driver-side rounds; the stacked frame is ~(1 + b·frac) ×
+    * outcomes — eval-sized, not corpus-sized. Census, anchor,
+    * micro-unit, overflow guards and key types are the
+    * [[bradleyTerry]] contract verbatim, applied per replicate.
     *
     * An item whose every game missed a replicate's draw simply has no
     * rating there; its CI census shrinks (n_replicates per item) and
@@ -528,30 +621,31 @@ object EvalOps {
     * bootstrap convention: an outcome's replicate membership is a
     * function of (salt, k, id), group-independent.
     *
-    * Scale shape: identical to the scalar form — the group key rides
-    * every aggregate/join key, so groups parallelize across the
-    * cluster and each MM round is still `iters` shuffles TOTAL. */
+    * Scale shape: the stacked games stay distributed up to one
+    * map-side-combined duel census keyed (group, replicate, winner,
+    * loser), at most groups · (b + 1) · items² rows. The driver
+    * collects it under [[BtCensusRowBound]] (above it the call
+    * refuses) and runs each (group, replicate) slice's `iters`
+    * integer rounds in a Long loop; the nearest-rank bounds then run
+    * in Spark over that board, a local relation. */
   def bradleyTerryCiBy(outcomes: DataFrame, grpCol: String,
                        winnerCol: String, loserCol: String,
                        idCol: String, iters: Int = 4,
                        scale: Long = 1000000L, b: Int = 20,
                        frac: Double = 0.5, salt: String = "bt",
                        loPct: Int = 5, hiPct: Int = 95): DataFrame = {
-    require(iters >= 1 && iters <= 20,
-      s"iters must be in [1, 20] (each is a duels shuffle), got $iters")
-    require(scale >= 1000L && scale <= 1000000L,
-      s"scale must be in [1e3, 1e6], got $scale")
+    checkBtArgs(iters, scale)
     require(b >= 10 && b <= 500,
       s"b must be in [10, 500] (each replicate multiplies the stacked " +
         s"frame), got $b")
     require(frac > 0.0 && frac < 1.0, s"frac must be in (0, 1), got $frac")
     require(loPct >= 1 && hiPct <= 99 && loPct < hiPct,
       s"percentiles must satisfy 1 <= lo < hi <= 99, got ($loPct, $hiPct)")
-    val sk = scale * 1000000L
+    checkKeyTypes("bradleyTerryCi", outcomes, grpCol, winnerCol, loserCol)
     val thr = DatasetOps.thr(frac)
     val games0 = outcomes.dropDuplicates(grpCol, idCol)
-      .select(col(grpCol).as("_g"), col(idCol).cast(StringType).as("_id"),
-        col(winnerCol).as("_w"), col(loserCol).as("_l"))
+      .select(Seq(col(grpCol).as("_g"),
+        col(idCol).cast(StringType).as("_id")) ++ sides(winnerCol, loserCol): _*)
       .filter(col("_w") =!= col("_l"))
     // the stacked frame: replicate −1 carries every game (the point
     // trajectory); replicate k ≥ 0 carries its md5-drawn subset
@@ -562,58 +656,17 @@ object EvalOps {
         conv(substring(md5(concat(lit(salt + ":"),
           col("_k").cast(StringType), lit(":"), col("_id"))), 1, 8),
           16, 10).cast(LongType) < thr)
-    val wins = stacked.groupBy(col("_g"), col("_k"), col("_w").as("item"))
-      .agg(count(lit(1)).as("wins"))
-    val losses = stacked.groupBy(col("_g"), col("_k"), col("_l").as("item"))
-      .agg(count(lit(1)).as("losses"))
-    val items = wins.join(losses, Seq("_g", "_k", "item"), "full")
-      .select(col("_g"), col("_k"), col("item"),
-        coalesce(col("wins"), lit(0L)).as("wins"),
-        (coalesce(col("wins"), lit(0L)) + coalesce(col("losses"), lit(0L)))
-          .as("games"))
-      .localCheckpoint()
-    val duels = stacked
-      .select(col("_g"), col("_k"), col("_w").as("a"), col("_l").as("b"))
-      .union(stacked.select(col("_g"), col("_k"), col("_l").as("a"),
-        col("_w").as("b")))
-      .groupBy(col("_g"), col("_k"), col("a"), col("b"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint()
-    // the bradleyTerry overflow contract on the stacked spine (the
-    // rep −1 slices hold the maxima, but one scan covers all slices)
-    val maxW = Long.MaxValue / sk - 2L
-    require(items.filter(col("wins") > maxW).isEmpty,
-      s"bradleyTerryCi: an item exceeds $maxW wins — lower `scale`")
-    val maxN = Long.MaxValue / sk
-    require(duels.filter(col("n") > maxN).isEmpty,
-      s"bradleyTerryCi: a duel pair exceeds $maxN games — lower `scale`")
-    var r = items.select(col("_g"), col("_k"), col("item"),
-        lit(scale).as("p"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val dsum = duels
-        .join(r.select(col("_g"), col("_k"), col("item").as("a"),
-          col("p").as("_pa")), Seq("_g", "_k", "a"))
-        .join(r.select(col("_g"), col("_k"), col("item").as("b"),
-          col("p").as("_pb")), Seq("_g", "_k", "b"))
-        .groupBy(col("_g"), col("_k"), col("a").as("item"))
-        .agg(sum(expr(s"n * ${sk}L div (_pa + _pb)")).as("_dd"))
-      r = items.join(r, Seq("_g", "_k", "item"))
-        .join(dsum, Seq("_g", "_k", "item"), "left")
-        .select(col("_g"), col("_k"), col("item"),
-          expr(s"(wins + 1L) * ${sk}L div greatest(coalesce(_dd, 0L) " +
-            s"+ 2L * ${sk}L div (p + ${scale}L), 1L)").as("p"))
-        .localCheckpoint()
-    }
-    val full = items.filter(col("_k") === -1).join(
-        r.filter(col("_k") === -1), Seq("_g", "_k", "item"))
+    val board = btBoard(stacked.select(col("_g"), col("_k"), col("_w"),
+        col("_l"), lit(1L).as("_n")),
+      Seq("_g", "_k"), iters, scale, "bradleyTerryCi", None)
+    val full = board.filter(col("_k") === -1)
       .select(col("_g"), col("item"), col("games"), col("wins"),
-        col("p").as("rating"))
+        col("rating"))
     // nearest-rank bounds over each (group, item)'s replicate-rating
     // census — the bootstrapParts idiom (≤ b rows per key per side,
     // parameter-bounded)
-    val reps = r.filter(col("_k") >= 0).select(col("_g"), col("item"),
-      col("_k"), col("p"))
+    val reps = board.filter(col("_k") >= 0).select(col("_g"), col("item"),
+      col("_k"), col("rating").as("p"))
     val nb = reps.groupBy(col("_g"), col("item"))
       .agg(count(lit(1)).as("n_replicates"))
     val ms = reps.select(col("_g").as("_g2"), col("item").as("_i2"),

@@ -431,6 +431,90 @@ class EvalOpsSpec extends AnyFunSuite {
         "w", "l", "n")
     }
     assert(e.getMessage.contains("non-positive"), e.getMessage)
+    // a NULL count refuses too, even on a row that plays no game
+    val nul = intercept[IllegalArgumentException] {
+      EvalOps.bradleyTerryCensus(
+        census.union(Seq((7L, 7L, None: Option[Long])).toDF("w", "l", "n")),
+        "w", "l", "n")
+    }
+    assert(nul.getMessage.contains("NULL"), nul.getMessage)
+    // and the message counts every corrupt row, self-duels included
+    val two = intercept[IllegalArgumentException] {
+      EvalOps.bradleyTerryCensus(
+        census.union(Seq((7L, 8L, 0L), (9L, 9L, -1L)).toDF("w", "l", "n")),
+        "w", "l", "n")
+    }
+    assert(two.getMessage.contains("2 census rows"), two.getMessage)
+  }
+
+  test("bradleyTerry: a NULL winner or loser voids its row; string items rate like their long codes") {
+    val outcomes = Seq.fill(3)((1L, 2L)) ++ Seq.fill(2)((2L, 3L)) ++
+      Seq((3L, 1L)) ++ Seq.fill(2)((1L, 4L))
+    val name = Map(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d")
+    // the named side of a half-NULL row gets no game from it, and an
+    // item seen only beside a NULL ("e") never reaches the board
+    val holey = outcomes.map(o => (Option(name(o._1)), Option(name(o._2)))) ++
+      Seq((Some("a"), None), (None, Some("d")), (None, None), (Some("e"), None))
+    val got = EvalOps.bradleyTerry(holey.toDF("w", "l"), "w", "l", iters = 4)
+      .as[(String, Long, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    val want = referenceBt(outcomes, 4, 1000000L)
+      .map { case (k, v) => name(k) -> v }
+    assert(got == want, s"\ngot:  $got\nwant: $want")
+  }
+
+  test("bradleyTerry: item and group types without JVM-equal keys are refused, naming the column and its type") {
+    import org.apache.spark.sql.functions.{array, struct}
+    val longs = Seq((1L, 2L, "x", 1L)).toDF("win_id", "lose_id", "grp", "oid")
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains(what), e.getMessage)
+    }
+    refused("`lose_id` has type double") {
+      EvalOps.bradleyTerry(longs.withColumn("lose_id", $"lose_id".cast("double")),
+        "win_id", "lose_id") }
+    refused("`win_id` has type binary") {
+      EvalOps.bradleyTerryCensus(longs.withColumn("win_id", $"win_id".cast("string")
+        .cast("binary")), "win_id", "lose_id", "oid") }
+    refused("`win_id` has type array<bigint>") {
+      EvalOps.bradleyTerryCi(longs.withColumn("win_id", array($"win_id")),
+        "win_id", "lose_id", "oid") }
+    refused("`grp` has type struct<grp:string>") {
+      EvalOps.bradleyTerryCiBy(longs.withColumn("grp", struct($"grp")),
+        "grp", "win_id", "lose_id", "oid") }
+  }
+
+  test("bradleyTerry: a duel census above the driver row bound is refused, naming the operator") {
+    val census = Seq((1L, 2L), (2L, 3L)).toDF("w", "l")
+    val e = intercept[IllegalArgumentException] {
+      EvalOps.collectBounded(census, "bradleyTerry", bound = 1) }
+    assert(e.getMessage.contains("bradleyTerry: the duel census") &&
+      e.getMessage.contains("more than 1 rows"), e.getMessage)
+    assert(EvalOps.collectBounded(census, "bradleyTerry", bound = 2).length == 2)
+    assert(EvalOps.BtCensusRowBound >= 49 * 13, "q356's 13 slices of 7 models")
+  }
+
+  test("bradleyTerry: the jobs one board fires do not grow with iters") {
+    val df = (Seq.fill(3)((1L, 2L)) ++ Seq.fill(2)((2L, 3L)) ++ Seq((3L, 1L)))
+      .toDF("w", "l")
+    val sc = spark.sparkContext
+    def jobs(iters: Int): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.ListenerDrain(sc) // earlier suites' events first
+      sc.addSparkListener(listener)
+      try {
+        EvalOps.bradleyTerry(df, "w", "l", iters = iters).collect()
+        org.apache.spark.ListenerDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      n.get
+    }
+    val (one, twenty) = (jobs(1), jobs(20))
+    assert(one == twenty, s"iters = 1 fired $one jobs, iters = 20 fired $twenty")
   }
 
   test("majorityVote: majority, tie-break, agreement, heap plan") {
