@@ -69,7 +69,7 @@ object DatasetOps {
     if (byBytes > scanParts) df.repartition(byBytes) else df
   }
 
-  private[operators] def md5Draw(salt: String, id: Column): Column =
+  private[graft] def md5Draw(salt: String, id: Column): Column =
     conv(substring(md5(concat(lit(salt + ":"),
       id.cast(StringType))), 1, 8), 16, 10).cast(LongType)
 

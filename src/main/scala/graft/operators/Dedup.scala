@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.expressions.Md5Grams
 import graft.functions.TextFunctions._
 
 /** Deduplication operators for LLM-data pipelines: exact, MinHash+LSH,
@@ -928,10 +929,18 @@ object Dedup {
     *    paper's tool, do not distribute; sampled sorted grams are the
     *    cluster-shaped equivalent).
     *
-    * Hash = md5-prefix 60 bits (engine-portable, oracle-replayable —
-    * the md5Draw discipline): collisions ~n²/2⁶¹ mark a false span,
-    * the documented probabilistic contract exactDedup already carries
-    * at 64 bits. `idCol` must be integral (the keep-first order).
+    * Hash = md5-prefix 60 bits of each k-char window (engine-portable,
+    * oracle-replayable — the md5Draw discipline; SQL replays it as
+    * `conv(substring(md5(substr(t, pos, k)), 1, 15), 16, 10)`):
+    * collisions ~n²/2⁶¹ mark a false span, the documented
+    * probabilistic contract exactDedup already carries at 64 bits.
+    * A doc's grams come from ONE [[graft.expressions.Md5Grams]] pass:
+    * one md5 per position and O(len·k) bytes hashed per doc, and the
+    * sample filter reads the generated hash column. Spelled per
+    * position as that chain, the hash costs O(len²) per doc (each
+    * `substr` walks the UTF-8 bytes from byte 0) — a hang, not a
+    * slowdown, at the 4 Mi-char pack ceiling below. `idCol` must be
+    * integral (the keep-first order).
     * Positions are 1-based CHARACTERS (both engines' substr
     * semantics); spans are inclusive [span_start, span_end].
     *
@@ -953,6 +962,8 @@ object Dedup {
     require(k >= 8 && k <= 256, s"k must be in [8, 256], got $k")
     require(sample >= 1 && sample <= 1024,
       s"sample must be in [1, 1024], got $sample")
+    // posexplode counts from 0; positions are 1-based
+    val pos = col("_p").cast(LongType) + 1L
     val locs = df
       .select(col(idCol).cast(LongType).as("_id"), col(textCol).as("_t"))
       .where(col("_t").isNotNull && length(col("_t")) >= k)
@@ -977,25 +988,24 @@ object Dedup {
       // small pre-explode shuffle right back to one partition
       .repartition(df.sparkSession.conf
         .get("spark.sql.shuffle.partitions").toInt, col("_id"))
-      .select(col("_id"), col("_t"),
-        explode(sequence(lit(1L),
-          (length(col("_t")) - (k - 1)).cast(LongType))).as("_pos"))
-      .select(col("_id"), col("_pos"),
-        conv(substring(md5(col("_t").substr(col("_pos").cast(IntegerType),
-          lit(k))), 1, 15), 16, 10).cast(LongType).as("_h"))
+      .select(col("_id"), posexplode(GraftPlanBridge.columnOf(
+        Md5Grams(GraftPlanBridge.exprOf(col("_t")), k))).as(Seq("_p", "_h")))
       .where(col("_h") % lit(sample.toLong) === 0)
-      .withColumn("_loc", col("_id") * lit(4194304L) + col("_pos"))
+      .select(col("_id"), pos.as("_pos"), col("_h"),
+        (col("_id") * lit(4194304L) + pos).as("_loc"))
     // `locs` is deliberately derived TWICE (census + mark join), NOT
     // exchanged once and shared: an r17 A/B of the one-shuffle shape
     // (repartition(_h) reused by both consumers) benched q290 3.35 s
     // → 10.4 s and q295 5.2 s → 8.0 s at sf0.1 — the gram triples are
     // corpus-length-sized, so ONE hash exchange + SMJ sorts of them
-    // costs far more than re-running the explode + md5 map-side,
-    // while this shape shuffles only the map-combined census and
-    // streams `locs` through the (AQE-broadcast) join back. Guide
-    // §8's rule applied in reverse: here the per-row compute is the
-    // cheap proxy and the triples are the payload — recompute, don't
-    // move.
+    // costs far more than re-running the gram pass map-side, while
+    // this shape shuffles only the map-combined census and streams
+    // `locs` through the (AQE-broadcast) join back. Guide §8's rule
+    // applied in reverse: here the per-row compute is the cheap proxy
+    // and the triples are the payload — recompute, don't move. A
+    // derivation is one Md5Grams pass per doc: one md5 per position,
+    // O(len·k) bytes hashed (q295 at sf0.03 on 4 cores: 0.4–0.6 s of
+    // task time per derivation).
     val census = locs.groupBy(col("_h"))
       .agg(count(lit(1)).as("_cnt"), min(col("_loc")).as("_first"))
       .where(col("_cnt") > 1)

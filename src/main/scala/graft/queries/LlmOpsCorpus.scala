@@ -4852,9 +4852,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
     (s, d) => {
       val dd = docs(s, d)
       val ref = dd.where(
-        conv(substring(md5(concat(lit("ccnet:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType) % 4 === 0)
+        DatasetOps.md5Draw("ccnet", col("doc_id")) % 4 === 0)
       // eager localCheckpoint: THREE consumers (cumulative census,
       // rank totals, bucket report) read this census — without the
       // lineage cut Catalyst clones the whole scoring pipeline per
@@ -4988,9 +4986,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
           col("clean_text").as("text"))
         .localCheckpoint(true)
       val ref = cleaned.where(
-        conv(substring(md5(concat(lit("ccnet:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType) % 4 === 0)
+        DatasetOps.md5Draw("ccnet", col("doc_id")) % 4 === 0)
       val sc = DatasetOps.referenceLmScores(cleaned, ref, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("n_bigrams"),
           col("milli_bits_per_bigram").as("milli"))
@@ -5359,9 +5355,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
           col("clean_text").as("text"))
         .localCheckpoint(true)
       val ref = cleaned.where(
-        conv(substring(md5(concat(lit("ccnet:"),
-          col("doc_id").cast(StringType))), 1, 8), 16, 10)
-          .cast(LongType) % 4 === 0)
+        DatasetOps.md5Draw("ccnet", col("doc_id")) % 4 === 0)
       val sc = DatasetOps.referenceLmScores(cleaned, ref, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("n_bigrams"),
           col("milli_bits_per_bigram").as("milli"))

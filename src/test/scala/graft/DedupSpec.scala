@@ -769,4 +769,75 @@ class DedupSpec extends AnyFunSuite {
     assert(covered >= block.length / 2,
       s"sampled span covers only $covered of ${block.length}")
   }
+
+  test("md5 gram kernel equals the per-position md5 chain, codegen and interpreted") {
+    import org.apache.spark.sql.GraftPlanBridge
+    import graft.expressions.Md5Grams
+    val k = 8
+    def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
+    def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+    val rows = Seq(
+      1L -> hex(utf8("naïve café — 中文字符 and 😀 emoji, twice: 中文字符 😀 café")),
+      // a lone continuation byte mid-text
+      2L -> hex(utf8("abcdefgh") ++ Array(0x80.toByte) ++ utf8("ijklmnopqrstu")),
+      // a 3-byte lead truncated at the tail (one of its two
+      // continuation bytes present)
+      3L -> hex(utf8("abcdefghijklmnop") ++ Array(0xE4.toByte, 0xB8.toByte)),
+      4L -> null,
+      5L -> hex(utf8("short")))
+    // checkpointed, not a local relation: ConvertToLocalRelation would
+    // evaluate both sides at optimize time and bypass codegen
+    val d = rows.toDF("id", "hx")
+      .select($"id", unhex($"hx").cast("string").as("t"))
+      .localCheckpoint()
+    val grams = GraftPlanBridge.columnOf(
+      Md5Grams(GraftPlanBridge.exprOf($"t"), k))
+    // the string chain the kernel replaced — the reference only
+    def viaChain: Seq[(Long, Long, Long)] = d
+      .where($"t".isNotNull && length($"t") >= k)
+      .select($"id", $"t", explode(sequence(lit(1L),
+        (length($"t") - (k - 1)).cast("long"))).as("pos"))
+      .select($"id", $"pos", conv(substring(md5($"t".substr(
+        $"pos".cast("int"), lit(k))), 1, 15), 16, 10).cast("long"))
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    def viaKernel: (Seq[(Long, Long, Long)], String) = {
+      val df = d.select($"id", posexplode(grams))
+        .select($"id", ($"pos".cast("long") + 1L), $"col")
+      (df.as[(Long, Long, Long)].collect().toSeq.sorted,
+        df.queryExecution.executedPlan.toString)
+    }
+    def check(codegen: Boolean): Unit = {
+      val (got, plan) = viaKernel
+      assert(plan.contains("*(") == codegen, plan)
+      val want = viaChain
+      assert(want.map(_._1).distinct == Seq(1L, 2L, 3L))
+      // the last window of row 3 ends in the truncated char, whose lead
+      // byte claims one byte more than the string holds: the chain's
+      // `substr` copies that byte from past the string's end (here the
+      // row's zero padding; in general whatever follows in memory),
+      // while the kernel clamps at the end of the buffer
+      val tail = (3L, want.count(_._1 == 3L).toLong)
+      assert(got.filterNot(g => (g._1, g._2) == tail) ==
+        want.filterNot(w => (w._1, w._2) == tail))
+      val clamped = java.security.MessageDigest.getInstance("MD5")
+        .digest(utf8("jklmnop") ++ Array(0xE4.toByte, 0xB8.toByte))
+      assert(got.find(g => (g._1, g._2) == tail).map(_._3) ==
+        Some(java.nio.ByteBuffer.wrap(clamped).getLong >>> 4))
+      val arrays = d.select($"id", grams.as("g")).orderBy($"id").collect()
+      assert(arrays(3).isNullAt(1), "NULL text gives a NULL array")
+      assert(arrays(4).getSeq[Long](1).isEmpty, "text shorter than k")
+    }
+    check(codegen = true)
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = keys.map { case (key, _) => key -> conf.getOption(key) }
+    try {
+      keys.foreach { case (key, v) => conf.set(key, v) }
+      check(codegen = false)
+    } finally saved.foreach {
+      case (key, Some(v)) => conf.set(key, v)
+      case (key, None) => conf.unset(key)
+    }
+  }
 }

@@ -81,4 +81,50 @@ class KernelPropertySpec extends AnyFunSuite {
       assert(f1.length == 8 && f1.forall(v => v >= 0f && v < 1f))
     }
   }
+
+  test("Md5Grams kernel == code-point windows through MessageDigest over 600 random strings") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expressions.Md5Grams
+    val md = java.security.MessageDigest.getInstance("MD5")
+    // the definition: window p = code points [p, p+k) → UTF-8 bytes →
+    // md5 → top 60 bits, which is also the SQL chain's first 15 hex
+    // digits read as a number
+    def reference(s: String, k: Int): Seq[Long] = {
+      val cps = s.codePoints.toArray
+      (0 to cps.length - k).map { p =>
+        val d = md.digest(new String(cps, p, k).getBytes(UTF_8))
+        val top = java.nio.ByteBuffer.wrap(d).getLong >>> 4
+        val hex = d.map(b => f"${b & 0xff}%02x").mkString
+        assert(top == java.lang.Long.parseLong(hex.substring(0, 15), 16))
+        top
+      }
+    }
+    val rnd = new scala.util.Random(31)
+    // 1-, 2-, 3- and 4-byte characters (the emoji is a surrogate pair)
+    val alphabet = IndexedSeq("a", "q", " ", "7", "é", "ß", "中", "語",
+      "😀")
+    var empties = 0
+    for (k <- Seq(8, 25, 256); i <- 0 until 200) {
+      val len = i match {
+        case 0 => k - 1
+        case 1 => k
+        case 2 => k + 1
+        case _ => rnd.nextInt(601)
+      }
+      val s = Seq.fill(len)(alphabet(rnd.nextInt(alphabet.size))).mkString
+      val want = reference(s, k)
+      val got = Md5Grams.grams(UTF8String.fromString(s), k).toLongArray.toSeq
+      assert(got == want, s"k=$k len=$len")
+      if (len < k) { assert(got.isEmpty); empties += 1 }
+      // a string that is a slice of a larger buffer (a row-backed
+      // string's shape) hashes the same
+      val bytes = s.getBytes(UTF_8)
+      val padded = Array.fill[Byte](3)(0x41) ++ bytes ++ Array.fill[Byte](5)(0x42)
+      val slice = UTF8String.fromBytes(padded, 3, bytes.length)
+      assert(Md5Grams.grams(slice, k).toLongArray.toSeq == want,
+        s"slice k=$k len=$len")
+    }
+    assert(empties >= 3, "the k-1 cases must produce empty arrays")
+  }
 }
