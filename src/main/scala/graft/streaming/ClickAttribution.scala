@@ -81,14 +81,8 @@ object ClickAttribution {
       .withWatermark("view_time", watermarkDelay)
     val clicks = spark.readStream.schema(clickSchema).json(clicksDir)
       .withWatermark("click_time", watermarkDelay)
-    val q = attribute(views, clicks, windowMinutes, joinType)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // output mode append: the file sink's default and only mode
+    Drain.toFiles(attribute(views, clicks, windowMinutes, joinType),
+      "parquet", outDir, checkpointDir)
   }
 }

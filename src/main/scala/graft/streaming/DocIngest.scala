@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
+import graft.operators.{ChatOps, DatasetOps, Dedup, EvalOps, Multimodal,
+  Search, Similarity, Sketches}
+import graft.sources.Warc
 
 /** Streaming LLM-ingest twin: the batch corpus operators (quality
   * gate, content-digest dedup, token stats) composed unchanged under
@@ -12,8 +15,9 @@ import graft.functions.TextFunctions._
   * 32-char digest per distinct doc, never a body), and annotated with
   * the same `TextFunctions` columns the batch queries use. This is
   * the "new crawl shard arrives → clean, dedup, land" loop a training
-  * pipeline runs continuously; `Trigger.AvailableNow` + checkpoint
-  * give it exactly-once per shard across restarts.
+  * pipeline runs continuously; the [[Drain]] skeleton's AvailableNow
+  * drain + checkpoint give it exactly-once per shard across restarts.
+  * Each `run*` entry is its source, its per-batch gate and its sinks.
   */
 object DocIngest {
 
@@ -23,12 +27,27 @@ object DocIngest {
     StructField("lang", StringType),
     StructField("text", StringType)))
 
+  private val urlSchema = StructType(Seq(StructField("url", StringType)))
+  /** A seen-set: normalized URLs. */
+  private val keySchema = StructType(Seq(StructField("n", StringType)))
+  /** A recrawl seen-set: `(n, b)`, b = the batch that last queued n. */
+  private val queuedSchema = keySchema.add("b", LongType)
+  private val vecSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(DoubleType))))
+  private val outcomeSchema = StructType(Seq(
+    StructField("oid", StringType), StructField("winner", LongType),
+    StructField("loser", LongType)))
+  private val kmvSchema = StructType(Seq(StructField("source", StringType),
+    StructField("_h", LongType)))
+  private val linkSchema = StructType(Seq(StructField("target", StringType),
+    StructField("src_host", StringType), StructField("n_links", LongType)))
+  private val hllSchema = StructType(Seq(StructField("day", DateType),
+    StructField("sk", BinaryType)))
+
   def readDocStream(spark: SparkSession, dir: String,
                     maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
+    Drain.json(spark, dir, docSchema, maxFilesPerTrigger)
 
   /** The ingest transform — identical semantics on batch and
     * streaming inputs: token-count quality floor, then exact dedup on
@@ -44,72 +63,74 @@ object DocIngest {
       .withColumn("content_hash", md5(col("text")))
       .dropDuplicates("content_hash")
 
-  /** The shared landing half of the WARC ingests: parsed records →
-    * type filter → three-way split → sinks. Non-`response` records
-    * (request, metadata, warcinfo — a real crawl file interleaves
-    * them per fetch) are FILTERED, not quarantined: they are valid
-    * records that simply are not documents, and quarantining them
-    * would bury real corruption under an audit row per fetch; a
-    * record with NO type header keeps flowing (benefit of the doubt —
-    * the length/status gates judge it). Integrity-failed records
-    * (`len_ok` =
-    * false — truncation or a boundary mis-split) quarantine with
-    * their declared/recovered OCTET lengths; structurally-sound
-    * records then pass [[graft.sources.Warc.httpSplit]], and
-    * non-HTTP or non-200 messages quarantine with their status and
-    * media type (a 404 body or a redirect stub is not training
-    * text); only 200-message BODIES — never the raw payload, which
-    * would feed status lines and headers to the cleaning stack —
-    * flow through the standard [[ingest]] gate (quality floor +
-    * within-batch digest dedup; cross-shard dedup is the downstream
-    * keep-first or a persisted-index gate, the [[runNearDupGate]]
-    * pattern) and land — `Transfer-Encoding: chunked` bodies
-    * reassembled at the [[graft.sources.Warc.dechunkBatch]] codec
-    * seam first (chunk-size lines must never score as document
-    * text). Every quarantine row carries a `reason` (`length` |
-    * `status` | `chunked`) so the audit trail says WHICH gate
-    * refused it. */
-  private def landWarcRecords(recs: DataFrame, outDir: String,
-                              quarantineDir: String,
-                              minTokens: Int): Unit = {
-    val r = recs
-      .filter(col("warc_type").isNull || col("warc_type") === "response")
-      .persist() // two consumers: quarantine + clean landing
-    try {
-      r.filter(!col("len_ok"))
-        .select(col("uri"), lit("length").as("reason"),
-          col("content_length"),
-          octet_length(col("payload")).as("recovered_length"))
-        .write.mode("append").json(quarantineDir)
-      val msgs = graft.sources.Warc.httpSplit(
-        r.filter(col("len_ok")), "payload").persist()
-      try {
-        msgs.filter(col("http_status").isNull ||
-            col("http_status") =!= 200)
-          .select(col("uri"), lit("status").as("reason"),
-            col("http_status"), col("content_type"))
-          .write.mode("append").json(quarantineDir)
-        val ok = msgs.filter(col("http_status") === 200)
-        val plain = ok.filter(!coalesce(col("chunked"), lit(false)))
-          .select(col("uri"), col("body").as("text"))
-        // chunked bodies reassemble at the codec seam; a malformed
-        // walk (NULL) quarantines rather than landing chunk-size
-        // lines as document text
-        val dechunked = graft.sources.Warc.dechunkBatch(
-            ok.filter(coalesce(col("chunked"), lit(false))),
-            "body", "uri")
-          .select(col("uri"), col("dechunked").as("text")).persist()
-        try {
-          dechunked.filter(col("text").isNull)
-            .select(col("uri"), lit("chunked").as("reason"))
-            .write.mode("append").json(quarantineDir)
-          ingest(plain.unionByName(
-              dechunked.filter(col("text").isNotNull)), minTokens)
-            .write.mode("append").json(outDir)
-        } finally { dechunked.unpersist(); () }
-      } finally { msgs.unpersist(); () }
-    } finally { r.unpersist(); () }
+  /** A frame with more than one consumer, persisted while `use` runs. */
+  private def persisted[T](df: DataFrame)(use: DataFrame => T): T = {
+    df.persist()
+    try use(df) finally { df.unpersist(); () }
   }
+
+  /** Append one audit row per refused record: `key`, the `reason`
+    * naming the gate that refused it, then any `detail` columns. */
+  private def quarantine(rows: DataFrame, dir: String, key: Column,
+                         reason: String, detail: Column*): Unit =
+    rows.select(key +: lit(reason).as("reason") +: detail: _*)
+      .write.mode("append").json(dir)
+
+  /** The shared landing skeleton of the WARC ingests: parsed records →
+    * type filter → integrity split → HTTP messages → sinks.
+    * Non-`response` records (request, metadata, warcinfo — a real
+    * crawl file interleaves them per fetch) are FILTERED, not
+    * quarantined: they are valid records that simply are not
+    * documents, and quarantining them would bury real corruption under
+    * an audit row per fetch; a record with NO type header keeps
+    * flowing (benefit of the doubt — the length/status gates judge
+    * it). Integrity-failed records (`len_ok` = false — truncation or a
+    * boundary mis-split) quarantine with their declared/recovered
+    * OCTET lengths (`recoveredLength`); structurally-sound records are
+    * split into HTTP messages by `messages`, non-HTTP or non-200
+    * messages quarantine with their status and media type (a 404 body
+    * or a redirect stub is not training text), and the 200s go to
+    * `landOk`. Every quarantine row carries a `reason` so the audit
+    * trail says WHICH gate refused it. */
+  private def landWarcRecords(recs: DataFrame, quarantineDir: String,
+                              recoveredLength: Column)(
+      messages: DataFrame => DataFrame)(landOk: DataFrame => Unit): Unit =
+    persisted(recs.filter(
+        col("warc_type").isNull || col("warc_type") === "response")) { r =>
+      quarantine(r.filter(!col("len_ok")), quarantineDir, col("uri"),
+        "length", col("content_length"), recoveredLength.as("recovered_length"))
+      persisted(messages(r.filter(col("len_ok")))) { msgs =>
+        quarantine(msgs.filter(col("http_status").isNull ||
+            col("http_status") =!= 200), quarantineDir, col("uri"),
+          "status", col("http_status"), col("content_type"))
+        landOk(msgs.filter(col("http_status") === 200))
+      }
+    }
+
+  /** The string tier's landing ([[Warc.httpSplit]]): only 200-message
+    * BODIES — never the raw payload, which would feed status lines and
+    * headers to the cleaning stack — flow through the standard
+    * [[ingest]] gate (quality floor + within-batch digest dedup;
+    * cross-shard dedup is the downstream keep-first or a
+    * persisted-index gate, the [[runNearDupGate]] pattern) and land —
+    * `Transfer-Encoding: chunked` bodies reassembled at the
+    * [[Warc.dechunkBatch]] codec seam first (chunk-size lines must
+    * never score as document text); a malformed chunk walk quarantines
+    * as `chunked`. */
+  private def landWarcText(recs: DataFrame, outDir: String,
+                           quarantineDir: String, minTokens: Int): Unit =
+    landWarcRecords(recs, quarantineDir, octet_length(col("payload")))(
+        Warc.httpSplit(_, "payload")) { ok =>
+      val chunked = coalesce(col("chunked"), lit(false))
+      persisted(Warc.dechunkBatch(ok.filter(chunked), "body", "uri")
+          .select(col("uri"), col("dechunked").as("text"))) { dechunked =>
+        quarantine(dechunked.filter(col("text").isNull), quarantineDir,
+          col("uri"), "chunked")
+        ingest(ok.filter(!chunked).select(col("uri"), col("body").as("text"))
+            .unionByName(dechunked.filter(col("text").isNotNull)), minTokens)
+          .write.mode("append").json(outDir)
+      }
+    }
 
   /** WARC-shard ingest — crawl stage zero as a stream: each arriving
     * FILE is one WARC blob (`wholetext` — a line-framed reader would
@@ -122,65 +143,84 @@ object DocIngest {
   def runWarcIngest(spark: SparkSession, rawDir: String, outDir: String,
                     quarantineDir: String, checkpointDir: String,
                     minTokens: Int = 3,
-                    maxFilesPerTrigger: Int = 1): Unit = {
-    val q = spark.readStream
-      .option("wholetext", true)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        landWarcRecords(graft.sources.Warc.parseRecords(batch, "value"),
-          outDir, quarantineDir, minTokens)
+                    maxFilesPerTrigger: Int = 1): Unit =
+    Drain.foreachBatch(Drain.text(spark, rawDir, maxFilesPerTrigger,
+        wholetext = true), checkpointDir) { (batch, _) =>
+      landWarcText(Warc.parseRecords(batch, "value"), outDir, quarantineDir,
+        minTokens)
+    }
+
+  /** The compressed-shard drain both `.warc.gz` tiers share: the
+    * `binaryFile` source delivers each shard as bytes, `gunzip` walks
+    * the multi-member stream at the codec seam into `blobCol`, shards
+    * that fail to decompress quarantine with `reason = gzip` (a corrupt
+    * shard must surface, not vanish), and recovered blobs go to
+    * `land`. */
+  private def drainWarcGz(spark: SparkSession, rawDir: String,
+                          quarantineDir: String, checkpointDir: String,
+                          maxFilesPerTrigger: Int, blobCol: String,
+                          gunzip: DataFrame => DataFrame)(
+      land: DataFrame => Unit): Unit =
+    Drain.foreachBatch(Drain.binaryFiles(spark, rawDir, "*.warc.gz",
+        maxFilesPerTrigger), checkpointDir) { (batch, _) =>
+      persisted(gunzip(batch)) { blobs =>
+        quarantine(blobs.filter(col(blobCol).isNull), quarantineDir,
+          col("path").as("uri"), "gzip")
+        land(blobs.filter(col(blobCol).isNotNull))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** [[runWarcIngest]] for COMPRESSED shards — the layout Common
     * Crawl actually ships (`.warc.gz`, one gzip member per record,
-    * concatenated): the `binaryFile` source delivers each shard as
-    * bytes, [[graft.sources.Warc.gunzipBlobs]] walks the multi-member
-    * stream at the codec seam, shards that fail to decompress
-    * quarantine with `reason = gzip` (a corrupt shard must surface,
-    * not vanish), and recovered blobs land through the same
-    * [[landWarcRecords]] stack. */
+    * concatenated): [[graft.sources.Warc.gunzipBlobs]] decompresses
+    * each shard ([[drainWarcGz]]) and recovered blobs land through the
+    * same [[landWarcRecords]] stack. */
   def runWarcGzIngest(spark: SparkSession, rawDir: String,
                       outDir: String, quarantineDir: String,
                       checkpointDir: String, minTokens: Int = 3,
-                      maxFilesPerTrigger: Int = 1): Unit = {
-    val binSchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    val q = spark.readStream
-      .format("binaryFile")
-      .schema(binSchema)
-      .option("pathGlobFilter", "*.warc.gz")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val blobs = graft.sources.Warc
-          .gunzipBlobs(batch, "path", "content")
-          .persist() // two consumers: gzip quarantine + record landing
-        try {
-          blobs.filter(col("blob").isNull)
-            .select(col("path").as("uri"), lit("gzip").as("reason"))
-            .write.mode("append").json(quarantineDir)
-          landWarcRecords(
-            graft.sources.Warc.parseRecords(
-              blobs.filter(col("blob").isNotNull), "blob"),
-            outDir, quarantineDir, minTokens)
-        } finally { blobs.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      maxFilesPerTrigger: Int = 1): Unit =
+    drainWarcGz(spark, rawDir, quarantineDir, checkpointDir,
+        maxFilesPerTrigger, "blob", Warc.gunzipBlobs(_, "path", "content")) {
+      blobs => landWarcText(Warc.parseRecords(blobs, "blob"), outDir,
+        quarantineDir, minTokens)
+    }
+
+  /** One row per canonical URL key `n`
+    * ([[graft.functions.TextFunctions.urlNormalize]] — raw spellings
+    * of one page must collapse or the crawler fetches it once per
+    * spelling), carrying its lexicographically smallest raw spelling
+    * (deterministic under retries). */
+  private def byKey(urls: DataFrame): DataFrame =
+    urls.select(urlNormalize(col("url")).as("n"), col("url"))
+      .groupBy(col("n")).agg(min(col("url")).as("url"))
+
+  /** Drain a `(url)` JSONL stream, handing each batch's [[byKey]]
+    * candidates to `gate`. */
+  private def drainUrls(spark: SparkSession, rawDir: String,
+                        checkpointDir: String, maxFilesPerTrigger: Int)(
+      gate: (DataFrame, Long) => Unit): Unit =
+    Drain.foreachBatch(Drain.json(spark, rawDir, urlSchema,
+        maxFilesPerTrigger), checkpointDir)((batch, id) => gate(byKey(batch), id))
+
+  /** `cand` minus every key in `set`. */
+  private def unseen(cand: DataFrame, set: DataFrame): DataFrame =
+    cand.join(set.select(col("n")).distinct(), Seq("n"), "left_anti")
+
+  /** The frontier gates' two sinks: `fresh` (n, url) lands in the
+    * fetch queue FIRST, then `record` adds its keys to the seen-set —
+    * so a batch that dies between the two re-runs whole and the queue
+    * can carry an identical row twice, which readers collapse
+    * keep-first on `n` (the
+    * [[graft.operators.Search.dedupIngestedIndex]] convention). */
+  private def enqueue(fresh: DataFrame, queueDir: String)(
+      record: DataFrame => Unit): Unit =
+    persisted(fresh) { f =>
+      f.select(col("n"), col("url")).write.mode("append").json(queueDir)
+      record(f)
+    }
+
+  private def recordSeen(seenDir: String)(fresh: DataFrame): Unit =
+    fresh.select(col("n")).write.mode("append").parquet(seenDir)
 
   /** URL-frontier gate — the crawl loop's STATE: discovered URLs
     * arrive in shards (sitemaps, link extraction, recrawl feeds),
@@ -206,37 +246,20 @@ object DocIngest {
   def runFrontierIngest(spark: SparkSession, rawDir: String,
                         seenDir: String, outDir: String,
                         checkpointDir: String,
-                        maxFilesPerTrigger: Int = 1): Unit = {
-    if (!hadoopExists(spark, seenDir)) {
-      import spark.implicits._
-      Seq.empty[String].toDF("n").write.mode("overwrite").parquet(seenDir)
+                        maxFilesPerTrigger: Int = 1): Unit =
+    frontier(spark, rawDir, seenDir, None, outDir, checkpointDir,
+      maxFilesPerTrigger)
+
+  /** [[runFrontierIngest]] is this gate with no disallow set. */
+  private def frontier(spark: SparkSession, rawDir: String, seenDir: String,
+                       disallowDir: Option[String], outDir: String,
+                       checkpointDir: String, maxFilesPerTrigger: Int): Unit = {
+    val seen = Drain.seeded(spark, seenDir, keySchema)
+    drainUrls(spark, rawDir, checkpointDir, maxFilesPerTrigger) { (cand, _) =>
+      val fresh = disallowDir.foldLeft(unseen(cand, seen()))(
+        (f, d) => unseen(f, spark.read.parquet(d)))
+      enqueue(fresh, outDir)(recordSeen(seenDir))
     }
-    val urlSchema = StructType(Seq(StructField("url", StringType)))
-    val q = spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"), col("url"))
-          .groupBy(col("n")).agg(min(col("url")).as("url"))
-        val fresh = cand.join(
-          spark.read.parquet(seenDir).select(col("n")).distinct(),
-          Seq("n"), "left_anti")
-        fresh.persist() // two sinks: fetch queue + seen-set append
-        try {
-          fresh.select(col("n"), col("url"))
-            .write.mode("append").json(outDir)
-          fresh.select(col("n"))
-            .write.mode("append").parquet(seenDir)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** [[runFrontierIngest]]'s at-scale landing, IMPLEMENTED (the
@@ -264,40 +287,15 @@ object DocIngest {
                                 checkpointDir: String,
                                 numBuckets: Int = 8,
                                 maxFilesPerTrigger: Int = 1): Unit = {
-    if (!spark.catalog.tableExists(seenTable)) {
-      import spark.implicits._
-      Seq.empty[String].toDF("n")
-        .write.bucketBy(numBuckets, "n").sortBy("n")
-        .saveAsTable(seenTable)
+    def record(keys: DataFrame): Unit = keys.select(col("n"))
+      .write.mode("append").bucketBy(numBuckets, "n").sortBy("n")
+      .saveAsTable(seenTable)
+    if (!spark.catalog.tableExists(seenTable))
+      record(Drain.empty(spark, keySchema))
+    drainUrls(spark, rawDir, checkpointDir, maxFilesPerTrigger) { (cand, _) =>
+      enqueue(cand.join(spark.table(seenTable).select(col("n")), Seq("n"),
+        "left_anti"), outDir)(record)
     }
-    val urlSchema = StructType(Seq(StructField("url", StringType)))
-    val q = spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"), col("url"))
-          .groupBy(col("n")).agg(min(col("url")).as("url"))
-        val fresh = cand.join(
-          spark.table(seenTable).select(col("n")),
-          Seq("n"), "left_anti")
-        fresh.persist() // two sinks: fetch queue + seen-set append
-        try {
-          fresh.select(col("n"), col("url"))
-            .write.mode("append").json(outDir)
-          fresh.select(col("n"))
-            .write.mode("append")
-            .bucketBy(numBuckets, "n").sortBy("n")
-            .saveAsTable(seenTable)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** [[runFrontierIngest]] with the robots gate composed INTO the
@@ -318,40 +316,9 @@ object DocIngest {
   def runFrontierIngestPolite(spark: SparkSession, rawDir: String,
                               seenDir: String, disallowDir: String,
                               outDir: String, checkpointDir: String,
-                              maxFilesPerTrigger: Int = 1): Unit = {
-    if (!hadoopExists(spark, seenDir)) {
-      import spark.implicits._
-      Seq.empty[String].toDF("n").write.mode("overwrite").parquet(seenDir)
-    }
-    val urlSchema = StructType(Seq(StructField("url", StringType)))
-    val q = spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"), col("url"))
-          .groupBy(col("n")).agg(min(col("url")).as("url"))
-        val fresh = cand
-          .join(spark.read.parquet(seenDir).select(col("n")).distinct(),
-            Seq("n"), "left_anti")
-          .join(spark.read.parquet(disallowDir).select(col("n"))
-            .distinct(), Seq("n"), "left_anti")
-        fresh.persist() // two sinks: fetch queue + seen-set append
-        try {
-          fresh.select(col("n"), col("url"))
-            .write.mode("append").json(outDir)
-          fresh.select(col("n"))
-            .write.mode("append").parquet(seenDir)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                              maxFilesPerTrigger: Int = 1): Unit =
+    frontier(spark, rawDir, seenDir, Some(disallowDir), outDir,
+      checkpointDir, maxFilesPerTrigger)
 
   /** [[runFrontierIngest]] with a RECRAWL policy — the lifecycle
     * step the plain gate lacks (it never re-fetches: fine for a
@@ -373,44 +340,9 @@ object DocIngest {
   def runFrontierIngestRecrawl(spark: SparkSession, rawDir: String,
                                seenDir: String, outDir: String,
                                checkpointDir: String, ttlBatches: Long,
-                               maxFilesPerTrigger: Int = 1): Unit = {
-    require(ttlBatches >= 1L,
-      s"ttlBatches must be >= 1, got $ttlBatches")
-    if (!hadoopExists(spark, seenDir)) {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("n", "b")
-        .write.mode("overwrite").parquet(seenDir)
-    }
-    val urlSchema = StructType(Seq(StructField("url", StringType)))
-    val q = spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"), col("url"))
-          .groupBy(col("n")).agg(min(col("url")).as("url"))
-        val lastSeen = spark.read.parquet(seenDir)
-          .groupBy(col("n")).agg(max(col("b")).as("_last"))
-        val fresh = cand.join(lastSeen, Seq("n"), "left")
-          .filter(col("_last").isNull ||
-            lit(batchId) - col("_last") >= ttlBatches)
-          .drop("_last")
-        fresh.persist() // two sinks: fetch queue + seen-set append
-        try {
-          fresh.select(col("n"), col("url"))
-            .write.mode("append").json(outDir)
-          fresh.select(col("n"), lit(batchId).as("b"))
-            .write.mode("append").parquet(seenDir)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                               maxFilesPerTrigger: Int = 1): Unit =
+    recrawl(spark, rawDir, None, seenDir, outDir, checkpointDir, ttlBatches,
+      maxFilesPerTrigger)
 
   /** [[runFrontierIngestRecrawl]] consuming SITEMAP HINTS (VERDICT
     * r11 Missing #2 — the lastmod/changefreq metadata
@@ -444,51 +376,40 @@ object DocIngest {
                                      hintsDir: String, seenDir: String,
                                      outDir: String, checkpointDir: String,
                                      ttlBatches: Long,
-                                     maxFilesPerTrigger: Int = 1): Unit = {
+                                     maxFilesPerTrigger: Int = 1): Unit =
+    recrawl(spark, rawDir, Some(hintsDir), seenDir, outDir, checkpointDir,
+      ttlBatches, maxFilesPerTrigger)
+
+  /** [[runFrontierIngestRecrawl]] is this gate with no hints: every
+    * candidate then takes the "no hint" branch. */
+  private def recrawl(spark: SparkSession, rawDir: String,
+                      hintsDir: Option[String], seenDir: String,
+                      outDir: String, checkpointDir: String,
+                      ttlBatches: Long, maxFilesPerTrigger: Int): Unit = {
     require(ttlBatches >= 1L,
       s"ttlBatches must be >= 1, got $ttlBatches")
-    if (!hadoopExists(spark, seenDir)) {
-      import spark.implicits._
-      Seq.empty[(String, Long)].toDF("n", "b")
-        .write.mode("overwrite").parquet(seenDir)
-    }
-    val urlSchema = StructType(Seq(StructField("url", StringType)))
-    val q = spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"), col("url"))
-          .groupBy(col("n")).agg(min(col("url")).as("url"))
-        val lastSeen = spark.read.parquet(seenDir)
-          .groupBy(col("n")).agg(max(col("b")).as("_last"))
-        val hints = spark.read.parquet(hintsDir)
-          .groupBy(col("n")).agg(max(col("lastmod_b")).as("_lm"),
-            min(col("ttl_b")).as("_ttl"))
+    val seen = Drain.seeded(spark, seenDir, queuedSchema)
+    drainUrls(spark, rawDir, checkpointDir, maxFilesPerTrigger) {
+      (cand, batchId) =>
+        val withLast = cand.join(seen().groupBy(col("n"))
+          .agg(max(col("b")).as("_last")), Seq("n"), "left")
+        val noHint = lit(null).cast(LongType)
+        val hinted = hintsDir.fold(withLast.withColumn("_lm", noHint)
+            .withColumn("_ttl", noHint)) { d =>
+          withLast.join(spark.read.parquet(d).groupBy(col("n"))
+            .agg(max(col("lastmod_b")).as("_lm"), min(col("ttl_b")).as("_ttl")),
+            Seq("n"), "left")
+        }
         val eff = coalesce(col("_ttl"), lit(ttlBatches)) *
           when(col("_lm").isNotNull && col("_lm") <= col("_last"), 4L)
             .otherwise(1L)
-        val fresh = cand.join(lastSeen, Seq("n"), "left")
-          .join(hints, Seq("n"), "left")
-          .filter(col("_last").isNull ||
+        val fresh = hinted.filter(col("_last").isNull ||
             (col("_lm").isNotNull && col("_lm") > col("_last")) ||
             lit(batchId) - col("_last") >= eff)
           .select(col("n"), col("url"))
-        fresh.persist() // two sinks: fetch queue + seen-set append
-        try {
-          fresh.select(col("n"), col("url"))
-            .write.mode("append").json(outDir)
-          fresh.select(col("n"), lit(batchId).as("b"))
-            .write.mode("append").parquet(seenDir)
-        } finally { fresh.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        enqueue(fresh, outDir)(_.select(col("n"), lit(batchId).as("b"))
+          .write.mode("append").parquet(seenDir))
+    }
   }
 
   /** [[runFrontierIngest]] fronted by a BLOOM sidecar — the
@@ -521,51 +442,26 @@ object DocIngest {
                              outDir: String, checkpointDir: String,
                              mBits: Int = 1 << 18, nHash: Int = 3,
                              maxFilesPerTrigger: Int = 1): Unit = {
-    import graft.operators.DatasetOps
-    if (!hadoopExists(spark, seenDir)) {
-      import spark.implicits._
-      Seq.empty[String].toDF("n").write.mode("overwrite").parquet(seenDir)
-    }
-    if (!hadoopExists(spark, s"$bloomDir/meta"))
+    val seen = Drain.seeded(spark, seenDir, keySchema)
+    if (!Drain.exists(spark, s"$bloomDir/meta"))
       DatasetOps.writeBloomIndex(spark, bloomDir,
         Array.fill[Long](mBits / 64)(0L), mBits, nHash)
-    val urlSchema = StructType(Seq(StructField("url", StringType)))
-    val q = spark.readStream
-      .schema(urlSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (bits, m, k) = DatasetOps.readBloomIndex(spark, bloomDir,
-          Some(mBits), Some(nHash))
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"), col("url"))
-          .groupBy(col("n")).agg(min(col("url")).as("url"))
-          .withColumn("_bits", typedLit(bits.toSeq))
-          .withColumn("_maybe",
-            DatasetOps.bloomMightContain("n", "_bits", m, k))
-        val fastFresh = cand.filter(!col("_maybe"))
-          .select(col("n"), col("url"))
-        val confirmed = cand.filter(col("_maybe"))
-          .select(col("n"), col("url"))
-          .join(spark.read.parquet(seenDir).select(col("n")).distinct(),
-            Seq("n"), "left_anti")
-        val fresh = fastFresh.unionByName(confirmed).persist()
-        try {
-          fresh.write.mode("append").json(outDir)
-          fresh.select(col("n")).write.mode("append").parquet(seenDir)
-          val newBits = DatasetOps.bloomBitmap(fresh.select(col("n")),
-            "n", m, k)
-          var i = 0
-          while (i < bits.length) { newBits(i) |= bits(i); i += 1 }
-          DatasetOps.writeBloomIndex(spark, bloomDir, newBits, m, k)
-        } finally { fresh.unpersist(); () }
+    drainUrls(spark, rawDir, checkpointDir, maxFilesPerTrigger) { (keyed, _) =>
+      val (bits, m, k) = DatasetOps.readBloomIndex(spark, bloomDir,
+        Some(mBits), Some(nHash))
+      val cand = keyed.withColumn("_bits", typedLit(bits.toSeq))
+        .withColumn("_maybe", DatasetOps.bloomMightContain("n", "_bits", m, k))
+      val fresh = cand.filter(!col("_maybe")).select(col("n"), col("url"))
+        .unionByName(unseen(
+          cand.filter(col("_maybe")).select(col("n"), col("url")), seen()))
+      enqueue(fresh, outDir) { f =>
+        recordSeen(seenDir)(f)
+        val newBits = DatasetOps.bloomBitmap(f.select(col("n")), "n", m, k)
+        var i = 0
+        while (i < bits.length) { newBits(i) |= bits(i); i += 1 }
+        DatasetOps.writeBloomIndex(spark, bloomDir, newBits, m, k)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Conditional-revisit gate — q287's streaming twin, the fetch
@@ -591,65 +487,45 @@ object DocIngest {
                        validatorDir: String, outDir: String,
                        quarantineDir: String, checkpointDir: String,
                        maxFilesPerTrigger: Int = 1): Unit = {
-    if (!hadoopExists(spark, validatorDir)) {
-      import spark.implicits._
-      Seq.empty[(String, String, String, Long)]
-        .toDF("n", "etag", "digest", "b")
-        .write.mode("overwrite").parquet(validatorDir)
-    }
+    val validators = Drain.seeded(spark, validatorDir, StructType(Seq(
+      StructField("n", StringType), StructField("etag", StringType),
+      StructField("digest", StringType), StructField("b", LongType))))
     val fetchSchema = StructType(Seq(
       StructField("url", StringType), StructField("status", LongType),
       StructField("etag", StringType), StructField("body", StringType)))
-    val q = spark.readStream
-      .schema(fetchSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cand = batch.select(
-            graft.functions.TextFunctions.urlNormalize(col("url"))
-              .as("n"),
-            struct(col("url"), col("status"), col("etag"), col("body"))
-              .as("r"))
-          .groupBy(col("n")).agg(min(col("r")).as("r"))
-          .select(col("n"), col("r.status").as("status"),
-            col("r.etag").as("etag"), col("r.body").as("body"))
-        val cur = spark.read.parquet(validatorDir)
-          .groupBy(col("n"))
-          .agg(max(struct(col("b"), col("etag"), col("digest"))).as("s"))
-          .select(col("n"), col("s.digest").as("prior_digest"))
-        val joined = cand.join(cur, Seq("n"), "left").persist()
-        try {
-          joined.filter(col("status") === 304 &&
-              col("prior_digest").isNull)
-            .select(col("n"), lit("orphan_304").as("reason"))
-            .write.mode("append").json(quarantineDir)
-          // null-safe (ADVICE r11): a malformed line's NULL status
-          // made `=!= 200 && =!= 304` evaluate to NULL — the row then
-          // matched NO branch and vanished instead of quarantining
-          joined.filter(!(col("status") <=> 200) &&
-              !(col("status") <=> 304))
-            .select(col("n"), lit("status").as("reason"), col("status"))
-            .write.mode("append").json(quarantineDir)
-          val fresh = joined.filter(col("status") === 200)
-          val revisit = joined.filter(col("status") === 304 &&
-            col("prior_digest").isNotNull)
-          fresh.select(col("n"), md5(col("body")).as("digest"),
-              lit(false).as("revisit"), col("body"))
-            .unionByName(revisit.select(col("n"),
-              col("prior_digest").as("digest"),
-              lit(true).as("revisit"),
-              lit(null).cast(StringType).as("body")))
-            .write.mode("append").json(outDir)
-          fresh.select(col("n"), col("etag"),
-              md5(col("body")).as("digest"), lit(batchId).as("b"))
-            .write.mode("append").parquet(validatorDir)
-        } finally { joined.unpersist(); () }
+    Drain.foreachBatch(Drain.json(spark, rawDir, fetchSchema,
+        maxFilesPerTrigger), checkpointDir) { (batch, batchId) =>
+      val cand = batch.select(urlNormalize(col("url")).as("n"),
+          struct(col("url"), col("status"), col("etag"), col("body")).as("r"))
+        .groupBy(col("n")).agg(min(col("r")).as("r"))
+        .select(col("n"), col("r.status").as("status"),
+          col("r.etag").as("etag"), col("r.body").as("body"))
+      val cur = validators().groupBy(col("n"))
+        .agg(max(struct(col("b"), col("etag"), col("digest"))).as("s"))
+        .select(col("n"), col("s.digest").as("prior_digest"))
+      persisted(cand.join(cur, Seq("n"), "left")) { joined =>
+        quarantine(joined.filter(col("status") === 304 &&
+          col("prior_digest").isNull), quarantineDir, col("n"), "orphan_304")
+        // null-safe (ADVICE r11): a malformed line's NULL status
+        // made `=!= 200 && =!= 304` evaluate to NULL — the row then
+        // matched NO branch and vanished instead of quarantining
+        quarantine(joined.filter(!(col("status") <=> 200) &&
+            !(col("status") <=> 304)), quarantineDir, col("n"), "status",
+          col("status"))
+        val fresh = joined.filter(col("status") === 200)
+        val revisit = joined.filter(col("status") === 304 &&
+          col("prior_digest").isNotNull)
+        fresh.select(col("n"), md5(col("body")).as("digest"),
+            lit(false).as("revisit"), col("body"))
+          .unionByName(revisit.select(col("n"),
+            col("prior_digest").as("digest"), lit(true).as("revisit"),
+            lit(null).cast(StringType).as("body")))
+          .write.mode("append").json(outDir)
+        fresh.select(col("n"), col("etag"), md5(col("body")).as("digest"),
+            lit(batchId).as("b"))
+          .write.mode("append").parquet(validatorDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** The BYTE-EXACT [[runWarcGzIngest]] — the pipeline Common Crawl
@@ -668,63 +544,27 @@ object DocIngest {
   def runWarcGzIngestBinary(spark: SparkSession, rawDir: String,
                             outDir: String, quarantineDir: String,
                             checkpointDir: String, minTokens: Int = 3,
-                            maxFilesPerTrigger: Int = 1): Unit = {
-    val binSchema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    val q = spark.readStream
-      .format("binaryFile")
-      .schema(binSchema)
-      .option("pathGlobFilter", "*.warc.gz")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val blobs = graft.sources.Warc
-          .gunzipBlobsBinary(batch, "path", "content").persist()
-        try {
-          blobs.filter(col("blob_bytes").isNull)
-            .select(col("path").as("uri"), lit("gzip").as("reason"))
-            .write.mode("append").json(quarantineDir)
-          val recs = graft.sources.Warc.parseRecordsBinary(
-              blobs.filter(col("blob_bytes").isNotNull),
-              "blob_bytes", "path")
-            .filter(col("warc_type").isNull ||
-              col("warc_type") === "response")
-            .persist()
-          try {
-            recs.filter(!col("len_ok"))
-              .select(col("uri"), lit("length").as("reason"),
-                col("content_length"),
-                length(col("payload_bytes")).as("recovered_length"))
-              .write.mode("append").json(quarantineDir)
-            val msgs = graft.sources.Warc.decodeHttpBinary(
-                recs.filter(col("len_ok")), "payload_bytes", "uri")
-              .persist()
-            try {
-              msgs.filter(col("http_status").isNull ||
-                  col("http_status") =!= 200)
-                .select(col("uri"), lit("status").as("reason"),
-                  col("http_status"), col("content_type"))
-                .write.mode("append").json(quarantineDir)
-              val ok = msgs.filter(col("http_status") === 200)
-              ok.filter(col("text").isNull)
-                .select(col("uri"), lit("decode").as("reason"))
-                .write.mode("append").json(quarantineDir)
-              ingest(ok.filter(col("text").isNotNull)
-                  .select(col("uri"), col("text")), minTokens)
-                .write.mode("append").json(outDir)
-            } finally { msgs.unpersist(); () }
-          } finally { recs.unpersist(); () }
-        } finally { blobs.unpersist(); () }
+                            maxFilesPerTrigger: Int = 1): Unit =
+    drainWarcGz(spark, rawDir, quarantineDir, checkpointDir,
+        maxFilesPerTrigger, "blob_bytes",
+        Warc.gunzipBlobsBinary(_, "path", "content")) { blobs =>
+      landWarcRecords(Warc.parseRecordsBinary(blobs, "blob_bytes", "path"),
+          quarantineDir, length(col("payload_bytes")))(
+          Warc.decodeHttpBinary(_, "payload_bytes", "uri")) { ok =>
+        quarantine(ok.filter(col("text").isNull), quarantineDir, col("uri"),
+          "decode")
+        ingest(ok.filter(col("text").isNotNull).select(col("uri"), col("text")),
+            minTokens)
+          .write.mode("append").json(outDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
+
+  /** Distinct benchmark word-`k`-gram hashes (`_gh`). */
+  private def benchGrams(bench: DataFrame, textCol: String, k: Int): DataFrame =
+    bench
+      .select(whitespaceTokens(col(textCol)).as("_tks"))
+      .select(explode(array_distinct(wordShingles(col("_tks"), k))).as("_g"))
+      .select(xxhash64(col("_g")).as("_gh")).distinct()
 
   /** Distinct benchmark word-`k`-gram hashes, driver-collected ONCE —
     * the EXACT static side of the streaming decontamination gate. One
@@ -734,11 +574,23 @@ object DocIngest {
     * stateless shape, bounded false-positive over-dropping. */
   def benchGramHashes(bench: DataFrame, textCol: String,
                       k: Int = 5): Array[Long] =
-    bench
-      .select(whitespaceTokens(col(textCol)).as("_tks"))
-      .select(explode(array_distinct(wordShingles(col("_tks"), k))).as("_g"))
-      .select(xxhash64(col("_g")).as("_gh")).distinct()
-      .collect().map(_.getLong(0))
+    benchGrams(bench, textCol, k).collect().map(_.getLong(0))
+
+  /** [[ingest]], then drop every doc for which `blocked` holds of its
+    * word-`k`-gram hash array. Tokens are projected before shingling
+    * (the lambda-CSE rule) and FENCED with
+    * [[graft.expressions.NoInline]]: predicate pushdown would
+    * otherwise substitute the tokenizer back into the filter's
+    * shingle lambda, re-creating the quadratic blowup at the
+    * optimizer level (measured 3.9s → 1.2s at sf0.1). */
+  private def dropByGrams(docs: DataFrame, minTokens: Int, k: Int)(
+      blocked: Column => Column): DataFrame =
+    ingest(docs, minTokens)
+      .withColumn("_tks", call_function("no_inline",
+        whitespaceTokens(col("text"))))
+      .filter(!blocked(
+        transform(wordShingles(col("_tks"), k), g => xxhash64(g))))
+      .drop("_tks")
 
   /** [[ingest]] plus an eval-decontamination gate: docs sharing any
     * word-`k`-gram with the benchmark are dropped AT INGEST, before
@@ -746,21 +598,11 @@ object DocIngest {
     * expression (gram hashes vs the broadcast benchmark set) — the
     * streaming-legal shape: a doc-level verdict via the batch
     * semi-join (q65) would need a stream-side aggregation, which
-    * Structured Streaming disallows before a stateless sink. Tokens
-    * are projected before shingling (the lambda-CSE rule) and FENCED
-    * with [[graft.expressions.NoInline]]: predicate pushdown would
-    * otherwise substitute the tokenizer back into the filter's
-    * shingle lambda, re-creating the quadratic blowup at the
-    * optimizer level (measured 3.9s → 1.2s at sf0.1). */
+    * Structured Streaming disallows before a stateless sink. */
   def ingestDecontaminated(docs: DataFrame, benchHashes: Array[Long],
                            minTokens: Int = 3, k: Int = 5): DataFrame =
-    ingest(docs, minTokens)
-      .withColumn("_tks", call_function("no_inline",
-        whitespaceTokens(col("text"))))
-      .filter(!arrays_overlap(
-        transform(wordShingles(col("_tks"), k), g => xxhash64(g)),
-        typedLit(benchHashes.toSeq)))
-      .drop("_tks")
+    dropByGrams(docs, minTokens, k)(
+      arrays_overlap(_, typedLit(benchHashes.toSeq)))
 
   /** The bloom tier of the gate's static side — the 100 TB shape
     * [[benchGramHashes]]' scaladoc names: at real benchmark sizes the
@@ -771,23 +613,16 @@ object DocIngest {
     * false negatives — a contaminated doc can never slip through —
     * and `fpp` bounds the clean docs over-dropped. */
   def benchGramBloom(bench: DataFrame, textCol: String, k: Int = 5,
-                     fpp: Double = 0.01): Array[Byte] = {
-    val grams = bench
-      .select(whitespaceTokens(col(textCol)).as("_tks"))
-      .select(explode(array_distinct(wordShingles(col("_tks"), k))).as("_g"))
-      .select(xxhash64(col("_g")).as("_gh")).distinct()
-      // two jobs consume the gram set (size probe + sketch build);
-      // without the persist the tokenize-shingle-distinct pipeline
-      // runs twice over the whole benchmark
-      .persist()
-    try {
-      val n = math.max(grams.count(), 64L)
-      val bf = grams.stat.bloomFilter("_gh", n, fpp)
+                     fpp: Double = 0.01): Array[Byte] =
+    // two jobs consume the gram set (size probe + sketch build);
+    // without the persist the tokenize-shingle-distinct pipeline
+    // runs twice over the whole benchmark
+    persisted(benchGrams(bench, textCol, k)) { grams =>
+      val bf = grams.stat.bloomFilter("_gh", math.max(grams.count(), 64L), fpp)
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
       bos.toByteArray
-    } finally grams.unpersist()
-  }
+    }
 
   /** [[ingestDecontaminated]]'s bloom twin: same stateless per-row
     * gate, sketch membership instead of exact-set membership. Blocks
@@ -795,28 +630,16 @@ object DocIngest {
     * fpp-bounded sliver of clean ones. */
   def ingestDecontaminatedBloom(docs: DataFrame, bloom: Array[Byte],
                                 minTokens: Int = 3, k: Int = 5): DataFrame =
-    ingest(docs, minTokens)
-      .withColumn("_tks", call_function("no_inline",
-        whitespaceTokens(col("text"))))
-      .filter(!exists(
-        transform(wordShingles(col("_tks"), k), g => xxhash64(g)),
-        h => call_function("bloom_might_contain", lit(bloom), h)))
-      .drop("_tks")
+    dropByGrams(docs, minTokens, k)(exists(_,
+      h => call_function("bloom_might_contain", lit(bloom), h)))
 
   /** Drain every file currently under `rawDir` through [[ingest]]
     * into JSONL at `outDir`, exactly once per file across restarts. */
   def runAvailableNow(spark: SparkSession, rawDir: String, outDir: String,
                       checkpointDir: String,
-                      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = ingest(readDocStream(spark, rawDir, maxFilesPerTrigger))
-      .writeStream
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      maxFilesPerTrigger: Int = 1): Unit =
+    Drain.toFiles(ingest(readDocStream(spark, rawDir, maxFilesPerTrigger)),
+      "json", outDir, checkpointDir)
 
   /** NEAR-DUP ingest gate: every arriving micro-batch probes the
     * persisted MinHash index ([[graft.operators.Dedup.probeMinhashIndex]])
@@ -856,42 +679,32 @@ object DocIngest {
     // micro-batch; a GROWING gate must re-list per batch instead
     val staticIndex =
       if (growIndex) None else Some(spark.read.parquet(indexDir))
-    val q = ingest(readDocStream(spark, rawDir, maxFilesPerTrigger), minTokens)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // two consumers (probe + anti join) — without the persist the
-        // source read and ingest's tokenize/digest run twice per batch
-        batch.persist()
-        try {
-          val index = staticIndex.getOrElse(spark.read.parquet(indexDir))
-          val hits = graft.operators.Dedup
-            .probeMinhashIndexFrame(index, batch, "text", "doc_id", threshold)
-            .select(col("idNew").as("doc_id")).distinct()
-          if (growIndex) {
-            // within-batch twins see neither in the index — the
-            // batch's own verified pair set drops every idB
-            // (keep-min), same as the chat gate (r14)
-            val within = graft.operators.Dedup.minhashDupPairs(
-              batch, "text", "doc_id", shingleWords = 3,
-              threshold = threshold)
-              .select(col("idB").as("doc_id"))
-            val survivors = batch
-              .join(hits.union(within).distinct(),
-                Seq("doc_id"), "left_anti")
-              .localCheckpoint()
-            survivors.write.mode("append").json(outDir)
-            graft.operators.Dedup.appendToMinhashIndex(
-              survivors, "text", "doc_id", indexDir)
-          } else
-            batch.join(hits, Seq("doc_id"), "left_anti")
-              .write.mode("append").json(outDir)
-        } finally batch.unpersist()
-        ()
+    Drain.foreachBatch(ingest(readDocStream(spark, rawDir,
+        maxFilesPerTrigger), minTokens), checkpointDir) { (docs, _) =>
+      // two consumers (probe + anti join) — without the persist the
+      // source read and ingest's tokenize/digest run twice per batch
+      persisted(docs) { batch =>
+        val index = staticIndex.getOrElse(spark.read.parquet(indexDir))
+        val hits = Dedup
+          .probeMinhashIndexFrame(index, batch, "text", "doc_id", threshold)
+          .select(col("idNew").as("doc_id")).distinct()
+        if (growIndex) {
+          // within-batch twins see neither in the index — the
+          // batch's own verified pair set drops every idB
+          // (keep-min), same as the chat gate (r14)
+          val within = Dedup.minhashDupPairs(batch, "text", "doc_id",
+              shingleWords = 3, threshold = threshold)
+            .select(col("idB").as("doc_id"))
+          val survivors = batch
+            .join(hits.union(within).distinct(), Seq("doc_id"), "left_anti")
+            .localCheckpoint()
+          survivors.write.mode("append").json(outDir)
+          Dedup.appendToMinhashIndex(survivors, "text", "doc_id", indexDir)
+        } else
+          batch.join(hits, Seq("doc_id"), "left_anti")
+            .write.mode("append").json(outDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** SEARCH-INDEX ingest: every arriving micro-batch lands its BM25
@@ -912,25 +725,17 @@ object DocIngest {
   def runPostingsIngest(spark: SparkSession, rawDir: String,
                         postingsDir: String, lensDir: String,
                         checkpointDir: String, minTokens: Int = 3,
-                        maxFilesPerTrigger: Int = 1): Unit = {
-    val q = ingest(readDocStream(spark, rawDir, maxFilesPerTrigger), minTokens)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // two consumers — without the persist, tokenize runs twice
-        batch.persist()
-        try {
-          graft.operators.Search.termPostings(batch, "doc_id", "text")
-            .write.mode("append").parquet(postingsDir)
-          graft.operators.Search.docLens(batch, "doc_id", "text")
-            .write.mode("append").parquet(lensDir)
-        } finally batch.unpersist()
-        ()
+                        maxFilesPerTrigger: Int = 1): Unit =
+    Drain.foreachBatch(ingest(readDocStream(spark, rawDir,
+        maxFilesPerTrigger), minTokens), checkpointDir) { (docs, _) =>
+      // two consumers — without the persist, tokenize runs twice
+      persisted(docs) { batch =>
+        Search.termPostings(batch, "doc_id", "text")
+          .write.mode("append").parquet(postingsDir)
+        Search.docLens(batch, "doc_id", "text")
+          .write.mode("append").parquet(lensDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** EMBEDDING-INDEX ingest: every arriving micro-batch of vectors is
     * cell-assigned against the persisted IVF centroids and appended
@@ -951,40 +756,17 @@ object DocIngest {
     * @param rawDir JSONL of (vec_id: long, embedding: array<double>) */
   def runIvfIngest(spark: SparkSession, rawDir: String, indexDir: String,
                    checkpointDir: String,
-                   maxFilesPerTrigger: Int = 1): Unit = {
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType))))
-    val q = spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.operators.Similarity.appendToIvfIndex(spark, indexDir, batch)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Hadoop-FS existence check for index seeding — NOT
-    * `java.io.File.exists`, which answers for the driver's local disk
-    * only and would wrongly re-seed (overwrite!) an established index
-    * on any non-local filesystem (S3A/HDFS) where these gates
-    * actually deploy (VERDICT r9 Missing #5). */
-  private def hadoopExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
+                   maxFilesPerTrigger: Int = 1): Unit =
+    Drain.foreachBatch(Drain.json(spark, rawDir, vecSchema, maxFilesPerTrigger)
+        .select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+        checkpointDir) { (batch, _) =>
+      Similarity.appendToIvfIndex(spark, indexDir, batch)
+    }
 
   /** The shared fingerprint-dedup gate both perceptual ingests
     * delegate to (one copy of the probe / anti-join / append
     * machinery — ADVICE r9): each arriving micro-batch of
-    * `(id, <payloadCol>)` rows is fingerprinted by `fingerprint`
+    * `(id, <payload>)` rows is fingerprinted by `fingerprint`
     * (a 64-char bit-string Column over the payload), probed against
     * the PERSISTED fingerprint index at `indexDir` by the banded
     * hamming join (pigeonhole-exact at bands > maxHamming —
@@ -1004,102 +786,61 @@ object DocIngest {
   private def runFingerprintDedupGate(spark: SparkSession, rawDir: String,
                                       indexDir: String, outDir: String,
                                       checkpointDir: String,
-                                      schema: StructType, payloadCol: String,
-                                      fingerprint: org.apache.spark.sql.Column,
+                                      payload: StructField,
+                                      fingerprint: Column,
                                       maxHamming: Int, bands: Int,
                                       maxFilesPerTrigger: Int): Unit = {
-    // seed an empty, schema-carrying index so the first batch's probe
-    // reads cleanly (the out-of-place-publish convention would be
-    // overkill for an append-only fingerprint table)
-    if (!hadoopExists(spark, indexDir)) {
-      import spark.implicits._
-      Seq.empty[(Long, String)].toDF("id", "bits")
-        .write.mode("overwrite").parquet(indexDir)
-    }
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        // null fingerprints (e.g. a short envelope under
-        // audioFingerprintBits' size guard) are un-gateable: filtered
-        // here, landing in neither outDir nor the index — the same
-        // quality-floor semantics as the text ingest's token gate
-        val hashed = batch.select(col("id"), col(payloadCol),
-          fingerprint.as("bits"))
-          .filter(col("bits").isNotNull)
-        hashed.persist()
-        try {
-          val dups = graft.operators.Multimodal
-            .probeImageIndexFrame(spark.read.parquet(indexDir), hashed,
-              "id", "bits", maxHamming, bands)
-            .select(col("idNew").as("id")).distinct()
-          val fresh = hashed.join(dups, Seq("id"), "left_anti")
-          fresh.persist()
-          try {
-            fresh.select(col("id"), col(payloadCol))
-              .write.mode("append").json(outDir)
-            fresh.select(col("id"), col("bits"))
-              .write.mode("append").parquet(indexDir)
-          } finally fresh.unpersist()
-        } finally hashed.unpersist()
-        ()
+    val index = Drain.seeded(spark, indexDir, StructType(Seq(
+      StructField("id", LongType), StructField("bits", StringType))))
+    val source = Drain.json(spark, rawDir,
+      StructType(Seq(StructField("id", LongType), payload)), maxFilesPerTrigger)
+    Drain.foreachBatch(source, checkpointDir) { (batch, _) =>
+      // null fingerprints (e.g. a short envelope under
+      // audioFingerprintBits' size guard) are un-gateable: filtered
+      // here, landing in neither outDir nor the index — the same
+      // quality-floor semantics as the text ingest's token gate
+      persisted(batch.select(col("id"), col(payload.name),
+          fingerprint.as("bits")).filter(col("bits").isNotNull)) { hashed =>
+        val dups = Multimodal.probeImageIndexFrame(index(), hashed, "id",
+            "bits", maxHamming, bands)
+          .select(col("idNew").as("id")).distinct()
+        persisted(hashed.join(dups, Seq("id"), "left_anti")) { fresh =>
+          fresh.select(col("id"), col(payload.name))
+            .write.mode("append").json(outDir)
+          fresh.select(col("id"), col("bits"))
+            .write.mode("append").parquet(indexDir)
+        }
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** IMAGE-dedup ingest — the multimodal twin of [[runNearDupGate]],
     * and the grows-with-ingestion shape of the index families: each
     * arriving micro-batch of `(id, hx)` rasters is dHash-fingerprinted
-    * ([[graft.operators.Multimodal.dHashBits]]), probed against the
-    * PERSISTED fingerprint index by the banded hamming join
-    * (pigeonhole-exact at bands > maxHamming), near-dups of anything
-    * already indexed are dropped, and the survivors land in `outDir`
-    * WITH their fingerprints appended to the index — so a
-    * re-encoded/one-pixel-variant copy arriving in a later shard is
-    * blocked by the earlier original. Self-id matches are excluded in
-    * the probe (the at-least-once retry case: a batch re-executed
-    * after its index append must not block its own docs). Delivery is
-    * the foreachBatch contract — at-least-once; a retry re-lands
-    * identical (id, bits)/(id, hx) rows, which readers collapse
-    * keep-first (the [[graft.operators.Search.dedupIngestedIndex]]
-    * convention). Within-batch dups are not resolved here — the batch
-    * [[graft.operators.Multimodal.imageNearDupPairs]] tier is the
-    * intra-corpus pass; this gate's contract is new-vs-indexed. */
+    * ([[graft.operators.Multimodal.dHashBits]]) and gated by
+    * [[runFingerprintDedupGate]] — a re-encoded/one-pixel-variant
+    * copy arriving in a later shard is blocked by the earlier
+    * original. Within-batch dups belong to the batch
+    * [[graft.operators.Multimodal.imageNearDupPairs]] tier; this
+    * gate's contract is new-vs-indexed. */
   def runImageDedupIngest(spark: SparkSession, rawDir: String,
                           indexDir: String, outDir: String,
                           checkpointDir: String, maxHamming: Int = 3,
                           bands: Int = 4,
                           maxFilesPerTrigger: Int = 1): Unit =
     runFingerprintDedupGate(spark, rawDir, indexDir, outDir, checkpointDir,
-      schema = StructType(Seq(
-        StructField("id", LongType), StructField("hx", StringType))),
-      payloadCol = "hx",
-      fingerprint = graft.operators.Multimodal.dHashBits(col("hx"), 8, 8),
-      maxHamming = maxHamming, bands = bands,
-      maxFilesPerTrigger = maxFilesPerTrigger)
+      StructField("hx", StringType), Multimodal.dHashBits(col("hx"), 8, 8),
+      maxHamming, bands, maxFilesPerTrigger)
 
   /** AUDIO-dedup ingest — the audio twin of [[runImageDedupIngest]],
     * completing the perceptual-gate set across modalities (VERDICT r8
     * Missing #2): each arriving micro-batch of `(id, env)` loudness
     * envelopes ([[graft.operators.Multimodal.audioDecodeBatch]]'s
     * 65-bin output, pre-decoded at the codec seam) is gradient-sign
-    * fingerprinted ([[graft.operators.Multimodal.audioFingerprintBits]]),
-    * probed against the PERSISTED fingerprint index by the same
-    * banded hamming join (pigeonhole-exact at bands > maxHamming),
-    * near-dups of anything already indexed are dropped, and the
-    * survivors land in `outDir` WITH their fingerprints appended to
-    * the index — a re-encoded / re-gained copy arriving in a later
-    * shard is blocked by the earlier original. Self-id matches are
-    * excluded in the probe (the at-least-once retry case). Delivery
-    * is the foreachBatch contract — at-least-once; a retry re-lands
-    * identical rows, which readers collapse keep-first (the
-    * [[graft.operators.Search.dedupIngestedIndex]] convention).
-    * Within-batch dups belong to the batch
+    * fingerprinted ([[graft.operators.Multimodal.audioFingerprintBits]])
+    * and gated by [[runFingerprintDedupGate]] — a re-encoded /
+    * re-gained copy arriving in a later shard is blocked by the
+    * earlier original. Within-batch dups belong to the batch
     * [[graft.operators.Multimodal.audioNearDupPairs]] tier; this
     * gate's contract is new-vs-indexed. */
   def runAudioDedupIngest(spark: SparkSession, rawDir: String,
@@ -1108,38 +849,10 @@ object DocIngest {
                           bands: Int = 4,
                           maxFilesPerTrigger: Int = 1): Unit =
     runFingerprintDedupGate(spark, rawDir, indexDir, outDir, checkpointDir,
-      schema = StructType(Seq(
-        StructField("id", LongType),
-        StructField("env", ArrayType(DoubleType)))),
-      payloadCol = "env",
-      fingerprint =
-        graft.operators.Multimodal.audioFingerprintBits(col("env")),
-      maxHamming = maxHamming, bands = bands,
-      maxFilesPerTrigger = maxFilesPerTrigger)
+      StructField("env", ArrayType(DoubleType)),
+      Multimodal.audioFingerprintBits(col("env")),
+      maxHamming, bands, maxFilesPerTrigger)
 
-  /** Streaming benchmark-decontamination gate — the streaming twin of
-    * the q244 batch census, and the PERSISTED-index sibling of
-    * [[ingestDecontaminatedBloom]] (whose `stat.bloomFilter` sketch
-    * is session-built and engine-opaque; this gate's md5-position
-    * bitmap is stored once, survives sessions, and replays bit-exact
-    * in any engine — the build-once/probe-many convention of the five
-    * index families): each arriving micro-batch of docs is
-    * 8-gram shingled and probed against a PERSISTED bloom index
-    * ([[graft.operators.DatasetOps.writeBloomIndex]] — the benchmark
-    * set, built once); docs with any bloom hit are quarantined to
-    * `quarantineDir` WITH their hit count (the audit trail a
-    * decontamination policy needs — one-sided error means a hit is
-    * "possibly contaminated", and the quarantine file is what a human
-    * or an exact-tier recheck reviews), clean docs land in `outDir`.
-    * The bitmap is read ONCE per drain (a bounded driver pickup) and
-    * ships in every micro-batch's PLAN as one array literal — the
-    * probe is codegen'd bit arithmetic, no join, no broadcast, no
-    * state store. Unlike the dedup gates the index is NOT seeded when
-    * missing: decontaminating against a benchmark set that does not
-    * exist is a configuration error, and a silently-empty bitmap
-    * would pass everything — the gate refuses loudly instead.
-    * Delivery is the foreachBatch contract — at-least-once; a retry
-    * re-lands identical rows, collapsed keep-first by readers. */
   /** CHAT-JSONL ingest — the SFT ingest gate (the chat twin of the
     * dedup-gate family): each arriving micro-batch of raw chat JSONL
     * lines parses + validates + renders through
@@ -1191,189 +904,156 @@ object DocIngest {
                     paraphraseIndexDir: String = "",
                     paraphraseThreshold: Double = 0.5): Unit = {
     val paraGate = paraphraseIndexDir.nonEmpty
-    if (!hadoopExists(spark, indexDir)) {
-      import spark.implicits._
-      Seq.empty[String].toDF("rendered_md5")
-        .write.mode("overwrite").parquet(indexDir)
-    }
-    if (paraGate && !hadoopExists(spark, paraphraseIndexDir)) {
-      // seed with the writer's own schema (idCol line_md5 + shingle
-      // hashes + band rows) so the first batch's probe-side join binds
-      import spark.implicits._
-      graft.operators.Dedup.appendToMinhashIndex(
-        Seq.empty[(String, String)].toDF("line_md5", "rendered"),
+    val digests = Drain.seeded(spark, indexDir,
+      StructType(Seq(StructField("rendered_md5", StringType))))
+    def appendParaphrases(rows: DataFrame): Unit =
+      Dedup.appendToMinhashIndex(rows.select(col("line_md5"), col("rendered")),
         "rendered", "line_md5", paraphraseIndexDir,
         shingleWords = 3, numHashes = 24, bands = 12)
+    // seed with the writer's own schema (idCol line_md5 + shingle
+    // hashes + band rows) so the first batch's probe-side join binds
+    if (paraGate && !Drain.exists(spark, paraphraseIndexDir))
+      appendParaphrases(Drain.empty(spark, StructType(Seq(
+        StructField("line_md5", StringType), StructField("rendered", StringType)))))
+    // paraphrase probe: re-read the GROWING index each batch (earlier
+    // batches' survivors must block this one's twins), PLUS a
+    // within-batch banded pass (r14) — two paraphrases arriving in the
+    // SAME micro-batch see neither in the index, so the batch's own
+    // verified pair set drops every idB (keep-min: a chain A~B~C
+    // keeps exactly its minimum)
+    def paraphraseHits(fresh: DataFrame): DataFrame =
+      Dedup.probeMinhashIndexFrame(spark.read.parquet(paraphraseIndexDir),
+          fresh, "rendered", "line_md5", paraphraseThreshold,
+          shingleWords = 3, numHashes = 24, bands = 12)
+        // a row is never a paraphrase of ITS OWN index entry: after a
+        // partial batch (minhash appended, digest not — see the write
+        // ordering below) the retry re-probes rows whose own index
+        // rows already landed; without this guard they would self-hit
+        // at J=1.0 and quarantine instead of completing the commit
+        .filter(col("idNew") =!= col("idCorpus"))
+        .select(col("idNew").as("line_md5"))
+        .union(Dedup.minhashDupPairs(
+            fresh.select(col("line_md5"), col("rendered")),
+            "rendered", "line_md5", shingleWords = 3,
+            threshold = paraphraseThreshold, numHashes = 24, bands = 12)
+          .select(col("idB").as("line_md5")))
+        .distinct()
+    // eager localCheckpoint, not persist: the landing APPENDS to the
+    // very paths this plan READS (digest + minhash index), and Spark
+    // invalidates-and-recomputes path caches on write — a persisted
+    // survivors would re-derive its anti-join against the post-write
+    // index, see its own batch's digests, and arrive EMPTY at the
+    // later writes (observed: the minhash append received 0 rows
+    // while the landing write had just emitted them). Severed lineage
+    // cannot be invalidated; the checkpoint blocks are freed by the
+    // context cleaner when the batch's frame is GC'd.
+    //
+    // WRITE ORDERING (ADVICE r14): the digest-index append is the
+    // effective COMMIT POINT — the retry of a failed batch anti-joins
+    // rows out via the digest index — so every other effect must land
+    // BEFORE it. Landing first (a retry re-lands, readers collapse
+    // keep-first), then the paraphrase index (a retry re-appends, the
+    // probe's dropDuplicates absorbs the twin rows), digest last: a
+    // failure anywhere leaves the batch fully retryable, never a
+    // landed conversation whose paraphrase rows are unrecoverably
+    // missing (future twins would pass the gate forever).
+    def land(rows: DataFrame): Unit = {
+      val survivors = rows.localCheckpoint()
+      survivors.select(col("conv_id"), col("line_md5"),
+          col("n_turns"), col("rendered_len"), col("rendered_md5"),
+          col("mask_spans"), col("masked_chars"))
+        .write.mode("append").parquet(outDir)
+      if (paraGate) appendParaphrases(survivors)
+      survivors.select(col("rendered_md5"))
+        .write.mode("append").parquet(indexDir)
     }
-    val q = spark.readStream
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // toolAware routes through chatToolSchema + verdictTools, so
-        // an uncorrelated tool result quarantines as
-        // tool_call_mismatch instead of slipping through as ok, and
-        // serialized calls land inside the persisted render digest
-        val keyed = batch.withColumn("line_md5", md5(col("value")))
-        val flat =
-          if (toolAware) graft.operators.ChatOps.flattenTools(
-            keyed, "line_md5", "value", includeRendered = paraGate)
-          else graft.operators.ChatOps.flatten(
-            keyed, "line_md5", "value", includeRendered = paraGate)
-        flat.persist() // two consumers: quarantine + landing
-        try {
-          flat.filter(col("reason") =!= "ok")
-            .select(col("line_md5"), col("reason"))
-            .write.mode("append").json(quarantineDir)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("rendered_md5")).orderBy(col("line_md5"))
-          val firsts = flat.filter(col("reason") === "ok")
-            .withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1).drop("_rn")
-          val fresh = firsts.join(spark.read.parquet(indexDir),
-            Seq("rendered_md5"), "left_anti")
-          fresh.persist()
-          // paraphrase probe: re-read the GROWING index each batch
-          // (earlier batches' survivors must block this one's twins),
-          // PLUS a within-batch banded pass (r14) — two paraphrases
-          // arriving in the SAME micro-batch see neither in the
-          // index, so the batch's own verified pair set drops every
-          // idB (keep-min: a chain A~B~C keeps exactly its minimum)
-          val hitsOpt = if (paraGate) {
-            val cross = graft.operators.Dedup.probeMinhashIndexFrame(
-              spark.read.parquet(paraphraseIndexDir), fresh,
-              "rendered", "line_md5", paraphraseThreshold,
-              shingleWords = 3, numHashes = 24, bands = 12)
-              // a row is never a paraphrase of ITS OWN index entry:
-              // after a partial batch (minhash appended, digest not —
-              // see the write-ordering note below) the retry re-probes
-              // rows whose own index rows already landed; without this
-              // guard they would self-hit at J=1.0 and quarantine
-              // instead of completing the commit
-              .filter(col("idNew") =!= col("idCorpus"))
-              .select(col("idNew").as("line_md5"))
-            val within = graft.operators.Dedup.minhashDupPairs(
-              fresh.select(col("line_md5"), col("rendered")),
-              "rendered", "line_md5", shingleWords = 3,
-              threshold = paraphraseThreshold, numHashes = 24, bands = 12)
-              .select(col("idB").as("line_md5"))
-            val h = cross.union(within).distinct()
-            h.persist() // two consumers: quarantine + anti join
-            Some(h)
-          } else None
-          try {
-            hitsOpt.foreach { hits =>
-              fresh.join(hits, Seq("line_md5"), "left_semi")
-                .select(col("line_md5"),
-                  lit("paraphrase_near_dup").as("reason"))
-                .write.mode("append").json(quarantineDir)
+    Drain.foreachBatch(Drain.text(spark, rawDir, maxFilesPerTrigger),
+        checkpointDir) { (batch, _) =>
+      // toolAware routes through chatToolSchema + verdictTools, so
+      // an uncorrelated tool result quarantines as
+      // tool_call_mismatch instead of slipping through as ok, and
+      // serialized calls land inside the persisted render digest
+      val keyed = batch.withColumn("line_md5", md5(col("value")))
+      val flat =
+        if (toolAware) ChatOps.flattenTools(
+          keyed, "line_md5", "value", includeRendered = paraGate)
+        else ChatOps.flatten(
+          keyed, "line_md5", "value", includeRendered = paraGate)
+      persisted(flat) { flat => // two consumers: quarantine + landing
+        flat.filter(col("reason") =!= "ok")
+          .select(col("line_md5"), col("reason"))
+          .write.mode("append").json(quarantineDir)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("rendered_md5")).orderBy(col("line_md5"))
+        val firsts = flat.filter(col("reason") === "ok")
+          .withColumn("_rn", row_number().over(w))
+          .filter(col("_rn") === 1).drop("_rn")
+        persisted(firsts.join(digests(), Seq("rendered_md5"), "left_anti")) {
+          fresh =>
+            if (paraGate) persisted(paraphraseHits(fresh)) { hits =>
+              quarantine(fresh.join(hits, Seq("line_md5"), "left_semi"),
+                quarantineDir, col("line_md5"), "paraphrase_near_dup")
+              land(fresh.join(hits, Seq("line_md5"), "left_anti"))
             }
-            // eager localCheckpoint, not persist: the landing APPENDS
-            // to the very paths this plan READS (digest + minhash
-            // index), and Spark invalidates-and-recomputes path caches
-            // on write — a persisted survivors would re-derive its
-            // anti-join against the post-write index, see its own
-            // batch's digests, and arrive EMPTY at the later writes
-            // (observed: the minhash append received 0 rows while the
-            // landing write had just emitted them). Severed lineage
-            // cannot be invalidated; the checkpoint blocks are freed
-            // by the context cleaner when the batch's frame is GC'd.
-            val survivors = hitsOpt
-              .map(hits => fresh.join(hits, Seq("line_md5"), "left_anti"))
-              .getOrElse(fresh)
-              .localCheckpoint()
-            // WRITE ORDERING (ADVICE r14): the digest-index append is
-            // the effective COMMIT POINT — the retry of a failed batch
-            // anti-joins rows out via the digest index above — so every
-            // other effect must land BEFORE it. Landing first (a retry
-            // re-lands, readers collapse keep-first), then the
-            // paraphrase index (a retry re-appends, the probe's
-            // dropDuplicates absorbs the twin rows), digest last: a
-            // failure anywhere leaves the batch fully retryable, never
-            // a landed conversation whose paraphrase rows are
-            // unrecoverably missing (future twins would pass the gate
-            // forever).
-            survivors.select(col("conv_id"), col("line_md5"),
-                col("n_turns"), col("rendered_len"), col("rendered_md5"),
-                col("mask_spans"), col("masked_chars"))
-              .write.mode("append").parquet(outDir)
-            if (paraGate)
-              graft.operators.Dedup.appendToMinhashIndex(
-                survivors.select(col("line_md5"), col("rendered")),
-                "rendered", "line_md5", paraphraseIndexDir,
-                shingleWords = 3, numHashes = 24, bands = 12)
-            survivors.select(col("rendered_md5"))
-              .write.mode("append").parquet(indexDir)
-          } finally {
-            hitsOpt.foreach(_.unpersist())
-            fresh.unpersist()
-          }
-        } finally flat.unpersist()
-        ()
+            else land(fresh)
+        }
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
+  /** Streaming benchmark-decontamination gate — the streaming twin of
+    * the q244 batch census, and the PERSISTED-index sibling of
+    * [[ingestDecontaminatedBloom]] (whose `stat.bloomFilter` sketch
+    * is session-built and engine-opaque; this gate's md5-position
+    * bitmap is stored once, survives sessions, and replays bit-exact
+    * in any engine — the build-once/probe-many convention of the five
+    * index families): each arriving micro-batch of docs is
+    * 8-gram shingled and probed against a PERSISTED bloom index
+    * ([[graft.operators.DatasetOps.writeBloomIndex]] — the benchmark
+    * set, built once); docs with any bloom hit are quarantined to
+    * `quarantineDir` WITH their hit count (the audit trail a
+    * decontamination policy needs — one-sided error means a hit is
+    * "possibly contaminated", and the quarantine file is what a human
+    * or an exact-tier recheck reviews), clean docs land in `outDir`.
+    * The bitmap is read ONCE per drain (a bounded driver pickup) and
+    * ships in every micro-batch's PLAN as one array literal — the
+    * probe is codegen'd bit arithmetic, no join, no broadcast, no
+    * state store. Unlike the dedup gates the index is NOT seeded when
+    * missing: decontaminating against a benchmark set that does not
+    * exist is a configuration error, and a silently-empty bitmap
+    * would pass everything — the gate refuses loudly instead.
+    * Delivery is the foreachBatch contract — at-least-once; a retry
+    * re-lands identical rows, collapsed keep-first by readers. */
   def runBloomDecontamIngest(spark: SparkSession, rawDir: String,
                              indexDir: String, outDir: String,
                              quarantineDir: String, checkpointDir: String,
                              shingleK: Int = 8,
                              maxFilesPerTrigger: Int = 1): Unit = {
-    require(hadoopExists(spark, indexDir),
+    require(Drain.exists(spark, indexDir),
       s"no bloom index at $indexDir — build it with writeBloomIndex " +
         "first; an empty decontamination gate would pass everything")
-    val (bits, m, k) = graft.operators.DatasetOps.readBloomIndex(spark, indexDir)
-    val q = readDocStream(spark, rawDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val probed = batch
-          .withColumn("gs", graft.functions.TextFunctions.wordShingles(
-            graft.functions.TextFunctions.whitespaceTokens(col("text")),
-            shingleK))
+    val (bits, m, k) = DatasetOps.readBloomIndex(spark, indexDir)
+    Drain.foreachBatch(readDocStream(spark, rawDir, maxFilesPerTrigger),
+        checkpointDir) { (batch, _) =>
+      persisted(batch
+          .withColumn("gs", wordShingles(whitespaceTokens(col("text")), shingleK))
           .withColumn("bits", typedLit(bits.toSeq))
-          .withColumn("n_hits",
-            graft.operators.DatasetOps.bloomHitCount("gs", "bits", m, k))
-          .drop("gs", "bits")
-        probed.persist()
-        try {
-          probed.filter(col("n_hits") > 0)
-            .write.mode("append").json(quarantineDir)
-          probed.filter(col("n_hits") === 0).drop("n_hits")
-            .write.mode("append").json(outDir)
-        } finally probed.unpersist()
-        ()
+          .withColumn("n_hits", DatasetOps.bloomHitCount("gs", "bits", m, k))
+          .drop("gs", "bits")) { probed =>
+        probed.filter(col("n_hits") > 0)
+          .write.mode("append").json(quarantineDir)
+        probed.filter(col("n_hits") === 0).drop("n_hits")
+          .write.mode("append").json(outDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Current per-source KMV min-set = the highest published version
     * (empty before the first batch). Feed through
     * [[graft.operators.Sketches.kmvEstimate]] for the running
     * distinct-count board. */
-  private def emptyKmv(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("source", StringType),
-        StructField("_h", LongType))))
-
   def readKmvState(spark: SparkSession, stateDir: String): DataFrame =
-    ViewIngest.versionDirs(spark, stateDir).sortBy(_._1).lastOption match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None => emptyKmv(spark)
-    }
-
-  private def emptyLinkGraph(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("target", StringType),
-        StructField("src_host", StringType),
-        StructField("n_links", LongType))))
+    Drain.latest(spark, stateDir, kmvSchema)
 
   /** Streaming LINK-GRAPH census — the incrementally-maintained
     * WAT-shaped view feeding the authority tier (q286's PageRank,
@@ -1382,7 +1062,7 @@ object DocIngest {
     * anchors extract ([[graft.functions.TextFunctions.extractAnchors]]),
     * resolve against the page URL, normalize, and fold into a
     * persisted (target, src_host, n_links) census under the
-    * `v=<batchId>` out-of-place versioning (retry-idempotent: a
+    * [[Drain]] versioned-state convention (retry-idempotent: a
     * replayed batch recomputes from the same prior version and
     * overwrites its own snapshot — counts are sums, so the in-place
     * append the sketch ingest uses would double-count here).
@@ -1401,56 +1081,33 @@ object DocIngest {
                          maxFilesPerTrigger: Int = 1): Unit = {
     val schema = StructType(Seq(StructField("page_url", StringType),
       StructField("html", StringType)))
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = ViewIngest.versionDirs(spark, stateDir)
-          .filter(_._1 < batchId).sortBy(_._1).lastOption match {
-          case Some((_, dir)) => spark.read.parquet(dir)
-          case None => emptyLinkGraph(spark)
-        }
-        val site = regexp_extract(col("page_url"), "^(https?://[^/]+)", 1)
-        val part = batch
-          .select(site.as("site"), col("page_url"), col("html"))
-          .select(col("site"),
-            explode(graft.functions.TextFunctions
-              .extractAnchors(col("html"), col("page_url"))).as("a"))
-          .select(col("site"),
-            graft.functions.TextFunctions.urlNormalize(col("a.url"))
-              .as("target"))
-          // internal = same HOST, compared host-to-host (ADVICE r11:
-          // a raw string-prefix test against the origin classified
-          // https://alpha.organic-foo.com/... as internal to
-          // https://alpha.org — the prefix needs a boundary, and
-          // extracting both hosts is the boundary-free way to say it)
-          .where(regexp_extract(col("target"), "^https?://([^/?#]+)", 1)
-            =!= regexp_extract(col("site"), "^https?://(.+)$", 1))
-          .select(col("target"),
-            regexp_extract(col("site"), "^https?://(.+)$", 1)
-              .as("src_host"))
+    Drain.foreachBatch(Drain.json(spark, rawDir, schema, maxFilesPerTrigger),
+        checkpointDir) { (batch, batchId) =>
+      val site = regexp_extract(col("page_url"), "^(https?://[^/]+)", 1)
+      val srcHost = regexp_extract(col("site"), "^https?://(.+)$", 1)
+      val part = batch
+        .select(site.as("site"),
+          explode(extractAnchors(col("html"), col("page_url"))).as("a"))
+        .select(col("site"), urlNormalize(col("a.url")).as("target"))
+        // internal = same HOST, compared host-to-host (ADVICE r11:
+        // a raw string-prefix test against the origin classified
+        // https://alpha.organic-foo.com/... as internal to
+        // https://alpha.org — the prefix needs a boundary, and
+        // extracting both hosts is the boundary-free way to say it)
+        .where(regexp_extract(col("target"), "^https?://([^/?#]+)", 1)
+          =!= srcHost)
+        .groupBy(col("target"), srcHost.as("src_host"))
+        .agg(count(lit(1)).as("n_links"))
+      Drain.fold(spark, stateDir, linkSchema, batchId, None)(
+        _.unionByName(part)
           .groupBy(col("target"), col("src_host"))
-          .agg(count(lit(1)).as("n_links"))
-        prev.unionByName(part)
-          .groupBy(col("target"), col("src_host"))
-          .agg(sum(col("n_links")).cast(LongType).as("n_links"))
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          .agg(sum(col("n_links")).cast(LongType).as("n_links")))
+    }
   }
 
   /** Latest link-graph snapshot: (target, src_host, n_links). */
   def readLinkGraph(spark: SparkSession, stateDir: String): DataFrame =
-    ViewIngest.versionDirs(spark, stateDir).sortBy(_._1).lastOption match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None => emptyLinkGraph(spark)
-    }
+    Drain.latest(spark, stateDir, linkSchema)
 
   /** Streaming SITEMAP expansion — the discovery loop's second hop:
     * fetched sitemap documents arrive as (sitemap_url, xml) and split
@@ -1469,43 +1126,18 @@ object DocIngest {
                        seenDir: String, queueDir: String,
                        frontierDir: String, checkpointDir: String,
                        maxFilesPerTrigger: Int = 1): Unit = {
-    if (!hadoopExists(spark, seenDir)) {
-      import spark.implicits._
-      Seq.empty[String].toDF("n").write.mode("overwrite").parquet(seenDir)
-    }
+    val seen = Drain.seeded(spark, seenDir, keySchema)
     val schema = StructType(Seq(StructField("sitemap_url", StringType),
       StructField("xml", StringType)))
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.functions.TextFunctions._
-        val children = batch
-          .select(explode(sitemapIndexLocs(col("xml"))).as("u"))
-          .select(urlNormalize(col("u")).as("n"), col("u"))
-          .groupBy(col("n")).agg(min(col("u")).as("url"))
-        val fresh = children.join(
-          spark.read.parquet(seenDir).select(col("n")).distinct(),
-          Seq("n"), "left_anti")
-        fresh.persist()
-        try {
-          fresh.select(col("n"), col("url"))
-            .write.mode("append").json(queueDir)
-          fresh.select(col("n"))
-            .write.mode("append").parquet(seenDir)
-        } finally { fresh.unpersist(); () }
-        val pages = batch
-          .select(explode(sitemapUrlLocs(col("xml"))).as("u"))
-          .select(urlNormalize(col("u")).as("url"))
-        pages.write.mode("append").json(frontierDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.foreachBatch(Drain.json(spark, rawDir, schema, maxFilesPerTrigger),
+        checkpointDir) { (batch, _) =>
+      val children =
+        byKey(batch.select(explode(sitemapIndexLocs(col("xml"))).as("url")))
+      enqueue(unseen(children, seen()), queueDir)(recordSeen(seenDir))
+      batch.select(explode(sitemapUrlLocs(col("xml"))).as("u"))
+        .select(urlNormalize(col("u")).as("url"))
+        .write.mode("append").json(frontierDir)
+    }
   }
 
   /** Streaming running-cardinality maintenance — the KMV twin of the
@@ -1514,7 +1146,7 @@ object DocIngest {
     * ([[graft.operators.Sketches.kmvMergeMins]] — min-k is
     * associative/commutative/idempotent, so arrival order and shard
     * boundaries cannot change the converged sketch), published as
-    * immutable `v=<batchId>` versions (the [[ViewIngest]] out-of-place
+    * immutable `v=<batchId>` versions (the [[Drain]] versioned-state
     * convention: a retried batch reads the latest version strictly
     * below its own id and re-lands the identical version —
     * idempotent without a transactional sink). State is
@@ -1523,31 +1155,14 @@ object DocIngest {
   def runKmvIngest(spark: SparkSession, rawDir: String, stateDir: String,
                    checkpointDir: String, k: Int = 256,
                    maxFilesPerTrigger: Int = 1,
-                   retainVersions: Option[Int] = None): Unit = {
-    val q = readDocStream(spark, rawDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val prev = ViewIngest.versionDirs(spark, stateDir)
-          .filter(_._1 < batchId).sortBy(_._1).lastOption match {
-          case Some((_, dir)) => spark.read.parquet(dir)
-          case None => emptyKmv(spark)
-        }
-        val batchMins = graft.operators.Sketches.kmvMins(
-          batch.select(col("source"), explode(
-            graft.functions.TextFunctions.whitespaceTokens(col("text")))
-            .as("tok")),
-          Seq("source"), "tok", k)
-        graft.operators.Sketches
-          .kmvMergeMins(Seq(prev, batchMins), Seq("source"), k)
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        retainVersions.foreach(ViewIngest.pruneVersions(spark, stateDir, _))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   retainVersions: Option[Int] = None): Unit =
+    Drain.foreachBatch(readDocStream(spark, rawDir, maxFilesPerTrigger),
+        checkpointDir) { (batch, batchId) =>
+      val batchMins = Sketches.kmvMins(batch.select(col("source"),
+        explode(whitespaceTokens(col("text"))).as("tok")), Seq("source"), "tok", k)
+      Drain.fold(spark, stateDir, kmvSchema, batchId, retainVersions)(
+        prev => Sketches.kmvMergeMins(Seq(prev, batchMins), Seq("source"), k))
+    }
 
   /** HLL-SKETCH ingest — the grows-with-ingestion leg of q316's
     * persisted mergeable distinct-count rollup (VERDICT r12 Missing
@@ -1573,35 +1188,37 @@ object DocIngest {
                    retainVersions: Option[Int] = None): Unit = {
     val evSchema = StructType(Seq(
       StructField("ts", StringType), StructField("user_id", LongType)))
-    val q = spark.readStream
-      .schema(evSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prev = ViewIngest.versionDirs(spark, stateDir)
-          .filter(_._1 < batchId).sortBy(_._1).lastOption match {
-          case Some((_, dir)) => spark.read.parquet(dir)
-          case None => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(Seq(StructField("day", DateType),
-              StructField("sk", BinaryType))))
-        }
-        val batchSk = batch
-          .groupBy(to_date(col("ts")).as("day"))
-          .agg(hll_sketch_agg(col("user_id"), lgK).as("sk"))
-        prev.unionByName(batchSk)
-          .groupBy(col("day"))
-          .agg(hll_union_agg(col("sk")).as("sk"))
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        retainVersions.foreach(ViewIngest.pruneVersions(spark, stateDir, _))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.foreachBatch(Drain.json(spark, rawDir, evSchema, maxFilesPerTrigger),
+        checkpointDir) { (batch, batchId) =>
+      val batchSk = batch.groupBy(to_date(col("ts")).as("day"))
+        .agg(hll_sketch_agg(col("user_id"), lgK).as("sk"))
+      Drain.fold(spark, stateDir, hllSchema, batchId, retainVersions)(
+        _.unionByName(batchSk).groupBy(col("day"))
+          .agg(hll_union_agg(col("sk")).as("sk")))
+    }
   }
+
+  /** The outcome gates' shared loop: each batch `fold`s into the
+    * versioned state (read before its own id), the new state is
+    * rated (`rate`, the Bradley–Terry MM) into the board, both publish
+    * as `v=<batchId>`, and only then does retention prune either dir —
+    * the new version is the newest in each and therefore survives. */
+  private def outcomeGate(spark: SparkSession, rawDir: String,
+                          stateDir: String, boardDir: String,
+                          checkpointDir: String, maxFilesPerTrigger: Int,
+                          retainVersions: Option[Int], stateSchema: StructType)(
+      fold: (DataFrame, DataFrame, Long) => DataFrame)(
+      rate: DataFrame => DataFrame): Unit =
+    Drain.foreachBatch(Drain.json(spark, rawDir, outcomeSchema,
+        maxFilesPerTrigger), checkpointDir) { (batch, batchId) =>
+      val state = fold(batch, Drain.prior(spark, stateDir, stateSchema,
+          batchId), batchId)
+        .localCheckpoint() // two consumers: the state write + board
+      Drain.publish(state, stateDir, batchId)
+      Drain.publish(rate(state).withColumnRenamed("item", "model"),
+        boardDir, batchId)
+      Drain.retainVersions(spark, retainVersions, stateDir, boardDir)
+    }
 
   /** PREFERENCE-OUTCOME ingest + live Bradley-Terry board (r15 —
     * VERDICT r14 stretch): the leaderboard's feed is a stream of
@@ -1631,7 +1248,7 @@ object DocIngest {
     * `v=` versions otherwise accumulate forever. `retainVersions`
     * (when set) prunes BOTH dirs to the newest k versions AFTER the
     * batch's writes commit — so the live version and the
-    * retried-batch repair window ([[ViewIngest.pruneVersions]]'s
+    * retried-batch repair window ([[Drain.pruneVersions]]'s
     * safety contract: keep ≥ the max expected retry lag) are never
     * touched, and a concurrent reader can only lose versions it
     * would not have picked.
@@ -1647,61 +1264,27 @@ object DocIngest {
                        stateDir: String, boardDir: String,
                        checkpointDir: String, iters: Int = 4,
                        maxFilesPerTrigger: Int = 1,
-                       retainVersions: Option[Int] = None): Unit = {
-    val ocSchema = StructType(Seq(
-      StructField("oid", StringType), StructField("winner", LongType),
-      StructField("loser", LongType)))
-    val q = spark.readStream
-      .schema(ocSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                       retainVersions: Option[Int] = None): Unit =
+    outcomeGate(spark, rawDir, stateDir, boardDir, checkpointDir,
+        maxFilesPerTrigger, retainVersions, outcomeSchema) {
+      (batch, prev, batchId) =>
         val nNullOid = batch.filter(col("oid").isNull).count()
         require(nNullOid == 0L,
           s"runOutcomeIngest: batch $batchId carries $nNullOid " +
             s"outcomes with a NULL oid — the keep-first dedup would " +
             s"collapse them all into ONE game; every outcome needs a " +
             s"unique id (the at-least-once audit seam)")
-        val prev = ViewIngest.versionDirs(spark, stateDir)
-          .filter(_._1 < batchId).sortBy(_._1).lastOption match {
-          case Some((_, dir)) => spark.read.parquet(dir)
-          case None => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            ocSchema)
-        }
-        val log = prev
-          .unionByName(batch.select(col("oid"), col("winner"),
-            col("loser")))
-          .dropDuplicates("oid") // outcomes are immutable facts: any
-          // copy of an oid is the right one, keep-first
-          .localCheckpoint()    // two consumers: the log write + board
-        log.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        graft.operators.EvalOps.bradleyTerry(log, "winner", "loser",
-            iters = iters, dedupIdCol = Some("oid"))
-          .withColumnRenamed("item", "model")
-          .write.mode("overwrite").parquet(s"$boardDir/v=$batchId")
-        // prune only after BOTH writes committed: the new version is
-        // the newest in each dir and therefore always survives
-        retainVersions.foreach { k =>
-          ViewIngest.pruneVersions(spark, stateDir, k)
-          ViewIngest.pruneVersions(spark, boardDir, k)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+        // outcomes are immutable facts: any copy of an oid is the right
+        // one, keep-first
+        prev.unionByName(batch).dropDuplicates("oid")
+    }(EvalOps.bradleyTerry(_, "winner", "loser", iters = iters,
+      dedupIdCol = Some("oid")))
 
   /** Latest published board of [[runOutcomeIngest]]. */
   def readOutcomeBoard(spark: SparkSession, boardDir: String): DataFrame =
-    ViewIngest.versionDirs(spark, boardDir).sortBy(_._1).lastOption match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None => throw new IllegalStateException(
-        s"no outcome board at $boardDir — run runOutcomeIngest first")
-    }
+    Drain.latestVersion(spark, boardDir).map(spark.read.parquet(_))
+      .getOrElse(throw new IllegalStateException(
+        s"no outcome board at $boardDir — run runOutcomeIngest first"))
 
   /** COMPACTED outcome ingest (r16 — VERDICT r15 stretch #8): the
     * documented escape hatch for leaderboard streams whose outcome
@@ -1731,54 +1314,23 @@ object DocIngest {
                              checkpointDir: String, iters: Int = 4,
                              maxFilesPerTrigger: Int = 1,
                              retainVersions: Option[Int] = None): Unit = {
-    val ocSchema = StructType(Seq(
-      StructField("oid", StringType), StructField("winner", LongType),
-      StructField("loser", LongType)))
     val censusSchema = StructType(Seq(
       StructField("winner", LongType), StructField("loser", LongType),
       StructField("n", LongType)))
-    val q = spark.readStream
-      .schema(ocSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    outcomeGate(spark, rawDir, stateDir, boardDir, checkpointDir,
+        maxFilesPerTrigger, retainVersions, censusSchema) {
+      (batch, prev, batchId) =>
         val nNull = batch
           .filter(col("winner").isNull || col("loser").isNull).count()
         require(nNull == 0L,
           s"runOutcomeCensusIngest: batch $batchId carries $nNull " +
             s"outcomes with a NULL winner or loser — a census cannot " +
             s"hold an unidentified duel")
-        val prev = ViewIngest.versionDirs(spark, stateDir)
-          .filter(_._1 < batchId).sortBy(_._1).lastOption match {
-          case Some((_, dir)) => spark.read.parquet(dir)
-          case None => spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            censusSchema)
-        }
-        val part = batch
-          .filter(col("winner") =!= col("loser"))
-          .groupBy(col("winner"), col("loser"))
-          .agg(count(lit(1)).as("n"))
-        val census = prev.unionByName(part)
-          .groupBy(col("winner"), col("loser"))
+        val part = batch.filter(col("winner") =!= col("loser"))
+          .groupBy(col("winner"), col("loser")).agg(count(lit(1)).as("n"))
+        prev.unionByName(part).groupBy(col("winner"), col("loser"))
           .agg(sum(col("n")).as("n"))
-          .localCheckpoint() // two consumers: the state write + board
-        census.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        graft.operators.EvalOps.bradleyTerryCensus(census, "winner",
-            "loser", "n", iters = iters)
-          .withColumnRenamed("item", "model")
-          .write.mode("overwrite").parquet(s"$boardDir/v=$batchId")
-        retainVersions.foreach { k =>
-          ViewIngest.pruneVersions(spark, stateDir, k)
-          ViewIngest.pruneVersions(spark, boardDir, k)
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }(EvalOps.bradleyTerryCensus(_, "winner", "loser", "n", iters = iters))
   }
 
   /** QUALITY-DRIFT monitor (r16 — VERDICT r15 #7): the TEXT tier's
@@ -1809,28 +1361,17 @@ object DocIngest {
                             bucketWidth: Long = 5000L,
                             flagPpm: Long = 500000L,
                             minTokens: Int = 3,
-                            maxFilesPerTrigger: Int = 1): Unit = {
-    val q = ingest(readDocStream(spark, rawDir, maxFilesPerTrigger),
-        minTokens)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val base = spark.read.parquet(baselineDir)
-        val scored = graft.operators.DatasetOps.classifierScores(
-          batch, "doc_id", "text")
-        val cur = graft.operators.DatasetOps.scoreBucketCensus(
-          scored, "score", bucketWidth)
-        graft.operators.DatasetOps.censusDriftPpm(cur, base)
-          .select(lit(batchId).as("batch_id"), col("n_docs"),
-            col("drift_ppm"),
-            (col("drift_ppm") > flagPpm).as("flagged"))
-          .write.mode("append").parquet(monitorDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                            maxFilesPerTrigger: Int = 1): Unit =
+    Drain.foreachBatch(ingest(readDocStream(spark, rawDir,
+        maxFilesPerTrigger), minTokens), checkpointDir) { (batch, batchId) =>
+      val cur = DatasetOps.scoreBucketCensus(
+        DatasetOps.classifierScores(batch, "doc_id", "text"), "score",
+        bucketWidth)
+      DatasetOps.censusDriftPpm(cur, spark.read.parquet(baselineDir))
+        .select(lit(batchId).as("batch_id"), col("n_docs"), col("drift_ppm"),
+          (col("drift_ppm") > flagPpm).as("flagged"))
+        .write.mode("append").parquet(monitorDir)
+    }
 
   /** Persist the quality baseline census for
     * [[runQualityDriftIngest]]: the reference corpus scored and
@@ -1839,8 +1380,8 @@ object DocIngest {
   def writeScoreBaseline(docs: DataFrame, idCol: String, textCol: String,
                          baselineDir: String,
                          bucketWidth: Long = 5000L): Unit =
-    graft.operators.DatasetOps.scoreBucketCensus(
-        graft.operators.DatasetOps.classifierScores(docs, idCol, textCol),
+    DatasetOps.scoreBucketCensus(
+        DatasetOps.classifierScores(docs, idCol, textCol),
         "score", bucketWidth)
       .coalesce(1).write.mode("overwrite").parquet(baselineDir)
 
@@ -1853,11 +1394,10 @@ object DocIngest {
 
   /** Latest persisted daily-sketch table of [[runHllIngest]]. */
   def readHllState(spark: SparkSession, stateDir: String): DataFrame =
-    ViewIngest.versionDirs(spark, stateDir).sortBy(_._1).lastOption match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None => throw new IllegalStateException(
-        s"no HLL sketch state at $stateDir — run runHllIngest first")
-    }
+    Drain.latestVersion(spark, stateDir)
+      .map(spark.read.schema(hllSchema).parquet(_))
+      .getOrElse(throw new IllegalStateException(
+        s"no HLL sketch state at $stateDir — run runHllIngest first"))
 
   /** The LIVE mode of the scaladoc's "runs continuously" claim: the
     * same [[ingest]] transform under a `ProcessingTime` trigger, left
@@ -1870,13 +1410,8 @@ object DocIngest {
                         checkpointDir: String, intervalMs: Long = 500,
                         maxFilesPerTrigger: Int = 1)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ingest(readDocStream(spark, rawDir, maxFilesPerTrigger))
-      .writeStream
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(intervalMs))
-      .start()
+    Drain.startFiles(ingest(readDocStream(spark, rawDir, maxFilesPerTrigger)),
+      "json", outDir, checkpointDir, intervalMs)
 
   /** FREQUENCY-SKETCH ingest: each arriving micro-batch folds its
     * token census into a persisted count-min grid
@@ -1898,22 +1433,28 @@ object DocIngest {
                       sketchDir: String, checkpointDir: String,
                       depth: Int = 3, width: Int = 1024,
                       minTokens: Int = 3,
-                      maxFilesPerTrigger: Int = 1): Unit = {
-    val q = ingest(readDocStream(spark, rawDir, maxFilesPerTrigger), minTokens)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val toks = batch.select(
-          explode(whitespaceTokens(col("text"))).as("token"))
-        graft.operators.Sketches.countMinBuild(toks, "token", depth, width)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(sketchDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                      maxFilesPerTrigger: Int = 1): Unit =
+    Drain.foreachBatch(ingest(readDocStream(spark, rawDir,
+        maxFilesPerTrigger), minTokens), checkpointDir) { (batch, batchId) =>
+      Sketches.countMinBuild(batch.select(
+          explode(whitespaceTokens(col("text"))).as("token")), "token",
+          depth, width)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(sketchDir)
+    }
+
+  /** Drain a `(vec_id, embedding)` JSONL stream as `(cid, v)` batches,
+    * appending `encode`'s codes to `indexDir/codes` — raw vectors never
+    * land in the index. */
+  private def drainCodes(spark: SparkSession, rawDir: String,
+                         indexDir: String, checkpointDir: String,
+                         maxFilesPerTrigger: Int)(
+      encode: DataFrame => DataFrame): Unit =
+    Drain.foreachBatch(Drain.json(spark, rawDir, vecSchema, maxFilesPerTrigger)
+        .select(col("vec_id").as("cid"), col("embedding").as("v")),
+        checkpointDir) { (batch, _) =>
+      encode(batch).write.mode("append").parquet(s"$indexDir/codes")
+    }
 
   /** PQ-CODE ingest — the embedding-compression twin of
     * [[runIvfIngest]]: each arriving micro-batch of vectors is
@@ -1943,31 +1484,15 @@ object DocIngest {
                   maxFilesPerTrigger: Int = 1,
                   seedBooks: graft.operators.Similarity.Pq.Codebooks =
                     graft.operators.Similarity.Pq.md5Codebooks): Unit = {
-    val Pq = graft.operators.Similarity.Pq
-    if (!hadoopExists(spark, s"$indexDir/books"))
+    val Pq = Similarity.Pq
+    if (!Drain.exists(spark, s"$indexDir/books"))
       Pq.writePqBooks(spark, indexDir, seedBooks)
     // read the sidecar ONCE, not once per micro-batch (the
     // runNearDupGate convention); the sidecar is immutable under this
     // ingest, so the snapshot stays valid for the whole drain
     val books = Pq.readPqBooks(spark, indexDir)
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType))))
-    val q = spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .select(col("vec_id").as("cid"), col("embedding").as("v"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pq.encodeWideWith(batch, "cid", "v", books)
-          .write.mode("append").parquet(s"$indexDir/codes")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainCodes(spark, rawDir, indexDir, checkpointDir, maxFilesPerTrigger)(
+      Pq.encodeWideWith(_, "cid", "v", books))
   }
 
   /** SQ-CODE ingest — [[runPqIngest]]'s scalar-quantization twin:
@@ -1993,8 +1518,8 @@ object DocIngest {
                   maxFilesPerTrigger: Int = 1,
                   seedMinMax: Option[(Seq[Double], Seq[Double])] = None)
       : Unit = {
-    val Sq = graft.operators.Similarity.Sq
-    if (!hadoopExists(spark, s"$indexDir/minmax")) {
+    val Sq = Similarity.Sq
+    if (!Drain.exists(spark, s"$indexDir/minmax")) {
       val (mns, mxs) = seedMinMax.getOrElse(throw new
           IllegalArgumentException(
             s"runSqIngest: no minmax sidecar at $indexDir/minmax and " +
@@ -2003,25 +1528,8 @@ object DocIngest {
       Sq.writeSqMinMax(spark, indexDir, mns, mxs)
     }
     val (mns, mxs) = Sq.readSqMinMax(spark, indexDir)
-    val vecSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType))))
-    val q = spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .select(col("vec_id").as("cid"), col("embedding").as("v"))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.select(col("cid"),
-          Sq.encode(col("v"), mns, mxs).as("codes"))
-          .write.mode("append").parquet(s"$indexDir/codes")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainCodes(spark, rawDir, indexDir, checkpointDir, maxFilesPerTrigger)(
+      _.select(col("cid"), Sq.encode(col("v"), mns, mxs).as("codes")))
   }
 
   /** Merge the landed per-batch partial grids into the current sketch

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQueryListener}
 import graft.pipeline.OrderPipeline
 import graft.schema.OrderSchema
 
@@ -14,8 +14,8 @@ case class CustomerTotal(customerId: String, nOrders: Long, revenue: Double)
 /** Structured Streaming twin of the batch pipeline (SURVEY.md §2 S2 /
   * §2.10; policy:41-77, readme:22): the reference's
   * "S3 ObjectCreated → EventBridge → process that one file" loop is a
-  * file-source stream, and `Trigger.AvailableNow` reproduces its
-  * run-per-invocation batching. `maxFilesPerTrigger=1` gives the
+  * file-source stream, and the [[Drain]] skeleton's AvailableNow
+  * drain reproduces its run-per-invocation batching. `maxFilesPerTrigger=1` gives the
   * bit-faithful one-file-per-micro-batch unit of work
   * (processor.py:166 reads exactly one object per event).
   *
@@ -51,13 +51,7 @@ object OrderStream {
     val processed = OrderPipeline.processOrders(
       OrderPipeline.dropCorrupt(readRawStream(spark, rawDir, maxFilesPerTrigger)),
       observeName = s"graft_stream_${System.nanoTime()}")
-    val q: StreamingQuery = processed.writeStream
-      .format("json")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.toFiles(processed, "json", outDir, checkpointDir)
   }
 
   /** The streaming half of A6 (processor.py:184-194): the batch path
@@ -133,13 +127,7 @@ object OrderStream {
         watermarkDelay)
       val processed = OrderPipeline.processOrders(deduped,
         observeName = s"graft_dedup_${System.nanoTime()}")
-      val q = processed.writeStream
-        .format("json")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Drain.toFiles(processed, "json", outDir, checkpointDir)
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)

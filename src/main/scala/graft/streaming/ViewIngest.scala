@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Streaming materialized-view maintenance — the foreachBatch loop
@@ -11,13 +10,10 @@ import org.apache.spark.sql.types._
   * fact table — the view is the only state, and each batch's work is
   * changelog-sized.
   *
-  * State is published as immutable versions `v=<batchId>` (the
-  * out-of-place convention): a batch reads the LATEST VERSION BELOW
-  * ITS OWN ID and overwrites its own version — so an at-least-once
-  * re-execution of batch k (always the youngest, by the foreachBatch
-  * retry contract) re-reads the same input state and re-lands the
-  * identical version k: idempotent without a transactional sink.
-  * Readers take the highest version.
+  * State is published as immutable `v=<batchId>` versions under the
+  * [[Drain]] versioned-state convention: a retried batch re-reads the
+  * version below its own id and re-lands the identical version, and
+  * readers take the highest version.
   */
 object ViewIngest {
 
@@ -28,58 +24,19 @@ object ViewIngest {
     StructField("old_grp", StringType),
     StructField("old_val", LongType)))
 
-  private[streaming] def versionDirs(spark: SparkSession,
-                                     stateDir: String): Seq[(Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(st => (st.getPath.getName.drop(2).toLong,
-        st.getPath.toString))
-  }
-
-  /** Retention GC for the `v=<batchId>` versioned-state convention —
-    * the missing lifecycle step of the out-of-place publish (every
-    * batch lands a FULL successor snapshot, so superseded versions
-    * accumulate forever without this): keep the newest `keep`
-    * versions, delete the rest, return the pruned batch ids.
-    *
-    * Safety contract: readers ([[readAggView]],
-    * [[graft.streaming.DocIngest.readKmvState]]) read the HIGHEST
-    * version, which is never pruned — a concurrent reader can at
-    * worst lose a superseded version it would not have picked. The
-    * retried-batch repair, however, reads the latest version
-    * STRICTLY BELOW the retried id — so `keep` must cover the
-    * maximum expected retry lag while the stream is live; `keep = 1`
-    * is only safe on a drained stream. */
+  /** [[Drain.pruneVersions]] — the retention GC for this view's
+    * `v=<batchId>` state (and every other versioned gate's). */
   def pruneVersions(spark: SparkSession, stateDir: String,
-                    keep: Int): Seq[Long] = {
-    require(keep >= 1,
-      s"pruneVersions: keep must be >= 1 (the newest version is the " +
-        s"live state), got $keep")
-    val victims = versionDirs(spark, stateDir).sortBy(-_._1).drop(keep)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    victims.foreach { case (_, dir) =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    }
-    victims.map(_._1)
-  }
+                    keep: Int): Seq[Long] =
+    Drain.pruneVersions(spark, stateDir, keep)
 
-  private def emptyState(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("grp", StringType),
-        StructField("cnt", LongType), StructField("total", LongType))))
+  private val stateSchema = StructType(Seq(StructField("grp", StringType),
+    StructField("cnt", LongType), StructField("total", LongType)))
 
   /** Current view = the highest published version (empty before the
     * first batch lands). */
   def readAggView(spark: SparkSession, stateDir: String): DataFrame =
-    versionDirs(spark, stateDir).sortBy(_._1).lastOption match {
-      case Some((_, dir)) => spark.read.parquet(dir)
-      case None => emptyState(spark)
-    }
+    Drain.latest(spark, stateDir, stateSchema)
 
   /** `retainVersions` (r16): prune superseded `v=` versions to the
     * newest k after each batch's write commits — see
@@ -88,29 +45,11 @@ object ViewIngest {
   def runAggViewIngest(spark: SparkSession, rawDir: String,
                        stateDir: String, checkpointDir: String,
                        maxFilesPerTrigger: Int = 1,
-                       retainVersions: Option[Int] = None): Unit = {
-    val q = spark.readStream
-      .schema(changelogSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(rawDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // a RETRIED batch must not read its own half-landed output:
-        // take the latest version strictly below this batch's id
-        val prev = versionDirs(spark, stateDir)
-          .filter(_._1 < batchId).sortBy(_._1).lastOption match {
-          case Some((_, dir)) => spark.read.parquet(dir)
-          case None => emptyState(spark)
-        }
+                       retainVersions: Option[Int] = None): Unit =
+    Drain.foreachBatch(Drain.json(spark, rawDir, changelogSchema,
+        maxFilesPerTrigger), checkpointDir) { (batch, batchId) =>
+      Drain.fold(spark, stateDir, stateSchema, batchId, retainVersions)(
         graft.operators.ViewMaintenance
-          .maintainAggViewCdc(prev, batch, "grp", "val")
-          .write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        retainVersions.foreach(pruneVersions(spark, stateDir, _))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+          .maintainAggViewCdc(_, batch, "grp", "val"))
+    }
 }

@@ -2382,4 +2382,100 @@ class StreamingSpec extends AnyFunSuite {
       .count().count()
     assert(n == direct)
   }
+
+  test("versioned state: a retried batch reads the version below its own, versions order numerically, missing state is empty or refused") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    import graft.streaming.{DocIngest, Drain, ViewIngest}
+    val root = Paths.get(sys.props("java.io.tmpdir"), "graft_versions_spec")
+    deleteRec(root)
+    val state = root.resolve("state").toString
+    val viewSchema = StructType(Seq(StructField("grp", StringType),
+      StructField("cnt", LongType), StructField("total", LongType)))
+    def land(v: Long, grp: String): Unit =
+      Seq((grp, v, v)).toDF("grp", "cnt", "total")
+        .write.parquet(s"$state/v=$v")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
+      df.as[(String, Long, Long)].collect().toSeq
+    land(1, "one"); land(9, "nine"); land(10, "ten")
+    // by number, not by name: "v=10" sorts before "v=9" as a string
+    assert(Drain.versions(spark, state).map(_._1) == Seq(1L, 9L, 10L))
+    assert(rows(ViewIngest.readAggView(spark, state)) == Seq(("ten", 10L, 10L)))
+    // batch 10 retried after landing v=10 reads v=9, not its own version
+    assert(rows(Drain.prior(spark, state, viewSchema, 10L)) ==
+      Seq(("nine", 9L, 9L)))
+    assert(rows(Drain.prior(spark, state, viewSchema, 1L)).isEmpty)
+
+    // end to end: batch 1 died after part of its v=1 landed; the
+    // restarted drain re-runs it from v=0 and overwrites the stale rows
+    val raw = root.resolve("raw"); val st = root.resolve("view")
+    Seq(("I", "a", 10L, null.asInstanceOf[String], 0L))
+      .toDF("op", "grp", "val", "old_grp", "old_val")
+      .coalesce(1).write.json(raw.resolve("f1").toString)
+    Seq(("I", "b", 5L, null.asInstanceOf[String], 0L))
+      .toDF("op", "grp", "val", "old_grp", "old_val")
+      .coalesce(1).write.json(raw.resolve("f2").toString)
+    val now = System.currentTimeMillis()
+    setMtimeRec(raw.resolve("f1"), now - 60000L)
+    setMtimeRec(raw.resolve("f2"), now)
+    Seq(("stale", 99L, 99L)).toDF("grp", "cnt", "total")
+      .write.parquet(st.resolve("v=1").toString)
+    Files.delete(st.resolve("v=1/_SUCCESS"))
+    ViewIngest.runAggViewIngest(spark, raw.toString + "/*/", st.toString,
+      root.resolve("ckpt").toString)
+    assert(rows(ViewIngest.readAggView(spark, st.toString)).toSet ==
+      Set(("a", 1L, 10L), ("b", 1L, 5L)))
+
+    // a missing directory: the empty state with its schema, or a refusal
+    val missing = root.resolve("missing").toString
+    val empties = Seq(
+      ViewIngest.readAggView(spark, missing) -> "grp:string,cnt:bigint,total:bigint",
+      DocIngest.readKmvState(spark, missing) -> "source:string,_h:bigint",
+      DocIngest.readLinkGraph(spark, missing) ->
+        "target:string,src_host:string,n_links:bigint")
+    for ((df, want) <- empties) {
+      assert(df.count() == 0L)
+      assert(df.schema.fields.map(f => s"${f.name}:${f.dataType.simpleString}")
+        .mkString(",") == want)
+    }
+    val board = intercept[IllegalStateException] {
+      DocIngest.readOutcomeBoard(spark, missing)
+    }
+    assert(board.getMessage.contains("no outcome board"), board.getMessage)
+    val hll = intercept[IllegalStateException] {
+      DocIngest.readHllState(spark, missing)
+    }
+    assert(hll.getMessage.contains("no HLL sketch state"), hll.getMessage)
+    deleteRec(root)
+  }
+
+  test("the drain skeleton is the only place that spells the AvailableNow drain or the v=<batchId> state format") {
+    import scala.jdk.CollectionConverters._
+    val drain = Paths.get("src/main/scala/graft/streaming/Drain.scala")
+    val concerns = Seq(
+      "Trigger.AvailableNow" -> """Trigger\.AvailableNow""".r,
+      "awaitTermination" -> """awaitTermination""".r,
+      "the \"v=\" version literal" -> """"[^"]*\bv=""".r)
+    // code only: whole-line comments and scaladoc, trailing // comments
+    def code(p: Path): Seq[(String, Int)] =
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex
+        .map { case (l, i) => (l.replaceAll("""\s//\s.*$""", ""), i + 1) }
+        .filterNot { case (l, _) =>
+          val t = l.trim
+          t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+        }
+    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.contains(drain), s"$drain not found")
+    for ((name, re) <- concerns) {
+      assert(code(drain).exists(l => re.findFirstIn(l._1).isDefined),
+        s"$name is missing from $drain")
+      val strays = for {
+        f <- files if f != drain
+        (l, n) <- code(f) if re.findFirstIn(l).isDefined
+      } yield s"$f:$n: ${l.trim}"
+      assert(strays.isEmpty,
+        s"$name belongs in $drain only:\n${strays.mkString("\n")}")
+    }
+  }
 }
