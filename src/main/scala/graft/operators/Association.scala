@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Seam.Pins
 
 /** Market-basket association mining — the "bought X also bought Y"
   * primitive behind recommendations, substitution detection, and
@@ -18,13 +19,13 @@ object Association {
     * re-derives a DataFrame subtree once per reference — the r16
     * plans showed 3 copies of the scan + distinct exchange in q182
     * and 5 in q186 (guide §2.4: remove shuffles outright).
-    * `localCheckpoint` materializes the dedup once; Spark 4 carries
+    * The pin materializes the dedup once; Spark 4 carries
     * the origin plan's stats across the checkpoint, so downstream
     * broadcast decisions are unchanged. */
   private def dedupedBasketItems(baskets: DataFrame, basketCol: String,
                                  itemCol: String): DataFrame =
     baskets.select(col(basketCol).as("_b"), col(itemCol).as("_i"))
-      .distinct().localCheckpoint()
+      .distinct().pin()
 
   /** Directed co-occurrence census `(ante, cons, n_ab)` — the
     * expensive half of rule mining (the basket self-join, fan-out

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 import graft.functions.TextFunctions
+import graft.operators.Seam.Pins
 
 /** BPE tokenizer induction over a corpus — the byte-pair-encoding
   * merge-learning loop (Sennrich et al. 2016) every LLM vocabulary is
@@ -56,15 +57,14 @@ object Bpe {
     require(nMerges >= 1 && nMerges <= 64,
       s"nMerges must be in [1, 64] (each round is a corpus-census job), " +
         s"got $nMerges")
-    val base = docs
+    val census = docs
       .select(explode(TextFunctions.whitespaceTokens(col(textCol)))
         .as("w"))
       .filter(col("w").rlike("^[\\x21-\\x7e]+$"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(regexp_replace(col("w"), "(.)", Sep + "$1" + Sep).as("w"),
         col("n"))
-      .persist()
-    try {
+    Seam.persisted(census) { base =>
       var cur = base
       val merges = scala.collection.mutable.ArrayBuffer
         .empty[(Long, String, String, Long)]
@@ -102,7 +102,7 @@ object Bpe {
       import sp.implicits._
       merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
         .orderBy(col("merge_rank"))
-    } finally base.unpersist()
+    }
   }
 
   /** BATCHED merge learning — the scale path past the
@@ -141,9 +141,9 @@ object Bpe {
     * Scale shape: same Heaps-bounded word-type census as
     * [[learnBpeMerges]]; per round one map-side-combined pair census
     * + one ≤8·batchSize-row pickup + ONE narrow projection folding
-    * all selected replaces; the census is localCheckpoint'd per round
-    * so the plan stays round-sized instead of accreting 4096 replaces
-    * of lineage. */
+    * all selected replaces; the census is pinned per round (and the
+    * superseded round released) so the plan stays round-sized instead
+    * of accreting 4096 replaces of lineage. */
   def learnBpeMergesBatched(docs: DataFrame, textCol: String,
                             nMerges: Int, batchSize: Int = 32): DataFrame = {
     require(nMerges >= 1 && nMerges <= 4096,
@@ -155,7 +155,7 @@ object Bpe {
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(regexp_replace(col("w"), "(.)", Sep + "$1" + Sep).as("w"),
         col("n"))
-      .localCheckpoint()
+      .pin()
     learnBatchedFromFramed(cur, nMerges, batchSize)
   }
 
@@ -186,7 +186,7 @@ object Bpe {
         .as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(byteFrame(col("w")).as("w"), col("n"))
-      .localCheckpoint()
+      .pin()
     learnBatchedFromFramed(cur, nMerges, batchSize)
   }
 
@@ -240,12 +240,12 @@ object Bpe {
       .filter(conv(substring(md5(concat(lit(salt + ":"), col("w"))),
         1, 8), 16, 10).cast(LongType) % 1000000L < samplePpm)
       .select(byteFrame(col("w")).as("w"), col("n"))
-      .localCheckpoint()
+      .pin()
     learnBatchedFromFramed(cur, nMerges, batchSize, minPairCount)
   }
 
   /** The shared batched-selection loop over an already-framed,
-    * already-checkpointed word census (w = ␟sym␟␟sym␟…, n = count) —
+    * already-pinned word census (w = ␟sym␟␟sym␟…, n = count) —
     * the char and byte front-ends differ only in framing.
     * `minPairCount` floors the selection window (pairs below it never
     * compete and learning stops when none clears it); 1 = the
@@ -296,9 +296,10 @@ object Bpe {
             replace(c, lit(Sep + l + Sep + Sep + r + Sep),
               lit(Sep + l + r + Sep))
           }.as("w"), col("n"))
-          .localCheckpoint()
+          .pinReplacing(cur)
       }
     }
+    Seam.release(cur) // the merge table below reads no census
     val sp = framed.sparkSession
     import sp.implicits._
     merges.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
@@ -538,7 +539,7 @@ object Bpe {
     *      runs per type, never per occurrence);
     *   2. each type is hex-framed and the merges replay in rank order
     *      as literal replaces in CHUNKS of `chunkSize`, with a
-    *      localCheckpoint between chunks — plan size and expression
+    *      pin between chunks — plan size and expression
     *      eval depth stay chunk-bounded however large the vocabulary
     *      (one giant fold would both blow whole-stage codegen's
     *      method limit and risk eval-recursion depth);
@@ -591,7 +592,7 @@ object Bpe {
   /** The chunked dictionary encode over a word bag's distinct TYPES:
     * (word `_w`, framed segmentation `_f`) — the shared core of
     * [[bpeTokenCountsBytes]] and [[bpeTokenIdsBytes]]. Chunked
-    * sequential replace with a localCheckpoint between chunks; the
+    * sequential replace with a pin between chunks; the
     * LAST chunk is left unfused so the caller's projection composes
     * into it. */
   private def encodeWordTypesBytes(dw: DataFrame,
@@ -608,7 +609,8 @@ object Bpe {
             replace(c, lit(Sep + l + Sep + Sep + r + Sep),
               lit(Sep + l + r + Sep))
           }.as("_f"))
-        if (i < chunks.size - 1) applied.localCheckpoint() else applied
+        // dict0 is no pin: replacing it frees nothing
+        if (i < chunks.size - 1) applied.pinReplacing(d) else applied
     }
   }
 

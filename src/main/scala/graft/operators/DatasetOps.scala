@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
+import graft.operators.Seam.Pins
 
 /** Dataset-assembly operators for training pipelines: deterministic
   * splits and benchmark decontamination — the last-mile steps between
@@ -460,7 +461,7 @@ object DatasetOps {
   def writePackManifest(packed: DataFrame, idCol: String, dir: String,
                         salt: String = "manifest"): Unit = {
     val m = packManifest(packed, idCol, salt).orderBy(col("shard"))
-      .localCheckpoint() // two consumers below — one census pass
+      .pin() // two consumers below — one census pass
     m.coalesce(1).write.mode("overwrite").parquet(s"$dir/shards")
     // totals coalesce to 0 (ADVICE r15): an EMPTY packed frame writes
     // zero shard rows, and bare sum() over nothing is NULL — the
@@ -841,7 +842,7 @@ object DatasetOps {
       .filter(col(scoreCol).isNotNull && col(tokenCol).isNotNull)
       .withColumn("_draw", md5Draw("budget", col(idCol)))
       .withColumn("_h", expr("_draw div 4194304L")) // 2^22 → 1024 buckets
-      .localCheckpoint(false)
+      .pinLazy()
     // level 1: per-score-class token totals; _above = tokens in all
     // strictly-better classes, via broadcast non-equi self-join
     val c1 = base.groupBy(col(scoreCol).as("_s"))
@@ -1359,7 +1360,7 @@ object DatasetOps {
       .groupBy(col(grpCol).as("_g"),
         expr(s"($scoreCol + 10000000L) div ${bucketWidth}L").as("bucket"))
       .agg(count(lit(1)).as("_gn"))
-      .localCheckpoint() // three consumers: baseline, totals, the join
+      .pin() // three consumers: baseline, totals, the join
     val base = gb.groupBy(col("bucket")).agg(sum(col("_gn")).as("_bn"))
     val totals = gb.groupBy(col("_g")).agg(sum(col("_gn")).as("_gt"))
     val totalAll = base.agg(sum(col("_bn")).as("_ta"))

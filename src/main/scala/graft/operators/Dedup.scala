@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.expressions.Md5Grams
 import graft.functions.TextFunctions._
+import graft.operators.Seam.Pins
 
 /** Deduplication operators for LLM-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard. The reference has no dedup surface;
@@ -243,17 +244,13 @@ object Dedup {
     * driver-side loop is the iterate-until-fixpoint shape (GraphX/
     * Pregel's own): per-round work is fully distributed, the driver
     * sees only a changed-row COUNT. Each round's labels are cut from
-    * their lineage with an eager `localCheckpoint` — without it the
-    * logical plan nests a copy of every prior round and analysis
-    * itself blows up; on a fault-tolerant production run, swap in a
-    * reliable `checkpoint` dir (localCheckpoint trades executor-loss
-    * recovery for speed, Spark's documented contract). */
+    * their lineage with an eager pin — without it the logical plan
+    * nests a copy of every prior round and analysis itself blows
+    * up. */
   def clusterReps(pairs: DataFrame, aCol: String = "idA",
                   bCol: String = "idB", maxRounds: Int = 50,
                   checkpointPairs: Boolean = true): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    def persistentIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
-    // checkpoint the pair list BEFORE symmetrizing: the union's two
+    // pin the pair list BEFORE symmetrizing: the union's two
     // branches would otherwise each evaluate the (potentially
     // expensive) pair source twice. Callers whose feed is already a
     // materialized table (q63 reads the q53 verdict parquet) pass
@@ -261,13 +258,13 @@ object Dedup {
     // on a tiny fixpoint graph each eager barrier is a visible slice
     // of the total.
     val p0raw = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
-    val p0 = if (checkpointPairs) p0raw.localCheckpoint(true) else p0raw
+    val p0 = if (checkpointPairs) p0raw.pin() else p0raw
     val symObs = org.apache.spark.sql.Observation(s"graft_cc_n_${System.nanoTime()}")
     val sym = p0.select(col("a").as("id"), col("b").as("nbr"))
       .union(p0.select(col("b").as("id"), col("a").as("nbr")))
       .distinct()
       .observe(symObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .pin()
     // size the fixpoint's shuffle width to the GRAPH, not the session:
     // every round is ~8 exchanges over fixed-width (id, label) tuples,
     // so a small dup graph on session-wide parallelism pays pure
@@ -278,8 +275,8 @@ object Dedup {
     // shares the SparkContext but owns its conf — VERDICT r4 item 6):
     // queries planned concurrently on the caller's session keep its
     // width, no restore step, no one-loop-at-a-time contract. The
-    // materialized `sym` RDD crosses sessions directly (localCheckpoint
-    // pins it in the shared context — `internalRdd` keeps it in
+    // materialized `sym` RDD crosses sessions directly (the pin holds
+    // it in the shared context — `internalRdd` keeps it in
     // InternalRow form, no Row round trip), and the converged labels
     // are re-bound to the caller's session on the way out.
     val nEdges = symObs.get("n").asInstanceOf[Long]
@@ -299,13 +296,6 @@ object Dedup {
       var labels = symFix
         .groupBy(col("id"))
         .agg(least(min(col("nbr")), col("id")).as("rep"))
-      // ids of the superseded round's checkpoint blocks, freed only
-      // AFTER the next round materializes (ADVICE r3: without this,
-      // high-diameter graphs accumulate a checkpoint per round in
-      // executor storage for the life of the job). Tracked by diffing
-      // the persistent-RDD registry around each materialization — the
-      // only ids ever unpersisted here are ones this loop itself added.
-      var supersededIds: Set[Int] = Set.empty
       // one neighbor-min propagation followed by path-halving (pointer
       // jumping: rep := rep's rep). Plain propagation needs O(diameter)
       // rounds — a near-dup chain A~B~C~… advances one hop per round;
@@ -352,20 +342,14 @@ object Dedup {
         // barrier count vs the fused two-step form.
         val obs = Seq.tabulate(2)(i =>
           org.apache.spark.sql.Observation(s"graft_cc_${i}_${System.nanoTime()}"))
-        val before = persistentIds
         val next = halve(
             prop(prop(labels).observe(obs(0), labSum()))
               .observe(obs(1), labSum()))
-          .localCheckpoint(true)
-        // exactly ONE persistent RDD (next's checkpoint) should appear
-        // in this window; if a concurrent job on the shared context
-        // also persisted one, ownership is ambiguous — skip tracking
-        // for this round (a bounded leak) rather than risk freeing a
-        // foreign checkpoint, whose blocks are its only copy
-        val added = persistentIds -- before
-        supersededIds.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        supersededIds = if (added.size == 1) added else Set.empty
+          // the superseded round, freed only AFTER the next round
+          // materializes (ADVICE r3: without this, high-diameter graphs
+          // accumulate a pin per round in executor storage for the life
+          // of the job); round 0's unpinned init frees nothing
+          .pinReplacing(labels)
         val sums = obs.map(_.get("labsum"))
         // sums(0): after this round's first prop; sums(1): after the
         // second. Equal ⇒ the second prop was a no-op ⇒ fixpoint.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Seam.Pins
 
 /** Distributed graph centrality over an edge table — the crawl- and
   * catalog-prioritization primitive (CommonCrawl ranks its frontier
@@ -38,7 +39,7 @@ object Graph {
     * discipline to what the LOOPS re-derive per call): every
     * centrality invocation used to re-pay the edge distinct, the
     * degree census, the (src, dst, out_degree) flows join and the
-    * node-spine distinct as in-session localCheckpoints, so a family
+    * node-spine distinct as in-session pins, so a family
     * of queries over the SAME edge table (q153/q166/q286/q298 on the
     * purchase graph; q294/q299 on its directed half) re-billed ~3
     * shuffles + 2 materializations each. The feeds are a pure
@@ -46,7 +47,7 @@ object Graph {
     * written ONCE per JVM to a temp parquet dir and every later call
     * — including from a recycled bench session — re-READS them
     * (parquet-backed lineage is linear by construction, which is all
-    * the localCheckpoints existed to guarantee).
+    * the pins existed to guarantee).
     *
     * Key = the CANONICALIZED analyzed plan's string (exprIds
     * normalized): two reads of the same parquet path — or a temp view
@@ -64,7 +65,7 @@ object Graph {
     * first's feeds; a LogicalRDD leaf (a checkpointed upstream)
     * carries a per-instance RDD identity, so its key never repeats
     * and the memo would only leak temp dirs. Both fall back to the
-    * per-call localCheckpoint path — exactly the pre-r12 behavior.
+    * per-call pin path — exactly the pre-r12 behavior.
     */
   private val feedsMemo = new graft.sources.JvmMemo[String]
 
@@ -104,13 +105,12 @@ object Graph {
       // per-call path (pre-r12 behavior) for plans whose canonical
       // string is not a sound memo key — see the gate note above
       val e0 = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      val e1 = (if (assumeDistinct) e0 else e0.distinct())
-        .localCheckpoint(true)
+      val e1 = (if (assumeDistinct) e0 else e0.distinct()).pin()
       val deg = e1.groupBy(col("_src")).agg(count(lit(1)).as("_d"))
-      val flows = e1.join(deg, Seq("_src")).localCheckpoint(true)
+      val flows = e1.join(deg, Seq("_src")).pin()
       val nodes = e1.select(col("_src").as("node"))
         .union(e1.select(col("_dst").as("node"))).distinct()
-        .localCheckpoint(true)
+        .pin()
       return Feeds(e1, flows, nodes)
     }
     val key = edges.queryExecution.analyzed.canonicalized.toString +
@@ -151,12 +151,12 @@ object Graph {
     * copies of the caller's edge derivation by the end. Restructured
     * so each round references `ranks` exactly ONCE: the spine is a
     * STATIC `(node, base)` table and contributions flow through a
-    * pre-joined `(src, dst, out_degree)` table, both eagerly
-    * localCheckpointed up front. Lineage then grows linearly, the
-    * whole loop executes lazily as ONE job (exchanges amortize, no
-    * per-round barrier), and only deep runs (> 8 rounds) insert a
-    * mid-loop checkpoint, freeing the superseded one registry-diff
-    * style. Measured at sf0.1 (1.2 M edges, 3 rounds): 14.1 s → ~4 s.
+    * pre-joined `(src, dst, out_degree)` table, both materialized up
+    * front. Lineage then grows linearly, the whole loop executes
+    * lazily as ONE job (exchanges amortize, no per-round barrier),
+    * and only deep runs (> 8 rounds) insert a mid-loop pin,
+    * releasing the superseded one. Measured at sf0.1 (1.2 M edges,
+    * 3 rounds): 14.1 s → ~4 s.
     *
     * @return (node, score) for every node appearing as a src or dst,
     *         unordered — compose with orderBy/limit for a top-k board
@@ -171,12 +171,15 @@ object Graph {
       s"dampingPct must be in [0, 100], got $dampingPct")
     require(scale >= 1L && scale <= 1000000000000000L,
       s"scale must be in [1, 1e15] (keeps d*mass int64-safe), got $scale")
-    dampedLoop(edges, srcCol, dstCol, iters, dampingPct, assumeDistinct) {
-      (nodes, nn) =>
-        nodes.crossJoin(broadcast(nn))
-          .select(col("node"), expr(s"${scale}L div _n").as("_base"))
-    }
+    dampedLoop(edges, srcCol, dstCol, iters, dampingPct, assumeDistinct)(
+      uniformBase(scale))
   }
+
+  /** The uniform teleport table: `scale div n` on every node. */
+  private def uniformBase(scale: Long)(nodes: DataFrame,
+                                       nn: DataFrame): DataFrame =
+    nodes.crossJoin(broadcast(nn))
+      .select(col("node"), expr(s"${scale}L div _n").as("_base"))
 
   /** PERSONALIZED PageRank: identical damped loop, but the teleport
     * mass lands only on `seeds` (`scale div nSeeds` each; every other
@@ -288,9 +291,6 @@ object Graph {
           .as("cc_ppm"))
   }
 
-  /** The shared damped-update loop (see [[pageRank]]'s scaladoc for
-    * the lineage-hygiene design): `mkBase` builds the static
-    * `(node, _base)` teleport table from the node set and its count. */
   /** HITS hubs & authorities (Kleinberg 1999) — the OTHER link
     * centrality: PageRank scores "where a random surfer lands"; HITS
     * separates DIRECTORY pages (hubs — point at good content) from
@@ -321,39 +321,49 @@ object Graph {
     require(scale >= 1L && scale <= 1000000000L,
       s"scale must be in [1, 1e9] (keeps n·scale sums int64-safe), got $scale")
     // e and the node spine from the per-JVM feed materialization
-    // (see [[feedsMemo]]) — parquet-backed instead of per-call
-    // localCheckpoints
+    // (see [[feedsMemo]]) — parquet-backed instead of per-call pins
     val Feeds(e, _, nodes) = loopFeeds(edges, srcCol, dstCol,
       assumeDistinct)
-    def normalized(rawPlan: DataFrame, keyCol: String): DataFrame = {
-      // raw is consumed TWICE (global total + per-node values); the
-      // eager checkpoint keeps lineage linear across rounds — without
-      // it each half-step doubles the logical plan (the clusterReps
-      // lesson). raw is node-sized, so the materialization is cheap.
-      val raw = rawPlan.localCheckpoint(true)
-      val tot = raw.agg(greatest(sum(col("_r")), lit(1L)).as("_t"))
-      nodes
-        .join(raw, nodes("node") === raw(keyCol), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("node"),
-          expr(s"coalesce(_r, 0L) div greatest(_t div ${scale}L, 1L)")
-            .as("_s"))
+    // the scores compose lazily over their raw pins, and the returned
+    // pair reads the last two; an older raw has fed its successor's pin
+    var raws = Vector.empty[DataFrame]
+    def step(from: DataFrame, fromCol: String, keyCol: String): DataFrame = {
+      val (raw, score) = halfStep(e, nodes, scale, from, fromCol, keyCol)
+      raws :+= raw
+      if (raws.size > 2) { Seam.release(raws.head); raws = raws.tail }
+      score
     }
     var hub = nodes.select(col("node"), lit(scale).as("_s"))
     var auth = nodes.select(col("node"), lit(scale).as("_s"))
     for (_ <- 1 to iters) {
-      auth = normalized(
-        e.join(hub, e("_src") === hub("node"))
-          .groupBy(col("_dst")).agg(sum(col("_s")).as("_r")),
-        "_dst")
-      hub = normalized(
-        e.join(auth, e("_dst") === auth("node"))
-          .groupBy(col("_src")).agg(sum(col("_s")).as("_r")),
-        "_src")
+      auth = step(hub, "_src", "_dst")
+      hub = step(auth, "_dst", "_src")
     }
     hub.select(col("node"), col("_s").as("hub_score"))
       .join(auth.select(col("node"), col("_s").as("auth_score")),
         Seq("node"))
+  }
+
+  /** One HITS half-step: the `from` score summed along `e` onto
+    * `keyCol`, pinned, then sum-normalized over the node spine.
+    * @return (the raw pin, the normalized score that reads it). */
+  private def halfStep(e: DataFrame, nodes: DataFrame, scale: Long,
+                       from: DataFrame, fromCol: String,
+                       keyCol: String): (DataFrame, DataFrame) = {
+    // raw is consumed TWICE (global total + per-node values); the
+    // eager pin keeps lineage linear across rounds — without it each
+    // half-step doubles the logical plan (the clusterReps lesson).
+    // raw is node-sized, so the materialization is cheap.
+    val raw = e.join(from, e(fromCol) === from("node"))
+      .groupBy(col(keyCol)).agg(sum(col("_s")).as("_r"))
+      .pin()
+    val tot = raw.agg(greatest(sum(col("_r")), lit(1L)).as("_t"))
+    (raw, nodes
+      .join(raw, nodes("node") === raw(keyCol), "left")
+      .crossJoin(broadcast(tot))
+      .select(col("node"),
+        expr(s"coalesce(_r, 0L) div greatest(_t div ${scale}L, 1L)")
+          .as("_s")))
   }
 
   /** Multi-hop redirect resolution (VERDICT r11 Missing #3): real
@@ -416,33 +426,30 @@ object Graph {
           .as("score"))
   }
 
+  /** The shared damped-update loop (see [[pageRank]]'s scaladoc for
+    * the lineage-hygiene design): `mkBase` builds the static
+    * `(node, _base)` teleport table from the node set and its count. */
   private def dampedLoop(edges: DataFrame, srcCol: String, dstCol: String,
                          iters: Int, dampingPct: Int,
                          assumeDistinct: Boolean)(
       mkBase: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    def persistentIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
     // flows and the node spine come from the per-JVM feed
     // materialization (see [[feedsMemo]]) — parquet-backed, so every
     // round's plan bottoms out in a scan and lineage stays linear
-    // without per-call checkpoints of the edge set
+    // without per-call pins of the edge set
     val Feeds(_, flows, nodes) = loopFeeds(edges, srcCol, dstCol,
       assumeDistinct)
     val nn = nodes.agg(count(lit(1)).as("_n"))
     // nodesBase differs per variant (uniform vs seeded teleport), so
-    // it stays a per-call checkpoint — node-sized, cheap
-    val nodesBase = mkBase(nodes, nn).localCheckpoint(true)
+    // it stays a per-call pin — node-sized, cheap
+    val nodesBase = mkBase(nodes, nn).pin()
     var ranks = nodesBase.select(col("node"), col("_base").as("score"))
-    var supersededIds: Set[Int] = Set.empty
+    var cut = ranks // the last mid-loop pin; the unpinned start frees nothing
     for (i <- 1 to iters) {
       ranks = dampedUpdate(flows, nodesBase, dampingPct)(ranks)
       if (i % 8 == 0 && i < iters) {
-        val pre = persistentIds
-        ranks = ranks.localCheckpoint(true)
-        val added = persistentIds -- pre
-        supersededIds.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-        supersededIds = added
+        ranks = ranks.pinReplacing(cut)
+        cut = ranks
       }
     }
     ranks
@@ -467,8 +474,8 @@ object Graph {
     * one job) — convergence checking only pays off on runs deep
     * enough that the skipped rounds beat the per-round barrier; for
     * a known-shallow schedule keep [[pageRank]]. Each round's ranks
-    * localCheckpoint eagerly (node-sized), superseded checkpoints
-    * freed registry-diff style.
+    * are pinned eagerly (node-sized) and the superseded round is
+    * released.
     *
     * @return (scores, rounds actually executed). */
   def pageRankConverged(edges: DataFrame, srcCol: String, dstCol: String,
@@ -482,42 +489,32 @@ object Graph {
     require(epsilon >= 0L, s"epsilon must be >= 0, got $epsilon")
     require(scale >= 1L && scale <= 1000000000000000L,
       s"scale must be in [1, 1e15] (keeps d*mass int64-safe), got $scale")
-    val sc = edges.sparkSession.sparkContext
-    def persistentIds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
     val Feeds(_, flows, nodes) = loopFeeds(edges, srcCol, dstCol,
       assumeDistinct)
-    val nn = nodes.agg(count(lit(1)).as("_n"))
-    val nodesBase = nodes.crossJoin(broadcast(nn))
-      .select(col("node"), expr(s"${scale}L div _n").as("_base"))
-      .localCheckpoint(true)
-    var pre = persistentIds
+    val nodesBase =
+      uniformBase(scale)(nodes, nodes.agg(count(lit(1)).as("_n"))).pin()
     var ranks = nodesBase.select(col("node"), col("_base").as("score"))
-      .localCheckpoint(true)
-    var ranksIds = persistentIds -- pre
+      .pin()
     var rounds = 0
     var done = false
     while (!done && rounds < maxIters) {
-      pre = persistentIds
-      val next = dampedUpdate(flows, nodesBase, dampingPct)(ranks)
-        .localCheckpoint(true)
-      val nextIds = persistentIds -- pre
+      val next = dampedUpdate(flows, nodesBase, dampingPct)(ranks).pin()
       rounds += 1
-      // the residual: node-sized equi-join, one scalar back to the
-      // driver (bounded by construction — one row)
-      val delta = next
-        .join(ranks.select(col("node"), col("score").as("_old")),
-          Seq("node"))
-        .agg(coalesce(max(abs(col("score") - col("_old"))), lit(0L))
-          .as("_d"))
-        .head().getLong(0)
-      if (delta <= epsilon) done = true
-      ranksIds.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      ranksIds = nextIds
+      if (maxDelta(next, ranks, "score") <= epsilon) done = true
+      Seam.release(ranks)
       ranks = next
     }
     (ranks, rounds)
   }
+
+  /** The residual of a convergence-stopped loop: max |Δ`scoreCol`|
+    * between two rounds — a node-sized equi-join, one scalar back to
+    * the driver (bounded by construction — one row). */
+  private def maxDelta(next: DataFrame, prev: DataFrame,
+                       scoreCol: String): Long =
+    next.join(prev.select(col("node"), col(scoreCol).as("_old")), Seq("node"))
+      .agg(coalesce(max(abs(col(scoreCol) - col("_old"))), lit(0L)).as("_d"))
+      .head().getLong(0)
 
   /** CONVERGENCE-STOPPED HITS: [[hits]] with the same residual exit as
     * [[pageRankConverged]] — stop after the round where both score
@@ -540,41 +537,26 @@ object Graph {
       s"scale must be in [1, 1e9] (keeps n*scale sums int64-safe), got $scale")
     val Feeds(e, _, nodes) = loopFeeds(edges, srcCol, dstCol,
       assumeDistinct)
-    def normalized(rawPlan: DataFrame, keyCol: String): DataFrame = {
-      val raw = rawPlan.localCheckpoint(true)
-      val tot = raw.agg(greatest(sum(col("_r")), lit(1L)).as("_t"))
-      nodes
-        .join(raw, nodes("node") === raw(keyCol), "left")
-        .crossJoin(broadcast(tot))
-        .select(col("node"),
-          expr(s"coalesce(_r, 0L) div greatest(_t div ${scale}L, 1L)")
-            .as("_s"))
+    // each round's scores are pinned, so their raw pins are free as
+    // soon as they land, and a superseded round once the residual has
+    // read it
+    def pinnedStep(from: DataFrame, fromCol: String,
+                   keyCol: String): DataFrame = {
+      val (raw, score) = halfStep(e, nodes, scale, from, fromCol, keyCol)
+      score.pinReplacing(raw)
     }
-    var hub = nodes.select(col("node"), lit(scale).as("_s"))
-      .localCheckpoint(true)
-    var auth = nodes.select(col("node"), lit(scale).as("_s"))
-      .localCheckpoint(true)
+    var hub = nodes.select(col("node"), lit(scale).as("_s")).pin()
+    var auth = nodes.select(col("node"), lit(scale).as("_s")).pin()
     var rounds = 0
     var done = false
     while (!done && rounds < maxIters) {
-      val auth2 = normalized(
-        e.join(hub, e("_src") === hub("node"))
-          .groupBy(col("_dst")).agg(sum(col("_s")).as("_r")),
-        "_dst").localCheckpoint(true)
-      val hub2 = normalized(
-        e.join(auth2, e("_dst") === auth2("node"))
-          .groupBy(col("_src")).agg(sum(col("_s")).as("_r")),
-        "_src").localCheckpoint(true)
+      val auth2 = pinnedStep(hub, "_src", "_dst")
+      val hub2 = pinnedStep(auth2, "_dst", "_src")
       rounds += 1
-      val dA = auth2
-        .join(auth.select(col("node"), col("_s").as("_old")), Seq("node"))
-        .agg(coalesce(max(abs(col("_s") - col("_old"))), lit(0L)).as("_d"))
-        .head().getLong(0)
-      val dH = hub2
-        .join(hub.select(col("node"), col("_s").as("_old")), Seq("node"))
-        .agg(coalesce(max(abs(col("_s") - col("_old"))), lit(0L)).as("_d"))
-        .head().getLong(0)
-      if (math.max(dA, dH) <= epsilon) done = true
+      if (math.max(maxDelta(auth2, auth, "_s"),
+          maxDelta(hub2, hub, "_s")) <= epsilon) done = true
+      Seam.release(hub)
+      Seam.release(auth)
       hub = hub2
       auth = auth2
     }

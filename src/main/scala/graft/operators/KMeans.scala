@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.operators.Seam.Pins
 
 /** Distributed spherical k-means — the centroid-refinement step real
   * IVF deployments run before serving (VERDICT.md r2: ivfTopK ships
@@ -26,8 +27,9 @@ import graft.functions.VectorFunctions._
   *    standard explode-mean shape (an Array-buffer Aggregator saves
   *    the explode at the cost of leaving codegen; at dim≈10²–10³ the
   *    explode wins on simplicity and stays whole-stage);
-  *  - per-iteration eager localCheckpoint cuts the lineage (iterative
-  *    plans otherwise nest a copy of every prior round).
+  *  - a per-iteration eager pin cuts the lineage (iterative plans
+  *    otherwise nest a copy of every prior round), and the round it
+  *    supersedes is released.
   *
   * Cells that lose every point simply disappear (k shrinks) — the
   * Lloyd's degeneracy that IVF tolerates: fewer, fuller cells.
@@ -159,7 +161,7 @@ object KMeans {
         .agg(array_sort(collect_list(struct(col("_pos"), col("_m")))).as("_pm"))
         .select(col("cell"),
           transform(col("_pm"), e => e.getField("_m")).as("centroid"))
-        .localCheckpoint(true)
+        .pinReplacing(cents) // the seed centroids are no pin: frees nothing
     }
     cents
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Seam.Pins
 
 /** Multimodal-column conventions: media as an opaque `binary` column
   * with typed metadata alongside (the north-star §"multimodal"
@@ -280,7 +281,7 @@ object Multimodal {
       .select((col("vid") * nFrames + col("pos")).as("fid"),
         col("col.frame_idx").cast(LongType).as("fidx"),
         dHashBits(col("col.frames"), w, h).as("bits"))
-      .localCheckpoint(true)
+      .pin()
     val pairs = imageNearDupPairs(frames, "fid", "bits", maxHamming, bands)
       .filter(expr(s"idA div ${nFrames}L != idB div ${nFrames}L"))
     val fmap = frames.select(col("fid"), col("fidx"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
+import graft.operators.Seam.Pins
 
 /** Keyword retrieval over a document corpus: a positional inverted
   * index, integer-deterministic BM25 top-k ranking, and exact phrase
@@ -161,7 +162,7 @@ object Search {
     // postings'/lens' consumers compounds the re-derivation (the r17
     // plan audit counted q128's changelog-source scan 15×; guide
     // §2.4). Change-batch-sized by the compacted-changelog contract.
-    val chg = changelog.localCheckpoint(false)
+    val chg = changelog.pinLazy()
     val touched = chg.select(col("id")).distinct()
     val fresh = chg.filter(col("op").isin("U", "I"))
       .select(col("id"), col("text"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions._
+import graft.operators.Seam.Pins
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -187,7 +188,7 @@ object Similarity {
       * exact search is whatever random planes give you). All m
       * subspaces train SIMULTANEOUSLY in one frame: each vector
       * contributes m (sub, subvector) rows (sliced once, then
-      * localCheckpointed — `iters` consumers would otherwise re-derive
+      * pinned — `iters` consumers would otherwise re-derive
       * the slice lineage per round); each round assigns by squared-L2
       * argmin — the metric [[encode]] quantizes by, NOT the cosine
       * [[KMeans]] serves — via the same exploded (sub, k) grid +
@@ -207,7 +208,7 @@ object Similarity {
         .withColumn("_sub", explode(sequence(lit(0), lit(m - 1))))
         .select(col("_rid"), col("_sub"),
           slice(col("_v"), col("_sub") * subDim + 1, lit(subDim)).as("_sv"))
-        .localCheckpoint(true)
+        .pin()
       val books: Array[Array[Array[Double]]] =
         md5Codebooks.map(_.map(_.toArray).toArray).toArray
       for (_ <- 0 until iters) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.operators.Seam.Pins
 
 /** Distributed EXACT order statistics over integer-valued columns:
   * global cumulative census, exact quantiles, equi-depth histograms,
@@ -56,7 +57,7 @@ object Stats {
     val census = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast(LongType).as("v"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .pinLazy()
     val bounds = census.agg(min("v").as("_lo"), max("v").as("_hi"))
     // decimal-exact scaling: ((v - lo) * B) / (hi - lo + 1) — never
     // overflows long even for full-range values
@@ -133,7 +134,7 @@ object Stats {
       .groupBy(col(grpCol).as("grp"),
         col(valueCol).cast(LongType).as("v"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(false)
+      .pinLazy()
     val bounds = census.groupBy("grp")
       .agg(min("v").as("_lo"), max("v").as("_hi"))
     val withB = census.join(bounds, Seq("grp"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions.whitespaceTokens
 import graft.operators.Sketches
+import graft.operators.Seam.Pins
 import graft.sources.Tables
 
 /** Corpus-scale analytics machinery: mergeable sketches, distributed
@@ -521,7 +522,7 @@ object AnalyticsQueries {
   // wrong on the next. Calibration maps each doc's score to its
   // percentile rank via the distributed cumulative census
   // (Stats.cumulativeValueCensus over the score column): pct_milli =
-  // cum·1000 div N. The score frame is localCheckpointed (it feeds
+  // cum·1000 div N. The score frame is pinned (it feeds
   // the census AND the rank join — the q168 multiply-consumed-
   // id-frame rule). The oracle replays the classifier fold AND the
   // census chain, so drift at either stage flips the hash.
@@ -532,7 +533,7 @@ object AnalyticsQueries {
       val scores = graft.operators.DatasetOps.classifierScores(
           docs(s, d), "doc_id", "text")
         .select(col("doc_id"), col("score"))
-        .localCheckpoint(true)
+        .pin()
       val cum = graft.operators.Stats
         .cumulativeValueCensus(scores, "score")
         .select(col("v").as("score"), col("cum"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{DatasetOps, Dedup, Multimodal, Similarity}
+import graft.operators.Seam.Pins
 import graft.sources.Tables
 
 /** Corpus recipes, CDC, packing/chunking, cleaning pipeline queries (q75-q105 region) — one section of the [[LlmOps]] registry, split from the
@@ -287,7 +288,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
       // tax (measured 23 s/pass at sf0.1; ~2 s with the cut). The
       // frame is id-sized at ANY corpus scale, so the eager
       // materialization is the cheap side of the trade everywhere.
-      val keepIds = cls.join(sur, Seq("doc_id")).localCheckpoint(true)
+      val keepIds = cls.join(sur, Seq("doc_id")).pin()
       val filtered = dd.join(keepIds, Seq("doc_id"), "left_semi")
       val pairs = docPairsMaterialized(s, d)
         .join(keepIds.withColumnRenamed("doc_id", "idA"),
@@ -2089,7 +2090,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
       // regexp normalize + distinct exchange (guide §2.4)
       val frontier = urls
         .select(col("source"), urlNormalize(col("u")).as("n")).distinct()
-        .localCheckpoint()
+        .pin()
       val reqs = frontier
         .select(col("source"),
           regexp_extract(col("n"), "^https?://([^/]+)", 1).as("host"),
@@ -2820,7 +2821,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
         .select(urlNormalize(raw).as("n")).distinct()
         .withColumn("host",
           regexp_extract(col("n"), "^https?://([^/]+)", 1))
-        .localCheckpoint()
+        .pin()
       val robots = frontier.select(col("host")).distinct()
         .withColumn("txt", concat(lit("User-agent: *\nCrawl-delay: "),
           length(regexp_replace(col("host"), "\\.example\\.com$", "")),
@@ -4853,7 +4854,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
       val dd = docs(s, d)
       val ref = dd.where(
         DatasetOps.md5Draw("ccnet", col("doc_id")) % 4 === 0)
-      // eager localCheckpoint: THREE consumers (cumulative census,
+      // eager pin: THREE consumers (cumulative census,
       // rank totals, bucket report) read this census — without the
       // lineage cut Catalyst clones the whole scoring pipeline per
       // consumer (measured: 30 parquet scans / 112 aggregates in one
@@ -4862,7 +4863,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
         .groupBy(col("lang"), (col("n_bigrams") > 0).as("scored"),
           col("milli_bits_per_bigram").as("milli"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+        .pin()
       val wl = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang")).orderBy(col("milli"))
       val cum = c.where(col("scored"))
@@ -4969,7 +4970,7 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
   // (head + middle — the CCNet keep rule). Interop is the point: the
   // LM tokenizes text whose excised seams created NEW bigrams, and
   // both engines must replay those seams identically. Stage
-  // boundaries are eager localCheckpoints (narrow columns only — the
+  // boundaries are eager pins (narrow columns only — the
   // cleaned corpus and the per-doc scores each feed two consumers;
   // a deployment lands them as tables, which the recipe mirrors).
   // Census per lang: docs, kept, kept chars, and an md5 mass over
@@ -4984,13 +4985,13 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
       val cleaned = Dedup.exciseSpans(dd, spans, "doc_id", "text")
         .select(col("doc_id"), col("lang"),
           col("clean_text").as("text"))
-        .localCheckpoint(true)
+        .pin()
       val ref = cleaned.where(
         DatasetOps.md5Draw("ccnet", col("doc_id")) % 4 === 0)
       val sc = DatasetOps.referenceLmScores(cleaned, ref, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("n_bigrams"),
           col("milli_bits_per_bigram").as("milli"))
-        .localCheckpoint(true)
+        .pin()
       val cum = sc.where(col("n_bigrams") > 0)
         .groupBy(col("lang"), col("milli"))
         .agg(count(lit(1)).as("cnt"))
@@ -5348,18 +5349,18 @@ private[queries] trait LlmOpsCorpus { this: LlmOps.type =>
         .select(col("doc_id"), col("lang"),
           mainContent(contentHtml(col("doc_id"), col("text")))
             .as("text"))
-        .localCheckpoint(true)
+        .pin()
       val spans = Dedup.dupSpans(extracted, "doc_id", "text", k = 25)
       val cleaned = Dedup.exciseSpans(extracted, spans, "doc_id", "text")
         .select(col("doc_id"), col("lang"),
           col("clean_text").as("text"))
-        .localCheckpoint(true)
+        .pin()
       val ref = cleaned.where(
         DatasetOps.md5Draw("ccnet", col("doc_id")) % 4 === 0)
       val sc = DatasetOps.referenceLmScores(cleaned, ref, "doc_id", "text")
         .select(col("doc_id"), col("lang"), col("n_bigrams"),
           col("milli_bits_per_bigram").as("milli"))
-        .localCheckpoint(true)
+        .pin()
       val cum = sc.where(col("n_bigrams") > 0)
         .groupBy(col("lang"), col("milli"))
         .agg(count(lit(1)).as("cnt"))

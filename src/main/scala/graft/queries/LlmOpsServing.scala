@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
 import graft.operators.{DatasetOps, Dedup, Multimodal, Similarity}
+import graft.operators.Seam.Pins
 import graft.sources.Tables
 
 /** Overlap, scoring, multimodal pipelines, BPE and audio queries (q146-q234 region) — one section of the [[LlmOps]] registry, split from the
@@ -1304,7 +1305,7 @@ private[queries] trait LlmOpsServing { this: LlmOps.type =>
           "doc_id", "text", merges)
         .select(col("doc_id"), col("word_idx"), col("tok_idx"),
           col("token_id"))
-        .localCheckpoint()
+        .pin()
       // within-doc token ordinal: a per-doc window — executor-resident
       // at any corpus size (documents are length-bounded)
       val w = org.apache.spark.sql.expressions.Window

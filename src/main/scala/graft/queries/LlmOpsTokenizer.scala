@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{ChatOps, DatasetOps}
+import graft.operators.Seam.Pins
 
 /** Tokenizer-tier closing queries (q364+ region, r16): the id-stream
   * DECODE door, sampled vocabulary learning, token-resolution length
@@ -193,7 +194,7 @@ private[queries] trait LlmOpsTokenizer { this: LlmOps.type =>
     val toks = ChatOps.sftTokenRows(okd, "doc_id", "_r", "_sp", merges)
       .select(col("doc_id"), col("seg_idx"), col("tok_idx"),
         col("token_id"), col("loss_flag"))
-      .localCheckpoint()
+      .pin()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("seg_idx"), col("tok_idx"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.TextFunctions.whitespaceTokens
 import graft.operators.ChatOps
+import graft.operators.Seam.Pins
 import graft.sources.Tables
 
 /** Instruction/chat-data preparation queries (q312+ region) — the
@@ -2062,7 +2063,7 @@ private[queries] trait LlmOpsTraining { this: LlmOps.type =>
   // surviving conv ids; shard/seq coordinates at stage 6), so the
   // oracle decides WHICH conversations crossed every boundary, not
   // just how many. Scale shape: one narrow parse materialized once
-  // (localCheckpoint), census-bounded broadcast gates, pair table
+  // (pins), census-bounded broadcast gates, pair table
   // read from its parquet materialization, one 4-shard window for
   // the pack — the q304 discipline.
 
@@ -2092,7 +2093,7 @@ private[queries] trait LlmOpsTraining { this: LlmOps.type =>
             concat(array(sysT), col("_turns")).as("turns")))
         .select(col("conv_id"), col("turns"),
           ChatOps.maskedChars(col("turns")).as("masked_chars"))
-        .localCheckpoint()
+        .pin()
       val replies = ok.select(col("conv_id"),
           explode(filter(col("turns"),
             t => t.getField("role") === "assistant")).as("t"))
@@ -2108,21 +2109,21 @@ private[queries] trait LlmOpsTraining { this: LlmOps.type =>
       // their stats so the anti-joins still broadcast
       val boilerIds = replies.join(broadcast(boiler), Seq("reply"))
         .select(col("conv_id")).distinct()
-        .localCheckpoint()
+        .pin()
       val s2 = ok.join(boilerIds, Seq("conv_id"), "left_anti")
       // keep-first: the HIGHER id of every verified near-dup pair
       // drops (q330's materialized pair table over this very corpus —
       // twins always carry the higher id, so originals survive)
       val dupIds = chatPairsMaterialized(s, d)
         .select(col("idB").as("conv_id")).distinct()
-        .localCheckpoint()
+        .pin()
       val s3 = s2.join(dupIds, Seq("conv_id"), "left_anti")
       val users = s3.select(col("conv_id"),
         ChatOps.roleConcat(col("turns"), "user").as("user_text"))
       val bench = docs(s, d).filter(col("doc_id") % 13 === 4)
         .select(col("doc_id").as("conv_id"), col("text").as("user_text"))
       val contIds = DatasetOps.contaminatedIds(users, bench,
-        "conv_id", "user_text", k = 3).localCheckpoint()
+        "conv_id", "user_text", k = 3).pin()
       val s4 = s3.join(contIds, Seq("conv_id"), "left_anti")
       val fitted = s4.withColumn("_f",
           call_function("no_inline",
@@ -2131,7 +2132,7 @@ private[queries] trait LlmOpsTraining { this: LlmOps.type =>
           length(ChatOps.renderChatML(col("_f.kept"))).cast(LongType)
             .as("kept_len"),
           ChatOps.lossMaskSpanStructs(col("_f.kept")).as("spans"))
-        .localCheckpoint()
+        .pin()
       val packed = ChatOps.packedMaskPieces(fitted, "conv_id", "kept_len",
           "spans", seqLen = 512, nShards = 4, salt = "sftr")
         .groupBy(col("shard"), col("seq"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import graft.functions.TextFunctions._
 import graft.operators.{ChatOps, DatasetOps, Dedup, EvalOps, Multimodal,
   Search, Similarity, Sketches}
+import graft.operators.Seam.{Pins, persisted}
 import graft.sources.Warc
 
 /** Streaming LLM-ingest twin: the batch corpus operators (quality
@@ -62,12 +63,6 @@ object DocIngest {
       .filter(col("n_tokens") >= minTokens)
       .withColumn("content_hash", md5(col("text")))
       .dropDuplicates("content_hash")
-
-  /** A frame with more than one consumer, persisted while `use` runs. */
-  private def persisted[T](df: DataFrame)(use: DataFrame => T): T = {
-    df.persist()
-    try use(df) finally { df.unpersist(); () }
-  }
 
   /** Append one audit row per refused record: `key`, the `reason`
     * naming the gate that refused it, then any `detail` columns. */
@@ -665,7 +660,7 @@ object DocIngest {
     * the earlier landing, a within-batch banded pass drops every
     * verified pair's greater id (keep-min — same-batch twins see
     * neither in the index), the index is re-read per batch (it
-    * grows), and survivors are localCheckpointed before the landing
+    * grows), and survivors are pinned before the landing
     * writes —
     * Spark invalidates-and-recomputes path caches on write, and a
     * merely-persisted frame would re-derive its probe against the
@@ -697,7 +692,7 @@ object DocIngest {
             .select(col("idB").as("doc_id"))
           val survivors = batch
             .join(hits.union(within).distinct(), Seq("doc_id"), "left_anti")
-            .localCheckpoint()
+            .pin()
           survivors.write.mode("append").json(outDir)
           Dedup.appendToMinhashIndex(survivors, "text", "doc_id", indexDir)
         } else
@@ -938,15 +933,14 @@ object DocIngest {
             threshold = paraphraseThreshold, numHashes = 24, bands = 12)
           .select(col("idB").as("line_md5")))
         .distinct()
-    // eager localCheckpoint, not persist: the landing APPENDS to the
+    // eager pin, not persist: the landing APPENDS to the
     // very paths this plan READS (digest + minhash index), and Spark
     // invalidates-and-recomputes path caches on write — a persisted
     // survivors would re-derive its anti-join against the post-write
     // index, see its own batch's digests, and arrive EMPTY at the
     // later writes (observed: the minhash append received 0 rows
     // while the landing write had just emitted them). Severed lineage
-    // cannot be invalidated; the checkpoint blocks are freed by the
-    // context cleaner when the batch's frame is GC'd.
+    // cannot be invalidated.
     //
     // WRITE ORDERING (ADVICE r14): the digest-index append is the
     // effective COMMIT POINT — the retry of a failed batch anti-joins
@@ -958,7 +952,7 @@ object DocIngest {
     // landed conversation whose paraphrase rows are unrecoverably
     // missing (future twins would pass the gate forever).
     def land(rows: DataFrame): Unit = {
-      val survivors = rows.localCheckpoint()
+      val survivors = rows.pin()
       survivors.select(col("conv_id"), col("line_md5"),
           col("n_turns"), col("rendered_len"), col("rendered_md5"),
           col("mask_spans"), col("masked_chars"))
@@ -1213,7 +1207,7 @@ object DocIngest {
         maxFilesPerTrigger), checkpointDir) { (batch, batchId) =>
       val state = fold(batch, Drain.prior(spark, stateDir, stateSchema,
           batchId), batchId)
-        .localCheckpoint() // two consumers: the state write + board
+        .pin() // two consumers: the state write + board
       Drain.publish(state, stateDir, batchId)
       Drain.publish(rate(state).withColumnRenamed("item", "model"),
         boardDir, batchId)

@@ -29,7 +29,7 @@ object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Re-bind a MATERIALIZED DataFrame (localCheckpoint'd — its
+  /** Re-bind a MATERIALIZED DataFrame (a pin — its
     * `toRdd` is pinned blocks, not a re-derivation) to another session
     * sharing the same SparkContext, keeping rows in InternalRow form.
     * The public alternative (`target.createDataFrame(df.rdd, schema)`)

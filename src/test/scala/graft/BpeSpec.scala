@@ -202,6 +202,22 @@ class BpeSpec extends AnyFunSuite {
     assert(re == got)
   }
 
+  test("learnBpeMergesBatched leaves as many pins behind at any merge count") {
+    import SeamSpec.pinsLeftBy
+    val docs = Seq(
+      "low low low low low",
+      "lower lower newest newest",
+      "newest newest newest newest widest widest widest")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val (m2, left2) = pinsLeftBy(Bpe.learnBpeMergesBatched(docs, "text",
+      nMerges = 2, batchSize = 1))
+    val (m8, left8) = pinsLeftBy(Bpe.learnBpeMergesBatched(docs, "text",
+      nMerges = 8, batchSize = 1))
+    assert(m2.count() == 2 && m8.count() == 8)
+    assert(left2 == left8, s"pins left: $left2 at 2 merges, $left8 at 8")
+  }
+
   test("batchSize = 1 batched learning degenerates to the classic learner") {
     val texts = Seq(
       "low low low low low",

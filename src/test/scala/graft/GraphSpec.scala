@@ -235,6 +235,24 @@ class GraphSpec extends AnyFunSuite {
     assert(scores(capped) == scores(Graph.hits(skew, "s", "t", iters = 6)))
   }
 
+  test("hits and hitsConverged leave as many pins behind at any round count") {
+    import SeamSpec.pinsLeftBy
+    val star = Seq(("h1", "a1"), ("h2", "a1"), ("h3", "a1"))
+      .toDF("s", "t")
+    val ((short, r1), left1) = pinsLeftBy(
+      Graph.hitsConverged(star, "s", "t", maxIters = 1, epsilon = 0L))
+    val ((long, r6), left6) = pinsLeftBy(
+      Graph.hitsConverged(star, "s", "t", maxIters = 6, epsilon = 0L))
+    assert(r1 == 1 && r6 > 2, s"rounds $r1 and $r6")
+    assert(left1 == left6, s"pins left: $left1 after 1 round, $left6 after $r6")
+    // the released rounds are not among what the results read
+    assert(short.count() == 4 && long.count() == 4)
+    val (fixed1, hLeft1) = pinsLeftBy(Graph.hits(star, "s", "t", iters = 1))
+    val (fixed4, hLeft4) = pinsLeftBy(Graph.hits(star, "s", "t", iters = 4))
+    assert(hLeft1 == hLeft4, s"pins left: $hLeft1 at iters 1, $hLeft4 at 4")
+    assert(fixed1.count() == 4 && fixed4.count() == 4)
+  }
+
   test("resolveRedirects: chains resolve to endpoints, every hop is a start, cycles and over-cap chains flag") {
     val edges = Seq(
       ("a", "b"),                                  // 1 hop

@@ -34,6 +34,17 @@ class KMeansSpec extends AnyFunSuite {
     assert(byBlob.flatten.toSet.size == 3, s"blobs merged: $byBlob")
   }
 
+  test("fit leaves as many pins behind at iters 2 and 6") {
+    import SeamSpec.pinsLeftBy
+    val rnd = new scala.util.Random(5)
+    val df = (0L until 60L).map(i => (i, Seq.fill(dim)(rnd.nextGaussian())))
+      .toDF("id", "v")
+    val (c2, left2) = pinsLeftBy(KMeans.fit(df, "id", "v", k = 4, iters = 2))
+    val (c6, left6) = pinsLeftBy(KMeans.fit(df, "id", "v", k = 4, iters = 6))
+    assert(left2 == left6, s"pins left: $left2 at iters 2, $left6 at 6")
+    assert(c2.count() > 0 && c6.count() > 0)
+  }
+
   private lazy val corpus: DataFrame = {
     val rnd = new scala.util.Random(7)
     (0L until 200L).map(i => (i, Seq.fill(dim)(rnd.nextGaussian())))

@@ -2449,13 +2449,24 @@ class StreamingSpec extends AnyFunSuite {
     deleteRec(root)
   }
 
-  test("the drain skeleton is the only place that spells the AvailableNow drain or the v=<batchId> state format") {
+  // one ownership table: each row's concerns are spelled in its owner
+  // file and nowhere else in src/main/scala — (test, owner, concerns)
+  private val owners = Seq(
+    ("the drain skeleton is the only place that spells the AvailableNow drain or the v=<batchId> state format",
+      "src/main/scala/graft/streaming/Drain.scala", Seq(
+        "Trigger.AvailableNow" -> """Trigger\.AvailableNow""".r,
+        "awaitTermination" -> """awaitTermination""".r,
+        "the \"v=\" version literal" -> """"[^"]*\bv=""".r)),
+    ("the seam is the only place that pins, releases or persists a frame",
+      "src/main/scala/graft/operators/Seam.scala", Seq(
+        "localCheckpoint" -> """localCheckpoint""".r,
+        "getPersistentRDDs" -> """getPersistentRDDs""".r,
+        ".persist(" -> """\.persist\(""".r,
+        ".unpersist(" -> """\.unpersist\(""".r)))
+
+  for ((title, ownerPath, concerns) <- owners) test(title) {
     import scala.jdk.CollectionConverters._
-    val drain = Paths.get("src/main/scala/graft/streaming/Drain.scala")
-    val concerns = Seq(
-      "Trigger.AvailableNow" -> """Trigger\.AvailableNow""".r,
-      "awaitTermination" -> """awaitTermination""".r,
-      "the \"v=\" version literal" -> """"[^"]*\bv=""".r)
+    val owner = Paths.get(ownerPath)
     // code only: whole-line comments and scaladoc, trailing // comments
     def code(p: Path): Seq[(String, Int)] =
       Files.readAllLines(p).asScala.toSeq.zipWithIndex
@@ -2466,16 +2477,16 @@ class StreamingSpec extends AnyFunSuite {
         }
     val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.contains(drain), s"$drain not found")
+    assert(files.contains(owner), s"$owner not found")
     for ((name, re) <- concerns) {
-      assert(code(drain).exists(l => re.findFirstIn(l._1).isDefined),
-        s"$name is missing from $drain")
+      assert(code(owner).exists(l => re.findFirstIn(l._1).isDefined),
+        s"$name is missing from $owner")
       val strays = for {
-        f <- files if f != drain
+        f <- files if f != owner
         (l, n) <- code(f) if re.findFirstIn(l).isDefined
       } yield s"$f:$n: ${l.trim}"
       assert(strays.isEmpty,
-        s"$name belongs in $drain only:\n${strays.mkString("\n")}")
+        s"$name belongs in $owner only:\n${strays.mkString("\n")}")
     }
   }
 }
