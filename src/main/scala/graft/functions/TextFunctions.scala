@@ -431,46 +431,18 @@ object TextFunctions {
     *     stop_ppm ≥ 30000`, all integer ppm arithmetic (the q101 DIV
     *     convention — oracle-replayable, no float anywhere).
     *
-    * One narrow projection (split + transform/filter lambdas), zero
-    * shuffle — the per-record enrichment shape
+    * One narrow projection, zero shuffle: the
+    * [[graft.expressions.HtmlBlocks]] kernel runs each step above once
+    * per document or block — the per-record enrichment shape
     * (ecommerce-order-processor.py:122–161 is the reference's
     * analogue) at 100 TB cost: one scan.
     *
     * @return array<struct<text, n_chars, n_words, link_ppm, stop_ppm,
     *         good>> — empty-text blocks dropped, document order kept. */
-  def htmlBlocks(html: Column): Column = {
-    val noScript = regexp_replace(html,
-      "(?is)<script[^>]*>.*?</script>", " ")
-    val noStyle = regexp_replace(noScript,
-      "(?is)<style[^>]*>.*?</style>", " ")
-    val cleaned = regexp_replace(noStyle, "(?s)<!--.*?-->", " ")
-    val stops = typedLit(contentStopwords)
-    val blocks = transform(split(cleaned, blockBoundaryRe), b => {
-      val linkChars = aggregate(
-        regexp_extract_all(b, lit("(?is)<a[^>]*>([^<]*)</a>"), lit(1)),
-        lit(0L),
-        (acc, t) => acc +
-          length(trim(regexp_replace(t, "\\s+", " "))).cast(LongType))
-      val text = trim(regexp_replace(
-        regexp_replace(b, "<[^>]*>", " "), "\\s+", " "))
-      val words = filter(split(text, " "), w => length(w) > 0)
-      val nChars = length(text).cast(LongType)
-      val nWords = size(words).cast(LongType)
-      val stopCount = size(filter(words,
-        w => array_contains(stops, lower(w)))).cast(LongType)
-      // integer ppm (the q101 DIV convention): x·1e6 div max(den, 1) —
-      // int64-safe (chars/words < 2³¹, ×1e6 < 2⁵¹)
-      val linkPpm = intDiv(linkChars * lit(1000000L),
-        greatest(nChars, lit(1L)))
-      val stopPpm = intDiv(stopCount * lit(1000000L),
-        greatest(nWords, lit(1L)))
-      struct(text.as("text"), nChars.as("n_chars"), nWords.as("n_words"),
-        linkPpm.as("link_ppm"), stopPpm.as("stop_ppm"),
-        (nWords >= 5L && linkPpm <= 333333L && stopPpm >= 30000L)
-          .as("good"))
-    })
-    filter(blocks, s => s.getField("n_chars") > 0L)
-  }
+  def htmlBlocks(html: Column): Column =
+    org.apache.spark.sql.GraftPlanBridge.columnOf(
+      graft.expressions.HtmlBlocks(
+        org.apache.spark.sql.GraftPlanBridge.exprOf(html)))
 
   /** Integer `div` over arbitrary Columns — the Column API has no
     * integral-divide operator and `expr("a div b")` cannot reference

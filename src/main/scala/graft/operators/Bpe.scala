@@ -291,7 +291,8 @@ object Bpe {
         }
         selected.foreach { case (l, r, cnt) =>
           merges += ((merges.size + 1L, l, r, cnt)) }
-        cur = cur.select(
+        // a full merge budget ends the loop: no round reads a rewrite
+        if (merges.size < nMerges) cur = cur.select(
           selected.foldLeft(col("w")) { case (c, (l, r, _)) =>
             replace(c, lit(Sep + l + Sep + Sep + r + Sep),
               lit(Sep + l + r + Sep))

@@ -17,10 +17,24 @@ object DatasetOps {
     * generator's own convention). */
   def thr(p: Double): Long = (p * 4294967296.0).toLong
 
-  /** The md5-prefix uint32 draw every deterministic-membership
-    * operator keys off (split, sample, mix, pack). ONE definition:
-    * each oracle replays this exact expression, so a drifted copy
-    * would silently break only some operators' gates. */
+  /** Bytes of input one spread partition should carry — the knob that
+    * sizes [[spreadToCores]] to the DATA instead of the session
+    * (VERDICT r16 item 7): spreading a sub-MB input the full session
+    * width pays more exchange + per-task overhead than the
+    * parallelism buys (r16 bench: the BPE dictionary encodes ran
+    * 1.3–1.6× FASTER at 8 cores than at 32, and q147 3.1× — the
+    * 32-way round-robin of a tiny scan was pure cost). 64 KB of
+    * parquet is about 90 KB of rows in the exchange (measured: sf0.03
+    * `documents.parquet`, 181,173 B, shuffles its `(doc_id, text)`
+    * rows as 258,701 B) — heavy per-row operators (q179's shingle
+    * explode) stay fully parallel at sf0.1 (~9 partitions, the
+    * measured 8-core sweet spot), while any production-sized narrow
+    * file still spreads to the session width within its first few
+    * MB. The width rounds UP, one partition per started 64 KB: that
+    * sf0.03 file takes 3 partitions of about 60 KB, not 2 of about
+    * 90 KB; an input under 64 KB still does not spread. */
+  private val spreadBytesPerPartition = 64L * 1024L
+
   /** Spread `df` across the session's shuffle parallelism when its
     * scan arrives in FEWER partitions — the single-file /
     * single-row-group input hazard: a corpus-wide tokenize/explode
@@ -30,20 +44,6 @@ object DatasetOps {
     * 100 TB corpus already scans wide, so the exchange is SKIPPED
     * there; on a narrow local input it moves raw rows once to unlock
     * the cores for the expensive map stage. */
-  /** Bytes of input one spread partition should carry — the knob that
-    * sizes [[spreadToCores]] to the DATA instead of the session
-    * (VERDICT r16 item 7): spreading a sub-MB input the full session
-    * width pays more exchange + per-task overhead than the
-    * parallelism buys (r16 bench: the BPE dictionary encodes ran
-    * 1.3–1.6× FASTER at 8 cores than at 32, and q147 3.1× — the
-    * 32-way round-robin of a tiny scan was pure cost). 64 KB of
-    * compressed scan bytes ≈ 1 MB of text per task — heavy per-row
-    * operators (q179's shingle explode) stay fully parallel at sf0.1
-    * (~9 partitions, the measured 8-core sweet spot), while any
-    * production-sized narrow file still spreads to the session width
-    * within its first few MB. */
-  private val spreadBytesPerPartition = 64L * 1024L
-
   private[graft] def spreadToCores(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // .rdd is illegal on a stream;
     // micro-batch parallelism is the source's maxFilesPerTrigger story
@@ -58,18 +58,22 @@ object DatasetOps {
     // forcing the physical plan is a leaf-plan compile, not a job
     val scanParts = df.queryExecution.toRdd.getNumPartitions
     if (scanParts >= parts) return df
-    // size-aware width (r17): one partition per
+    // size-aware width (r17): one partition per started
     // [[spreadBytesPerPartition]] of the plan's estimated bytes,
     // clamped to [scan width, session width]. Stats are conservative
     // (filters don't shrink the estimate without CBO), which errs
     // toward MORE parallelism; unknown stats (defaultSizeInBytes)
     // saturate the clamp and recover the old full-width behavior.
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val byBytes = (bytes / spreadBytesPerPartition)
-      .min(BigInt(parts)).max(BigInt(1)).toInt
+    val byBytes = ((bytes + spreadBytesPerPartition - 1) /
+      spreadBytesPerPartition).min(BigInt(parts)).max(BigInt(1)).toInt
     if (byBytes > scanParts) df.repartition(byBytes) else df
   }
 
+  /** The md5-prefix uint32 draw every deterministic-membership
+    * operator keys off (split, sample, mix, pack). ONE definition:
+    * each oracle replays this exact expression, so a drifted copy
+    * would silently break only some operators' gates. */
   private[graft] def md5Draw(salt: String, id: Column): Column =
     conv(substring(md5(concat(lit(salt + ":"),
       id.cast(StringType))), 1, 8), 16, 10).cast(LongType)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.expressions.Md5Grams
+import graft.expressions.{CdcChunks, Md5Grams}
 import graft.functions.TextFunctions._
 import graft.operators.Seam.Pins
 
@@ -800,78 +800,22 @@ object Dedup {
     * at 16.5 s for sf0.1). The oracle replays each window's
     * polynomial sum directly (`Σ c_j·B^{w−1−j} mod M` — same residue
     * as the incremental form by construction), so boundaries still
-    * gate bit-exactly. Char codes come from per-char `ascii()` —
-    * byte-exact cross-engine for ASCII corpora (the [[Bpe]] contract;
-    * non-ASCII text still chunks deterministically, only the oracle's
-    * code-point view could differ). Texts shorter
-    * than `window` form one chunk; empty/null texts yield an empty
-    * array (null-degrade). Chunks concatenate back to the text by
+    * gate bit-exactly. Char codes are code points, the value `ascii()`
+    * gives — byte-exact cross-engine for ASCII corpora (the [[Bpe]]
+    * contract; non-ASCII text still chunks deterministically, only the
+    * oracle's code-point view could differ). Texts shorter than
+    * `window` form one chunk; empty/null texts yield an empty array
+    * (null-degrade). Chunks concatenate back to the text by
     * construction (boundaries partition [0, len)).
     *
-    * SCALE CONTRACT (the [[graft.functions.TextFunctions.tokenChunks]]
-    * discipline): `codes` and `ends` MUST be projected attributes at
-    * their consumption sites — Catalyst neither CSEs inside lambdas
-    * nor across references, so an inlined `codes` subtree would be
-    * re-evaluated once PER FOLD STEP (O(len²) per doc — measured as a
-    * multi-minute hang at sf0.1 before this split). [[cdcChunks]] is
-    * the one-Column convenience composition for specs/small frames;
-    * corpus-scale callers stage three projections:
-    * {{{
-    *   .withColumn("codes", Dedup.cdcCodes(col("text")))
-    *   .withColumn("ends", Dedup.cdcBoundaries(col("codes"), length(col("text"))))
-    *   .select(explode(Dedup.cdcChunksAt(col("text"), col("ends"))))
-    * }}} */
+    * One walk per document: the [[graft.expressions.CdcChunks]]
+    * kernel hashes, cuts and slices the UTF-8 bytes in a single pass,
+    * so the result can be exploded straight from the text column. The
+    * analyzer refuses `window` < 2 and `avgMask` < 1. */
   def cdcChunks(text: Column, window: Int = 16,
                 avgMask: Int = 63): Column =
-    cdcChunksAt(text, cdcBoundaries(cdcCodes(text), length(text),
-      window, avgMask))
-
-  /** Per-char code array for [[cdcBoundaries]] — project it. */
-  def cdcCodes(text: Column): Column =
-    transform(split(text, ""), c => ascii(c).cast(LongType))
-
-  /** Cut positions (chunk END offsets, ascending, final `len`
-    * included) from a PROJECTED code array: one O(len) incremental
-    * fold per doc maintaining (rolling hash, hits). */
-  def cdcBoundaries(codes: Column, len: Column, window: Int = 16,
-                    avgMask: Int = 63): Column = {
-    require(window >= 2, s"window must be >= 2, got $window")
-    require(avgMask >= 1, s"avgMask must be >= 1, got $avgMask")
-    val M = 1000000007L
-    val B = 131L
-    val bw = BigInt(B).modPow(window, BigInt(M)).toLong
-    // h_i covers the window ending at i once i ≥ window; cuts are the
-    // zero residue class mod avgMask+1 — appends stay ascending, so
-    // the result needs no sort
-    val hits = when(len >= window,
-      aggregate(
-        sequence(lit(1), len),
-        struct(lit(0L).as("h"),
-          array().cast("array<int>").as("hits")),
-        (acc, i) => {
-          val cIn = element_at(codes, i)
-          val cOut = when(i > window, element_at(codes, i - window))
-            .otherwise(lit(0L))
-          val h2 = pmod(acc.getField("h") * B + cIn - cOut * bw, lit(M))
-          struct(h2.as("h"),
-            when(i >= window && h2 % (avgMask + 1) === 0,
-              concat(acc.getField("hits"), array(i)))
-              .otherwise(acc.getField("hits")).as("hits"))
-        },
-        acc => acc.getField("hits")))
-      .otherwise(array().cast("array<int>"))
-    array_distinct(concat(hits,
-      when(len > 0, array(len)).otherwise(array().cast("array<int>"))))
-  }
-
-  /** Chunks from a PROJECTED `ends` array: starts = 0 :: ends-without-
-    * last; slicing the 0-prefixed bounds to ends' size pairs them off
-    * (both empty for an empty text — zip_with then yields the empty
-    * array, no special case). */
-  def cdcChunksAt(text: Column, ends: Column): Column = {
-    val starts = slice(concat(array(lit(0)), ends), lit(1), size(ends))
-    zip_with(starts, ends, (st, en) => text.substr(st + 1, en - st))
-  }
+    GraftPlanBridge.columnOf(
+      CdcChunks(GraftPlanBridge.exprOf(text), window, avgMask))
 
   /** Duplicate-SPAN mining — exact-substring dedup at sub-document
     * granularity (the Lee et al. 2022 "Deduplicating Training Data

@@ -69,8 +69,12 @@ object Graph {
     */
   private val feedsMemo = new graft.sources.JvmMemo[String]
 
-  private final case class Feeds(e: DataFrame, flows: DataFrame,
-                                 nodes: DataFrame)
+  /** A loop's inputs. `flows` is built when first read: only PageRank
+    * reads it, so HITS never pins it on the per-call path. */
+  private final class Feeds(val e: DataFrame, flowsOf: => DataFrame,
+                            val nodes: DataFrame) {
+    lazy val flows: DataFrame = flowsOf
+  }
 
   /** The leaf scans' root paths, or None when any leaf is not a
     * file-source relation (the memoization gate). The paths are a
@@ -106,12 +110,12 @@ object Graph {
       // string is not a sound memo key — see the gate note above
       val e0 = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
       val e1 = (if (assumeDistinct) e0 else e0.distinct()).pin()
-      val deg = e1.groupBy(col("_src")).agg(count(lit(1)).as("_d"))
-      val flows = e1.join(deg, Seq("_src")).pin()
       val nodes = e1.select(col("_src").as("node"))
         .union(e1.select(col("_dst").as("node"))).distinct()
         .pin()
-      return Feeds(e1, flows, nodes)
+      return new Feeds(e1, e1.join(
+        e1.groupBy(col("_src")).agg(count(lit(1)).as("_d")), Seq("_src"))
+        .pin(), nodes)
     }
     val key = edges.queryExecution.analyzed.canonicalized.toString +
       paths.get.mkString("|") + s" $srcCol $dstCol $assumeDistinct"
@@ -134,7 +138,7 @@ object Graph {
         .distinct().write.mode("overwrite").parquet(s"$out/nodes")
       out
     }
-    Feeds(spark.read.parquet(s"$dir/e"),
+    new Feeds(spark.read.parquet(s"$dir/e"),
       spark.read.parquet(s"$dir/flows"),
       spark.read.parquet(s"$dir/nodes"))
   }
@@ -322,8 +326,8 @@ object Graph {
       s"scale must be in [1, 1e9] (keeps n·scale sums int64-safe), got $scale")
     // e and the node spine from the per-JVM feed materialization
     // (see [[feedsMemo]]) — parquet-backed instead of per-call pins
-    val Feeds(e, _, nodes) = loopFeeds(edges, srcCol, dstCol,
-      assumeDistinct)
+    val feeds = loopFeeds(edges, srcCol, dstCol, assumeDistinct)
+    val (e, nodes) = (feeds.e, feeds.nodes)
     // the scores compose lazily over their raw pins, and the returned
     // pair reads the last two; an older raw has fed its successor's pin
     var raws = Vector.empty[DataFrame]
@@ -437,8 +441,8 @@ object Graph {
     // materialization (see [[feedsMemo]]) — parquet-backed, so every
     // round's plan bottoms out in a scan and lineage stays linear
     // without per-call pins of the edge set
-    val Feeds(_, flows, nodes) = loopFeeds(edges, srcCol, dstCol,
-      assumeDistinct)
+    val feeds = loopFeeds(edges, srcCol, dstCol, assumeDistinct)
+    val (flows, nodes) = (feeds.flows, feeds.nodes)
     val nn = nodes.agg(count(lit(1)).as("_n"))
     // nodesBase differs per variant (uniform vs seeded teleport), so
     // it stays a per-call pin — node-sized, cheap
@@ -489,8 +493,8 @@ object Graph {
     require(epsilon >= 0L, s"epsilon must be >= 0, got $epsilon")
     require(scale >= 1L && scale <= 1000000000000000L,
       s"scale must be in [1, 1e15] (keeps d*mass int64-safe), got $scale")
-    val Feeds(_, flows, nodes) = loopFeeds(edges, srcCol, dstCol,
-      assumeDistinct)
+    val feeds = loopFeeds(edges, srcCol, dstCol, assumeDistinct)
+    val (flows, nodes) = (feeds.flows, feeds.nodes)
     val nodesBase =
       uniformBase(scale)(nodes, nodes.agg(count(lit(1)).as("_n"))).pin()
     var ranks = nodesBase.select(col("node"), col("_base").as("score"))
@@ -535,8 +539,8 @@ object Graph {
     require(epsilon >= 0L, s"epsilon must be >= 0, got $epsilon")
     require(scale >= 1L && scale <= 1000000000L,
       s"scale must be in [1, 1e9] (keeps n*scale sums int64-safe), got $scale")
-    val Feeds(e, _, nodes) = loopFeeds(edges, srcCol, dstCol,
-      assumeDistinct)
+    val feeds = loopFeeds(edges, srcCol, dstCol, assumeDistinct)
+    val (e, nodes) = (feeds.e, feeds.nodes)
     // each round's scores are pinned, so their raw pins are free as
     // soon as they land, and a superseded round once the residual has
     // read it

@@ -1126,33 +1126,25 @@ private[queries] trait LlmOpsDedupAnn { this: LlmOps.type =>
 
   // ---- q240: content-defined chunk dedup census -----------------------
   // Block-level duplication measured with FastCDC-shaped chunking
-  // (Dedup.cdcChunks): boundaries depend only on local content (md5
-  // rolling window, zero residue mod 64), so shared boilerplate lands
-  // in identical chunks at ANY byte offset — the seam line dedup
-  // (q97) misses when templating shifts text mid-line. Per source:
-  // chunk counts, distinct-chunk counts, and the dedupable-bytes
-  // ratio a storage/cleaning planner acts on. The oracle rebuilds
-  // every boundary (same md5-hex8 residue per window position), every
-  // chunk substring, and both censuses.
+  // (Dedup.cdcChunks): boundaries depend only on local content (a
+  // rolling polynomial hash, zero residue mod 64), so shared
+  // boilerplate lands in identical chunks at ANY byte offset — the
+  // seam line dedup (q97) misses when templating shifts text
+  // mid-line. Per source: chunk counts, distinct-chunk counts, and
+  // the dedupable-bytes ratio a storage/cleaning planner acts on. The
+  // oracle rebuilds every boundary (the same residue per window
+  // position), every chunk substring, and both censuses.
 
   private[queries] val q240: GraftQuery = GraftQuery(
     "q240_cdc_chunk_census",
     (s, d) => {
-      // three staged projections (codes and ends land as attributes)
-      // — inlining either into the next lambda re-evaluates it per
-      // element (no CSE inside lambdas): O(len²) per doc, measured as
-      // a multi-minute hang at sf0.1
-      // the scan is spread first (r17): the rolling-hash code/boundary
-      // build is the heaviest per-row compute in the battery's serial
-      // tier and ran entirely inside the one-task narrow scan (r16/r17
-      // bench: 8 tasks over 8 serial stages, cpu_frac 0.99)
+      // the scan is spread first (r17): the chunker is the heaviest
+      // per-row compute in the battery's serial tier and ran entirely
+      // inside the one-task narrow scan (r16/r17 bench: 8 tasks over 8
+      // serial stages, cpu_frac 0.99)
       val ch = graft.operators.DatasetOps.spreadToCores(docs(s, d))
-        .select(col("source"), col("text"),
-          Dedup.cdcCodes(col("text")).as("codes"))
-        .select(col("source"), col("text"),
-          Dedup.cdcBoundaries(col("codes"), length(col("text"))).as("ends"))
         .select(col("source"),
-          explode(Dedup.cdcChunksAt(col("text"), col("ends"))).as("chunk"))
+          explode(Dedup.cdcChunks(col("text"))).as("chunk"))
       // ONE two-level aggregation instead of separate total and
       // distinct censuses (r17): the old tot/dst pair re-derived the
       // whole chunk pipeline per consumer (4 parquet scans in the

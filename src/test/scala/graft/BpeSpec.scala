@@ -218,6 +218,39 @@ class BpeSpec extends AnyFunSuite {
     assert(left2 == left8, s"pins left: $left2 at 2 merges, $left8 at 8")
   }
 
+  test("learnBpeMergesBatched: the round that fills the merge budget fires no job after its census") {
+    val docs = Seq(
+      "low low low low low",
+      "lower lower newest newest",
+      "newest newest newest newest widest widest widest")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    // each job by its result stage's call site, in submission order
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    org.apache.spark.ListenerDrain(sc) // earlier suites' events first
+    sc.addSparkListener(listener)
+    val merges = try {
+      val m = Bpe.learnBpeMergesBatched(docs, "text", nMerges = 2,
+        batchSize = 1)
+      org.apache.spark.ListenerDrain(sc)
+      m
+    } finally sc.removeSparkListener(listener)
+    val names = jobs.toArray(Array.empty[String]).toSeq
+    // the framed census's pin, round 1's census collect, the rewrite
+    // pin round 2 reads, round 2's census collect — and no rewrite
+    // pin after it, since no round reads one
+    val pins = names.count(_.startsWith("localCheckpoint at Seam.scala"))
+    assert(pins == 2 && !names.last.startsWith("localCheckpoint"),
+      s"jobs: ${names.mkString("; ")}")
+    assert(merges.count() == 2)
+  }
+
   test("batchSize = 1 batched learning degenerates to the classic learner") {
     val texts = Seq(
       "low low low low low",

@@ -840,4 +840,35 @@ class DedupSpec extends AnyFunSuite {
       case (key, None) => conf.unset(key)
     }
   }
+
+  test("cdcChunks slices only the string's own bytes when its last character is truncated") {
+    def hexOf(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02X").mkString
+    val body = (0 until 12).map(i => s"chunk body number $i; ").mkString
+    // a 3-byte lead with one of its two continuation bytes: the lead
+    // claims a byte past the string's end, which a `substr` slice
+    // copies from whatever follows in memory
+    val truncated = body.getBytes("UTF-8") ++ Array(0xE4, 0xB8).map(_.toByte)
+    val d = Seq(1L -> hexOf(truncated),
+        2L -> hexOf((body + "\u4e2d").getBytes("UTF-8")))
+      .toDF("id", "hx")
+      .select($"id", unhex($"hx").cast("string").as("t"))
+      .localCheckpoint()
+    SparkTestSession.underBothEvaluators { _ =>
+      val got = d.select($"id",
+          transform(Dedup.cdcChunks($"t"), c => hex(c.cast("binary"))))
+        .as[(Long, Seq[String])].collect().toMap
+      assert(got(1L).size > 3, got(1L).toString)
+      // the chunks hold exactly the string's bytes, the truncated
+      // tail included, and nothing past it
+      assert(got(1L).mkString == hexOf(truncated))
+      assert(got(1L).last.endsWith("E4B8"))
+      // the tail's code (U+FFFD) enters only the last hash, where the
+      // text ends anyway: every earlier chunk is the valid twin's
+      assert(got(1L).init == got(2L).init)
+    }
+    val refused = intercept[org.apache.spark.sql.AnalysisException](
+      d.select(Dedup.cdcChunks($"t", window = 1)))
+    assert(refused.getMessage.contains("cdc_chunks needs window >= 2"),
+      refused.getMessage)
+  }
 }

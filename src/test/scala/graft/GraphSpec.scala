@@ -253,6 +253,17 @@ class GraphSpec extends AnyFunSuite {
     assert(fixed1.count() == 4 && fixed4.count() == 4)
   }
 
+  test("hits over an in-memory edge frame pins two feeds, not the flows only PageRank reads") {
+    import SeamSpec.pinsLeftBy
+    val star = Seq(("h1", "a1"), ("h2", "a1"), ("h3", "a1"))
+      .toDF("s", "t")
+    val (scores, left) = pinsLeftBy(Graph.hits(star, "s", "t", iters = 1))
+    // the edge set and the node spine, plus the two raw rounds the
+    // result reads
+    assert(left == 2 + 2, s"pins left: $left")
+    assert(scores.count() == 4)
+  }
+
   test("resolveRedirects: chains resolve to endpoints, every hop is a start, cycles and over-cap chains flag") {
     val edges = Seq(
       ("a", "b"),                                  // 1 hop
